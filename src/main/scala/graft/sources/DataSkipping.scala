@@ -41,9 +41,11 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * never see, reclaimed by the next vacuum. Appends land INSIDE the
   * current generation (the manifest gains rows, the generation does
   * not change — generations are compaction/migration events, exactly
-  * like Delta checkpoints vs commits). Pre-generation FLAT manifests
-  * (parts directly under `_graft_stats`) are still read and appended
-  * compatibly; compaction migrates them to `v0`.
+  * like Delta checkpoints vs commits). A committed generation is the
+  * only layout read or written: older layouts (flat manifests
+  * directly under `_graft_stats`, torn pre-generation swaps,
+  * manifests without the manifest-schema sidecar or null counts)
+  * are refused by name, never migrated ([[refuseLegacyLayout]]).
   *
   * RETENTION (the Delta-VACUUM analog): maintenance never deletes a
   * file a concurrent reader could still be scanning. Compaction
@@ -74,8 +76,8 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *
   * Predicate support (the skippable subset): =, <, <=, >, >=, IN,
   * ASCII startsWith, and — on manifests carrying per-file null
-  * counts (the "nulls" feature, Delta's nullCount analog; written by
-  * default, legacy tables upgraded by compactTable) — IS NULL /
+  * counts (the "nulls" feature, Delta's nullCount analog; every
+  * manifest carries it) — IS NULL /
   * IS NOT NULL, composed with AND/OR. Anything else is handled
   * CONSERVATIVELY — an unsupported conjunct prunes nothing, an
   * unsupported disjunct disables pruning of its OR — so correctness
@@ -324,8 +326,8 @@ object DataSkipping extends org.apache.spark.internal.Logging
   private[sources] val SwapPrefix = ".stats-swap-"
   private[sources] val GenRe = "^v(\\d+)$".r
 
-  /** The generation version a manifest dir path names (None for a
-    * legacy flat manifest dir).
+  /** The generation version a manifest dir path names (None for the
+    * bare stats dir of a path with no committed generation).
     */
   private[sources] def obsVersionOf(dir: String): Option[Long] =
     GenRe.findFirstMatchIn(new Path(dir).getName).map(_.group(1).toLong)

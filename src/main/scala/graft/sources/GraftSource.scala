@@ -358,7 +358,6 @@ private[sources] class GraftRelation(spark: SparkSession,
     */
   override lazy val sizeInBytes: Long =
     try DataSkipping.tableSizeInBytes(spark, path, version)
-      .getOrElse(super.sizeInBytes)
     catch {
       // never fail PLANNING over statistics — fall back to the
       // conservative default (no auto-broadcast, correct plans)

@@ -859,23 +859,10 @@ case class ShowIndexesGraftCommand(path: String)
     AttributeReference("residual", org.apache.spark.sql.types.BooleanType,
       nullable = false)())
 
-  override def run(spark: SparkSession): Seq[Row] = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // resolution order mirrors VectorIndex.meta: the generation
-    // sidecar is where build() has put the model since it became
-    // version-pinned; the root-level file only serves legacy indexes
-    val hasSidecar = DataSkipping.readSidecarIn(fs,
-      DataSkipping.manifestDirOf(fs, path), DataSkipping.VIndexFile).nonEmpty
-    if (!hasSidecar &&
-        !fs.exists(new org.apache.hadoop.fs.Path(path, VectorIndex.MetaFile)))
-      Seq.empty
-    else {
-      val mt = VectorIndex.meta(spark, path)
-      Seq(Row("ivf-pq", mt.idCol, mt.vecCol, mt.dim.toLong,
+  override def run(spark: SparkSession): Seq[Row] =
+    VectorIndex.metaOption(spark, path).toSeq.map(mt =>
+      Row("ivf-pq", mt.idCol, mt.vecCol, mt.dim.toLong,
         mt.nCenters.toLong, mt.m.toLong, mt.ksub.toLong, mt.residual))
-    }
-  }
 }
 
 /** `DESCRIBE HISTORY '<path>'` → [[DataSkipping.describeHistory]]. */

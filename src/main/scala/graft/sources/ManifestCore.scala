@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, MapType, StructField, StructType}
 
-/** Manifest GENERATION RESOLUTION and reading: versioned `v<N>` dirs, the `_COMMIT` visibility point, legacy flat manifests, the pinned manifest read, and the optimistic-retry loop every generation-building entry point wraps itself in.
+/** Manifest GENERATION RESOLUTION and reading: versioned `v<N>` dirs, the `_COMMIT` visibility point, the refusal of layouts no code path writes any more, the pinned manifest read, and the optimistic-retry loop every generation-building entry point wraps itself in.
   *
   * One slice of the storage kernel, mixed into [[DataSkipping]] -
   * the object is the single public surface; the trait split is
@@ -44,10 +44,12 @@ private[sources] trait ManifestCore { this: DataSkipping.type =>
       .lastOption.map { case (v, f) => v -> f.getPath }
 
   /** The directory the CURRENT manifest lives in: the highest
-    * committed generation for a versioned table, the flat stats dir
-    * for a legacy one (completing any torn pre-generation swap
-    * first). Everything the planner needs — manifest parts, sidecars,
-    * commit markers — is under this one dir.
+    * committed generation. Everything the planner needs — manifest
+    * parts, sidecars, commit markers — is under this one dir. With no
+    * committed generation the path is not a table yet and the bare
+    * stats dir comes back (its manifest read fails, bootstrap may
+    * create v0) — unless an older layout lives there, which is
+    * refused ([[refuseLegacyLayout]]).
     */
   def manifestDir(spark: SparkSession, path: String): String = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -59,18 +61,84 @@ private[sources] trait ManifestCore { this: DataSkipping.type =>
     currentGen(fs, statsDir) match {
       case Some((_, gen)) => gen.toString
       case None =>
-        repairStatsSwap(fs, path)
-        // the repaired swap may itself carry generations (a versioned
-        // stats dir torn loose by pre-generation-era maintenance)
-        currentGen(fs, statsDir).map(_._2.toString).getOrElse(statsDir.toString)
+        if (fs.exists(statsDir) && fs.listStatus(statsDir).exists(f =>
+            f.isFile && f.getPath.getName.endsWith(".parquet")))
+          refuseLegacyLayout(path, "flat manifest (manifest parts directly " +
+            s"under $StatsDir, no committed generation)")
+        val root = new Path(path)
+        if (fs.exists(root) && fs.listStatus(root).exists(f =>
+            f.isDirectory && f.getPath.getName.startsWith(SwapPrefix)))
+          refuseLegacyLayout(path, s"torn stats swap ($SwapPrefix* dir, no " +
+            "committed generation)")
+        statsDir.toString
     }
   }
+
+  /** The one refusal for a table layout no code path writes any more
+    * (pre-generation flat manifests, torn pre-generation swaps,
+    * manifests without the manifest-schema sidecar or null counts,
+    * empty `_COMMIT`s, generations without an operation record,
+    * root-level vector-index models). Like Delta's reader/writer
+    * protocol it refuses instead of carrying a read branch for the
+    * old layout, and it names the layout. Every caller throws BEFORE
+    * its first write, so nothing on disk changes.
+    */
+  private[sources] def refuseLegacyLayout(path: String, layout: String): Nothing =
+    throw new IllegalStateException(
+      s"$path holds a legacy $layout layout that this build neither reads " +
+        "nor writes (graft tables are committed v<N> generations only) — " +
+        "refusing it; nothing on disk was changed. Rewrite the table's " +
+        "rows with writeWithStats using the build that wrote it.")
+
+  /** The reader/writer protocol gate every manifest consumer passes
+    * (reads, metadata aggregates, appends, compaction, DML, vacuum):
+    * refuses feature flags this build does not implement (see
+    * [[unknownFeatures]]) and a generation from before the
+    * manifest-schema sidecar and per-file null counts. Returns the
+    * persisted manifest schema — no extra filesystem call on a
+    * healthy table (both sidecars are read anyway).
+    */
+  private[sources] def requireManifestProtocol(
+      fs: org.apache.hadoop.fs.FileSystem, dir: String, feats: Set[String],
+      manifestSchemaJson: Option[String]): StructType = {
+    val unknown = unknownFeatures(feats)
+    require(unknown.isEmpty,
+      s"manifest at $dir requires table feature(s) " +
+        s"[${unknown.toSeq.sorted.mkString(", ")}] this build does not " +
+        "implement — refusing it rather than silently ignoring them " +
+        "(a newer writer's stats encoding or visibility rule could make an " +
+        "ignorant read wrong, not just slow); upgrade the library")
+    manifestSchemaJson match {
+      case Some(json) if obsVersionOf(dir).nonEmpty =>
+        if (!feats("nulls")) refuseLegacyLayout(dir,
+          "manifest without per-file null counts (no nulls feature)")
+        DataType.fromJson(json).asInstanceOf[StructType]
+      case _ => missingSidecar(fs, dir, ManifestSchemaFile)
+    }
+  }
+
+  /** A sidecar every committed generation carries. */
+  private[sources] def requiredSidecarIn(fs: org.apache.hadoop.fs.FileSystem,
+      dir: String, name: String): String =
+    readSidecarIn(fs, dir, name).getOrElse(missingSidecar(fs, dir, name))
+
+  /** Missing from a committed generation, a required sidecar marks an
+    * older layout; anywhere else (the bare stats dir of a path with no
+    * table yet, a version that is not retained) there is simply no
+    * committed generation to read.
+    */
+  private def missingSidecar(fs: org.apache.hadoop.fs.FileSystem,
+      dir: String, name: String): Nothing =
+    if (obsVersionOf(dir).nonEmpty && isCommittedGen(fs, new Path(dir)))
+      refuseLegacyLayout(dir, s"generation without a $name sidecar")
+    else throw new IllegalArgumentException(
+      s"$dir is not a committed graft generation (no table there yet, or " +
+        "a version that is not retained)")
 
   /** Manifest rows of the table's current generation, read through
     * the persisted manifest schema (no footer reads; post-evolution
     * parts wider than older ones surface nulls for the added
-    * columns). Falls back to a merged-footer read for manifests
-    * written before the schema sidecar existed.
+    * columns).
     */
   def readManifest(spark: SparkSession, path: String): DataFrame =
     readManifestIn(spark, manifestDir(spark, path))
@@ -81,8 +149,8 @@ private[sources] trait ManifestCore { this: DataSkipping.type =>
     * feature is not merely slow: a different stats encoding or
     * row-visibility rule would make an ignorant read WRONG. So every
     * manifest consumer (reads, metadata aggregates, appends,
-    * compaction, DML, vacuum — they all plan through
-    * [[readManifestIn]]) REFUSES unknown features loudly — the Delta
+    * compaction, DML, vacuum — they all pass
+    * [[requireManifestProtocol]]) REFUSES unknown features loudly — the Delta
     * reader/writer-protocol rule, feature-name-granular like Delta's
     * table features. `describeHistory`/`tableVersions` stay readable
     * (inspection needs no feature semantics).
@@ -91,6 +159,14 @@ private[sources] trait ManifestCore { this: DataSkipping.type =>
     feats.filterNot(f =>
       f == "nulls" || f == CdfFeature || f == PartitionedFeature ||
         f.startsWith("bloom:"))
+
+  /** The persisted manifest schema of a generation whose manifest the
+    * caller already read through [[requireManifestProtocol]].
+    */
+  private[sources] def manifestSchemaIn(fs: org.apache.hadoop.fs.FileSystem,
+      dir: String): StructType =
+    DataType.fromJson(requiredSidecarIn(fs, dir, ManifestSchemaFile))
+      .asInstanceOf[StructType]
 
   private[sources] def readManifestIn(spark: SparkSession, dir: String): DataFrame =
     manifestScan(spark, dir, None, tagged = false)
@@ -284,30 +360,25 @@ private[sources] trait ManifestCore { this: DataSkipping.type =>
   /** The pinned manifest as DRIVER-SIDE (row, source part name) pairs
     * with their schema, when the read is cache-servable — the zero-job
     * input to the driver-side generation carry ([[rewriteFiles]]).
-    * None → the caller keeps the DataFrame route (legacy manifest, or
-    * past the local budget).
+    * None → the caller keeps the DataFrame route (past the local
+    * budget).
     */
   private[sources] def localManifestRowsPinned(spark: SparkSession,
       dir: String, names: Set[String])
       : Option[(StructType, Seq[(Row, String)])] = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val unknown = unknownFeatures(manifestFeatures(fs, dir))
-    require(unknown.isEmpty,
-      s"manifest at $dir requires table feature(s) " +
-        s"[${unknown.toSeq.sorted.mkString(", ")}] this build does not implement")
-    readSidecar(spark, dir, ManifestSchemaFile).flatMap { json =>
-      val schema = DataType.fromJson(json).asInstanceOf[StructType]
-      val p = new Path(dir)
-      val listed =
-        if (fs.exists(p)) fs.listStatus(p).toSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        else Seq.empty
-      val wanted = listed.filter(f => names(f.getPath.getName))
-        .sortBy(_.getPath.getName)
-      if (wanted.size != names.size) None
-      else localManifestParts(spark, dir, wanted, schema).map { parts =>
-        (schema, parts.flatMap(part => part.rows.map(_ -> part.name)))
-      }
+    val schema = requireManifestProtocol(fs, dir, manifestFeatures(fs, dir),
+      readSidecarIn(fs, dir, ManifestSchemaFile))
+    val p = new Path(dir)
+    val listed =
+      if (fs.exists(p)) fs.listStatus(p).toSeq
+        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      else Seq.empty
+    val wanted = listed.filter(f => names(f.getPath.getName))
+      .sortBy(_.getPath.getName)
+    if (wanted.size != names.size) None
+    else localManifestParts(spark, dir, wanted, schema).map { parts =>
+      (schema, parts.flatMap(part => part.rows.map(_ -> part.name)))
     }
   }
 
@@ -357,65 +428,48 @@ private[sources] trait ManifestCore { this: DataSkipping.type =>
   private[sources] def manifestScan(spark: SparkSession, dir: String,
       pin: Option[Set[String]], tagged: Boolean): DataFrame = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val unknown = unknownFeatures(manifestFeatures(fs, dir))
-    require(unknown.isEmpty,
-      s"manifest at $dir requires table feature(s) " +
-        s"[${unknown.toSeq.sorted.mkString(", ")}] this build does not " +
-        "implement — refusing to read rather than silently ignoring them " +
-        "(a newer writer's stats encoding or visibility rule could make an " +
-        "ignorant read wrong, not just slow); upgrade the library")
-    def distributed(schema: Option[StructType]): DataFrame = {
-      val base = schema match {
-        case Some(s) => pin match {
-          case Some(names) => spark.read.schema(s)
-            .parquet(names.toSeq.sorted.map(n => s"$dir/$n"): _*)
-          case None => spark.read.schema(s).parquet(dir)
-        }
-        case None => pin match {
-          case Some(names) => spark.read.option("mergeSchema", "true")
-            .parquet(names.toSeq.sorted.map(n => s"$dir/$n"): _*)
-          case None => spark.read.option("mergeSchema", "true").parquet(dir)
-        }
+    val schema = requireManifestProtocol(fs, dir, manifestFeatures(fs, dir),
+      readSidecarIn(fs, dir, ManifestSchemaFile))
+    def distributed(): DataFrame = {
+      val base = pin match {
+        case Some(names) => spark.read.schema(schema)
+          .parquet(names.toSeq.sorted.map(n => s"$dir/$n"): _*)
+        case None => spark.read.schema(schema).parquet(dir)
       }
       if (tagged) base.select(col("*"), col("_metadata.file_path").as("__mfile"))
       else base
     }
-    readSidecar(spark, dir, ManifestSchemaFile) match {
-      case None => distributed(None) // legacy manifest: merged footers
-      case Some(json) =>
-        val schema = DataType.fromJson(json).asInstanceOf[StructType]
-        val p = new Path(dir)
-        val listed =
-          if (fs.exists(p)) fs.listStatus(p).toSeq
-            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          else Seq.empty
-        val wanted = pin match {
-          case Some(names) =>
-            val got = listed.filter(f => names(f.getPath.getName))
-            // a pinned name missing from the dir would fail the
-            // distributed read loudly — keep that behavior
-            if (got.size != names.size) return distributed(Some(schema))
-            got.sortBy(_.getPath.getName)
-          case None => listed.sortBy(_.getPath.getName)
+    val p = new Path(dir)
+    val listed =
+      if (fs.exists(p)) fs.listStatus(p).toSeq
+        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      else Seq.empty
+    val wanted = pin match {
+      case Some(names) =>
+        val got = listed.filter(f => names(f.getPath.getName))
+        // a pinned name missing from the dir would fail the
+        // distributed read loudly — keep that behavior
+        if (got.size != names.size) return distributed()
+        got.sortBy(_.getPath.getName)
+      case None => listed.sortBy(_.getPath.getName)
+    }
+    localManifestParts(spark, dir, wanted, schema) match {
+      case None => distributed()
+      case Some(parts) =>
+        val outSchema =
+          if (tagged) StructType(schema.fields :+
+            StructField("__mfile", org.apache.spark.sql.types.StringType,
+              nullable = false))
+          else schema
+        val rows: Seq[Row] = parts.flatMap { part =>
+          if (tagged) part.rows.map(r =>
+            Row.fromSeq(r.toSeq :+ s"$dir/${part.name}"))
+          else part.rows
         }
-        localManifestParts(spark, dir, wanted, schema) match {
-          case None => distributed(Some(schema))
-          case Some(parts) =>
-            val outSchema =
-              if (tagged) StructType(schema.fields :+
-                StructField("__mfile", org.apache.spark.sql.types.StringType,
-                  nullable = false))
-              else schema
-            val rows: Seq[Row] = parts.flatMap { part =>
-              if (tagged) part.rows.map(r =>
-                Row.fromSeq(r.toSeq :+ s"$dir/${part.name}"))
-              else part.rows
-            }
-            spark.createDataFrame(
-              new java.util.ArrayList[Row](
-                scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-              outSchema)
-        }
+        spark.createDataFrame(
+          new java.util.ArrayList[Row](
+            scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
+          outSchema)
     }
   }
 
@@ -475,28 +529,5 @@ private[sources] trait ManifestCore { this: DataSkipping.type =>
       names: Set[String]): DataFrame =
     if (names.isEmpty) readManifestIn(spark, dir).limit(0)
     else manifestScan(spark, dir, Some(names), tagged = false)
-
-  /** Complete a torn LEGACY manifest swap: the pre-generation
-    * compactTable swapped via delete + rename — a crash between the
-    * two leaves the table without a flat manifest but WITH the
-    * fully-built swap dir, which this finishes. Generation commits
-    * made the window structurally impossible; this survives only so
-    * tables written by the old layout still open. One `exists` check
-    * when the table is healthy.
-    */
-  private[sources] def repairStatsSwap(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val statsDir = new Path(s"$path/$StatsDir")
-    if (fs.exists(statsDir) || !fs.exists(new Path(path))) return
-    val swaps = fs.listStatus(new Path(path))
-      .filter(f => f.isDirectory && f.getPath.getName.startsWith(SwapPrefix))
-    if (swaps.nonEmpty) {
-      // single-writer maintenance ⇒ at most one swap is mid-flight;
-      // take the newest (older ones are pre-delete debris)
-      val chosen = swaps.maxBy(_.getModificationTime)
-      require(fs.rename(chosen.getPath, statsDir),
-        s"completing torn stats swap ${chosen.getPath} failed")
-    }
-  }
 
 }

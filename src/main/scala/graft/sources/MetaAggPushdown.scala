@@ -89,9 +89,6 @@ class GraftMetaAggStrategy(spark: SparkSession) extends SparkStrategy {
         if cond.forall(_.references.forall(r =>
           partCols.exists(_.equalsIgnoreCase(r.name))))
         if groupTargetsTracked(outSpecs, rel)
-        // a legacy pre-n_rows manifest can't answer counts — the
-        // grouped exec has no scan fallback, so don't claim the plan
-        if DataSkipping.manifestHasRowCounts(spark, rel.path)
         // the QUERIED keys, deduped case-insensitively — the exec
         // groups by exactly these. Grouping by all partition columns
         // would be wrong for a strict subset (GROUP BY p over a

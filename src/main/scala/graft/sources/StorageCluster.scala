@@ -111,8 +111,6 @@ private[sources] trait StorageCluster { this: DataSkipping.type =>
         "min=max directory values")
     val observed = listManifestNames(fs, dir)
     val stats = readManifestPinned(spark, dir, observed)
-    require(stats.columns.contains("file_size"),
-      "zorderTable needs a size-carrying manifest (rewrite with writeWithStats)")
     zCols.foreach(c => require(stats.columns.contains(s"min_$c"),
       s"z-order column $c is not stats-tracked in the current manifest — " +
         "its global range must come from somewhere; compact with it tracked first"))
@@ -169,7 +167,7 @@ private[sources] trait StorageCluster { this: DataSkipping.type =>
       else moveInPartitioned(fs, staging, new Path(path))
     val newStats = statsFor(
       partAwareStatusScan(spark, path, dir, schema, statusesFor(fs, moved)),
-      newTracked, withNulls = true, bloom = bloomCfg)
+      newTracked, bloom = bloomCfg)
     val statsLocal: Option[(StructType, Seq[Row])] =
       if (moved.size > 10000) None
       else writeStats.flatMap(ws => statsRowsFromWrite(fs, path, moved,
@@ -251,8 +249,6 @@ private[sources] trait StorageCluster { this: DataSkipping.type =>
     val clusteredNames = lines.tail.filter(_.nonEmpty).toSet
     val observed = listManifestNames(fs, dir)
     val stats = readManifestPinned(spark, dir, observed)
-    require(stats.columns.contains("file_size"),
-      "optimizeIncremental needs a size-carrying manifest")
     val named = stats.withColumn("__name",
       element_at(split(col("file"), "/"), -1))
     val clusteredDf = spark.createDataset(clusteredNames.toSeq)(

@@ -51,9 +51,7 @@ private[sources] trait StorageCommit { this: DataSkipping.type =>
     * and [[graft.streaming.StatsTableSource]] offsets grow one entry
     * per commit forever). The driver materializes the file list
     * being replaced ((path) rows — the same O(snapshot files) any
-    * OPTIMIZE planner holds). Legacy FLAT manifests are migrated to
-    * `v0` by this pass (their flat files enter the removal log like
-    * any replaced file).
+    * OPTIMIZE planner holds).
     *
     * VACUUM (`vacuum = true`, default) runs [[vacuumTable]] with
     * `retentionMs`: replaced data files, superseded generations and
@@ -87,8 +85,6 @@ private[sources] trait StorageCommit { this: DataSkipping.type =>
     val partCols = partitionColsIn(fs, dir)
     val observed = listManifestNames(fs, dir)
     val stats = readManifestPinned(spark, dir, observed)
-    require(stats.columns.contains("file_size"),
-      "compactTable needs a size-carrying manifest (rewrite with writeWithStats)")
     val statsCols = trackedCols(spark, dir).toSeq.sorted
     val old = stats.select(col("file"), col("file_size")).collect()
     val totalBytes = old.map(_.getLong(1)).sum
@@ -115,15 +111,9 @@ private[sources] trait StorageCommit { this: DataSkipping.type =>
     // file per partition value, Delta's per-partition bin-pack
     // reduced to its dominant case.
     val staging = new Path(path, s".compact-${java.util.UUID.randomUUID}")
-    // legacy manifests may lack mod_time — fall back to a path-list
-    // read there; status-carrying ones plan through ManifestFileIndex
-    val snapshot =
-      if (stats.columns.contains("mod_time"))
-        applyDv(partAwareStatusScan(spark, path, dir, schema,
-          statusesOf(stats)), dv)
-      else spark.read.schema(schema).parquet(old.map(_.getString(0)): _*)
-    // the rewrite always emits null counts (the legacy→v2 upgrade
-    // moment) and preserves the table's bloom configuration; per-file
+    val snapshot = applyDv(partAwareStatusScan(spark, path, dir, schema,
+      statusesOf(stats)), dv)
+    // the rewrite preserves the table's bloom configuration; per-file
     // stats ride the write tasks (guide §6 — the statsFor read-back
     // below then never executes)
     val bloomCfg = bloomFeature(manifestFeatures(fs, dir))
@@ -138,7 +128,7 @@ private[sources] trait StorageCommit { this: DataSkipping.type =>
       else moveInPartitioned(fs, staging, new Path(path))
     val newStats = statsFor(
       partAwareStatusScan(spark, path, dir, schema, statusesFor(fs, moved)),
-      statsCols, withNulls = true, bloom = bloomCfg)
+      statsCols, bloom = bloomCfg)
     val statsLocal: Option[(StructType, Seq[Row])] =
       if (moved.size > 10000) None
       else writeStats.flatMap(ws => statsRowsFromWrite(fs, path, moved,
@@ -265,9 +255,7 @@ private[sources] trait StorageCommit { this: DataSkipping.type =>
     val rows = readManifestPinned(spark, dir, observed)
     val schema = tableSchemaIn(spark, path, dir)
     val statsCols = trackedCols(spark, dir).toSeq.sorted
-    val manifestSchema = readSidecar(spark, dir, ManifestSchemaFile)
-      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-      .getOrElse(rows.schema)
+    val manifestSchema = manifestSchemaIn(fs, dir)
     // one compact part: manifest rows are tens of bytes per file, so
     // even a million-file table folds to a single modest parquet
     // (multi-part folding would only matter far beyond that). When the
@@ -301,13 +289,10 @@ private[sources] trait StorageCommit { this: DataSkipping.type =>
     * guarantees; expiring them here keeps manifest listings and
     * streaming offsets bounded by the window's commit count instead
     * of growing forever. Records `removedData` (table-root-relative
-    * names) plus the superseded generation — or, for a legacy flat
-    * manifest being migrated, its top-level files — in the removal
-    * log that [[vacuumTable]]'s retention window runs against. (The
-    * hidden build keeps a concurrent LEGACY reader's recursive
-    * parquet read of the flat stats dir clean during a one-time
-    * migration; versioned readers never look at uncommitted dirs at
-    * all.) Returns the committed version number.
+    * names) plus the superseded generation in the removal log that
+    * [[vacuumTable]]'s retention window runs against. Readers never
+    * look at the uncommitted build dir. Returns the committed version
+    * number.
     */
   /** The OPTIMISTIC generation commit: stamp a writer token into the
     * build dir, rename it to the target version, verify the token
@@ -460,7 +445,7 @@ private[sources] trait StorageCommit { this: DataSkipping.type =>
       removedData: Seq[String], markerRetentionMs: Long,
       opStartMs: Long, verbatimMarkers: Set[String] = Set.empty,
       changeData: Option[DataFrame] = None,
-      op: String = "UNKNOWN",
+      op: String,
       txn: Option[(String, Long)] = None,
       dv: Option[DataFrame] = None,
       clustered: Option[String] = None,
@@ -472,18 +457,16 @@ private[sources] trait StorageCommit { this: DataSkipping.type =>
       changeDataFrom: Option[Path] = None,
       dvLocal: Option[(StructType, Seq[Row])] = None): Long = {
     val statsDir = new Path(s"$path/$StatsDir")
-    val curGen = currentGen(fs, statsDir)
     // STRICT version targeting: commit exactly (observed generation
     // + 1). Targeting last+1 instead would let a loser leapfrog a
     // winner it never saw — commit vN+2 built from vN while the
     // winner's vN+1 holds changes vN+2 would silently revert. With
     // observed+1, a racing winner makes the rename NEST and the
     // token check turns the lost race into a retry against the
-    // winner's state. (Flat legacy manifests keep the last+1
-    // fallback — they predate generations and concurrency.)
-    val nextV = obsVersionOf(dir)
-      .map(_ + 1)
-      .getOrElse(genDirs(fs, statsDir).lastOption.map(_._1 + 1).getOrElse(0L))
+    // winner's state.
+    val obsV = obsVersionOf(dir).getOrElse(
+      sys.error(s"publish needs a committed generation, got $dir"))
+    val nextV = obsV + 1
     // marker age is measured from the op's ENTRY time, not from
     // whenever the heavy rewrite before this call finished — a marker
     // must not expire merely because the maintenance op that should
@@ -625,14 +608,10 @@ private[sources] trait StorageCommit { this: DataSkipping.type =>
         spark.sparkContext.hadoopConfiguration)
     }
     val now = System.currentTimeMillis()
-    val replacedManifest = curGen match {
-      case Some((v, _)) => Seq(s"$StatsDir/v$v")
-      case None => // legacy flat manifest: its top-level files
-        fs.listStatus(statsDir)
-          .filter(f => f.isFile)
-          .map(f => s"$StatsDir/${f.getPath.getName}").toSeq
-    }
-    writeRemovalLog(fs, build, (removedData ++ replacedManifest).map(_ -> now))
+    // the superseded generation: the observed one — if a rival
+    // committed past it, the commit below fails the race and retries
+    writeRemovalLog(fs, build,
+      (removedData :+ s"$StatsDir/v$obsV").map(_ -> now))
     val gen = new Path(statsDir, s"v$nextV")
     commitBuildAs(spark, fs, build, gen)
     // post-commit reconciliation: an append that landed between the

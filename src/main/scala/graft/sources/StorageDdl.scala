@@ -33,8 +33,8 @@ private[sources] trait StorageDdl { this: DataSkipping.type =>
     * Recorded at declaration; an append under a DIFFERENT session
     * timezone poisons it to [[GenTzMixed]], permanently disabling
     * temporal derivation for the table (stored values now mix
-    * epochs — no single timezone is right). Absent on legacy
-    * sidecars → temporal derivation stays off (conservative).
+    * epochs — no single timezone is right). No record → temporal
+    * derivation stays off (conservative).
     */
   private[sources] val GenTzKey = "__session_tz__"
   private[sources] val GenTzMixed = "__mixed__"
@@ -126,8 +126,8 @@ private[sources] trait StorageDdl { this: DataSkipping.type =>
       s"`$name` <=> ($exprSql)", validate)
     // first generated column records the session timezone the stored
     // values live under (see [[GenTzKey]]); later declarations keep
-    // the existing record — a legacy table with generated columns
-    // but no record stays unknown (temporal derivation off)
+    // the existing record — generated columns without a record stay
+    // unknown (temporal derivation off)
     val tz = if (gens.isEmpty) Some(sessionTz(spark))
       else generatedTzIn(fs, dir)
     writeGeneratedSidecar(spark, dir, gens.updated(name, exprSql), tz)

@@ -184,8 +184,9 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
     * directories with the runtime subquery values). The deletion
     * vector applies as the usual broadcast anti-join above the scan;
     * a column mapping projects physical→logical on top. `None` for a
-    * legacy status-less manifest — the caller keeps the eager V1
-    * route, whose path-list fallback still reads those.
+    * version that is not a committed generation — the caller keeps
+    * the eager V1 route, which fails it loudly with the retained
+    * range.
     */
   private[sources] def lazyScanPlan(spark: SparkSession, path: String,
       version: Option[Long]): Option[DataFrame] = {
@@ -195,16 +196,11 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
       case None => manifestDirOf(fs, path)
     }
     if (version.exists(v => !isCommittedGen(fs, new Path(dir)))) return None
-    val m = readManifestIn(spark, dir)
-    if (!m.columns.contains("file_size")) return None
+    // the size hint's manifest read is also the protocol gate
+    val sizeHint = tableSizeInBytes(spark, path, version)
     val phys = tableSchemaIn(spark, path, dir)
     val schema = StructType(phys.fields.map(_.copy(nullable = true)))
     val partCols = partitionColsIn(fs, dir)
-    val sizeHint = tableSizeInBytes(spark, path, version)
-      .getOrElse(m.agg(sum(col("file_size"))).head match {
-        case r if r.isNullAt(0) => 0L
-        case r => r.getLong(0)
-      })
     val idx = new SkippingFileIndex(spark, path, dir, schema, partCols, sizeHint)
     val partSchema = StructType(partCols.map(c => schema(schema.fieldIndex(c))))
     val dataSchema = StructType(schema.filterNot(f => partCols.contains(f.name)))
@@ -298,8 +294,6 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
     // a concurrent append to ride forward verbatim)
     val pin = listManifestNames(fsPin, dir)
     val (stats, schema, skip) = planSkip(spark, path, dir, predicate, Some(pin))
-    require(stats.columns.contains("file_size"),
-      s"$op needs a size-carrying manifest (rewrite with writeWithStats)")
     // DML sees the LOGICAL table: DV-dead rows are invisible to the
     // candidate probe, the rewrite and the CDF images — a rewritten
     // file drops its dead rows physically (the rewrite IS their
@@ -353,7 +347,7 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
       touched: Seq[String], replacement: Option[DataFrame],
       vacuum: Boolean, retentionMs: Long, markerRetentionMs: Long,
       opStartMs: Long, changeData: Option[DataFrame] = None,
-      op: String = "UNKNOWN",
+      op: String,
       txn: Option[(String, Long)] = None,
       extraDv: Option[DataFrame] = None,
       clusteredOf: Seq[String] => Option[String] = _ => None,
@@ -432,7 +426,6 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
       else Some(statsFor(
         partAwareStatusScan(spark, path, dir, schema, statusesFor(fs, moved)),
         baseStatsCols,
-        withNulls = baseFeats.contains("nulls"),
         bloom = bloomFeat))
     val addedLocal: Option[(StructType, Seq[Row])] =
       addedStatsFrame.filter(_ => localGate).flatMap { f =>
@@ -493,9 +486,7 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
               f.getModificationTime >= markerCutoff && !dirtyNames(n)
           }
           .map(_.getPath.getName).toSet
-      val manifestSchema = readSidecar(spark, aDir, ManifestSchemaFile)
-        .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-        .getOrElse(aManifest.schema)
+      val manifestSchema = manifestSchemaIn(fs, aDir)
       // DRIVER-SIDE CARRY: with the manifest cache-served and the
       // added stats already local, the whole next-generation row set
       // is plain Scala — dirty-marker detection, the carried filter,
@@ -1065,9 +1056,6 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
     val schema = tableSchemaIn(spark, path, dir)
     val observed = listManifestNames(fs, dir)
     val stats = readManifestPinned(spark, dir, observed)
-    require(stats.columns.contains("file_size"),
-      "purgeDeletionVectors needs a size-carrying manifest (rewrite with " +
-        "writeWithStats)")
     // manifest narrowed by a broadcast semi-join against the
     // (DV-bounded) touched list BEFORE the driver collect — only the
     // rewritten files' statuses ever leave the cluster
@@ -1189,8 +1177,6 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
         s"table's columns ${schema.simpleString} (any order)")
     val observed = listManifestNames(fs, dir)
     val stats = readManifestPinned(spark, dir, observed)
-    require(stats.columns.contains("file_size"),
-      "replaceKeyed needs a size-carrying manifest (rewrite with writeWithStats)")
     val src = source.select(schema.fieldNames.map(col).toSeq: _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1299,8 +1285,6 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
       s"key column $k is not in the table schema ${schema.simpleString}"))
     val observed = listManifestNames(fs, dir)
     val stats = readManifestPinned(spark, dir, observed)
-    require(stats.columns.contains("file_size"),
-      "mergeDelete needs a size-carrying manifest (rewrite with writeWithStats)")
     val delKeys = keys.select(keyCols.map(col): _*).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1470,9 +1454,6 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
             "merge schema evolution on a column-mapped table is not " +
               "supported — evolve via appendWithStats(mergeSchema = true) " +
               "first (it allocates collision-free physical names), then merge")
-          require(currentGen(fs, new Path(s"$path/$StatsDir")).isDefined,
-            s"$path is a legacy flat-manifest table — run compactTable once " +
-              "to migrate it to generations before evolving its schema")
           val widened = StructType(schema0.fields ++
             newFields.map(_.copy(nullable = true)))
           // tracked set unchanged — preserve the stats-cols FILE
@@ -1485,8 +1466,6 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
       }
     val observed = listManifestNames(fs, dir)
     val stats = readManifestPinned(spark, dir, observed)
-    require(stats.columns.contains("file_size"),
-      "mergeUpsert needs a size-carrying manifest (rewrite with writeWithStats)")
     // the source is read several times below (key envelope, distinct
     // keys, counts, the final union) — materialize it once; merge
     // sources are CDC-batch-sized, not table-sized
@@ -1669,8 +1648,6 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
     }
     val observed = listManifestNames(fs, dir)
     val stats = readManifestPinned(spark, dir, observed)
-    require(stats.columns.contains("file_size"),
-      "mergeInto needs a size-carrying manifest (rewrite with writeWithStats)")
     val src = source.select(schema.fieldNames.map(col).toSeq: _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -2024,20 +2001,6 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
     * table size. `predicate` must reference partition columns only
     * (logical names).
     */
-  /** Does the CURRENT manifest record per-file row counts and file
-    * status metadata — the columns [[partitionGroupAggs]] and the
-    * metadata count pushdown aggregate over? Schema-only (the
-    * sidecar-schema read plans no job); a legacy pre-`n_rows`
-    * manifest answers false and the planner must fall through to
-    * normal aggregation instead of claiming a plan that would fail
-    * at execution.
-    */
-  private[sources] def manifestHasRowCounts(spark: SparkSession,
-      path: String): Boolean = {
-    val cols = readManifest(spark, path).columns.toSet
-    cols.contains("n_rows") && cols.contains("file_size")
-  }
-
   /** Per-partition aggregates straight from the manifest — the
     * grouped companion of [[countWhereDetail]]/[[minMaxWhereDetail]]
     * for `SELECT p…, count(*) / count(c) / min(c) / max(c) … GROUP

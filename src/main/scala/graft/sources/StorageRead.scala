@@ -234,8 +234,7 @@ private[sources] trait StorageRead { this: DataSkipping.type =>
 
   /** Retention-aware reclamation (the Delta VACUUM analog): delete
     *  - files/dirs in the removal logs whose removal is older than
-    *    `retentionMs` (replaced data files, superseded generations,
-    *    migrated legacy manifests),
+    *    `retentionMs` (replaced data files, superseded generations),
     *  - visible data files no manifest claims and no log records
     *    (crashed-append orphans) whose MTIME is older than
     *    `retentionMs`,
@@ -422,22 +421,18 @@ private[sources] trait StorageRead { this: DataSkipping.type =>
   }
 
   /** The table's persisted schema (what a pruned or streaming read
-    * plans with — no data-file footer is touched when the sidecar
-    * exists).
+    * plans with — no data-file footer is touched).
     */
   def tableSchema(spark: SparkSession, path: String): StructType =
     tableSchemaIn(spark, path, manifestDir(spark, path))
 
-  /** Table schema from the manifest sidecar; falls back to reading
-    * the data files (a listing + footer) for pre-sidecar manifests.
-    */
+  /** Table schema from the generation's schema sidecar. */
   private[sources] def tableSchemaIn(spark: SparkSession, path: String,
-      dir: String): StructType =
-    readSidecar(spark, dir, SchemaFile) match {
-      case Some(json) =>
-        DataType.fromJson(json).asInstanceOf[StructType]
-      case None => spark.read.parquet(path).schema
-    }
+      dir: String): StructType = {
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    DataType.fromJson(requiredSidecarIn(fs, dir, SchemaFile))
+      .asInstanceOf[StructType]
+  }
 
   /** The user predicate analyzed against the table schema (via an
     * empty local relation — NO file listing or footer read), as the
@@ -459,8 +454,8 @@ private[sources] trait StorageRead { this: DataSkipping.type =>
     * data files they reference survive for `retentionMs` after
     * replacement (see [[vacuumTable]]) — the same window bounds how
     * far back [[readSkippingAt]] can read, exactly Delta's
-    * time-travel-vs-VACUUM coupling. Empty for a legacy flat-manifest
-    * table (no history is recorded there).
+    * time-travel-vs-VACUUM coupling. Empty when `path` holds no
+    * committed table.
     */
   def tableVersions(spark: SparkSession, path: String): Seq[Long] = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -515,9 +510,6 @@ private[sources] trait StorageRead { this: DataSkipping.type =>
       s"$path has no change data feed — create with writeWithStats(" +
         "changeFeed = true) or call enableChangeFeed first")
     val have = tableVersions(spark, path)
-    require(have.nonEmpty,
-      s"$path is a legacy flat-manifest table with no version history — " +
-        "run compactTable once to migrate it to generations")
     val hi = toVersion.getOrElse(have.max)
     require(fromVersion <= hi,
       s"fromVersion $fromVersion must be <= toVersion $hi")
@@ -622,12 +614,10 @@ private[sources] trait StorageRead { this: DataSkipping.type =>
     * deletion vector's dead-row fraction (a merge-on-read DELETE
     * shrinks the effective relation even though file bytes don't
     * move). One manifest aggregate + an O(vector) count only when a
-    * vector exists — no file listing, no data read. None for a
-    * legacy manifest without `file_size` (caller keeps Spark's
-    * conservative default so a join can never under-plan).
+    * vector exists — no file listing, no data read.
     */
   def tableSizeInBytes(spark: SparkSession, path: String,
-      version: Option[Long] = None): Option[Long] = {
+      version: Option[Long] = None): Long = {
     val dir = version match {
       case Some(v) =>
         val have = tableVersions(spark, path)
@@ -637,21 +627,17 @@ private[sources] trait StorageRead { this: DataSkipping.type =>
         s"$path/$StatsDir/v$v"
       case None => manifestDir(spark, path)
     }
-    val m = readManifestIn(spark, dir)
-    if (!m.columns.contains("file_size")) return None
-    val hasRows = m.columns.contains("n_rows")
-    val aggRow =
-      if (hasRows) m.agg(sum(col("file_size")), sum(col("n_rows"))).head()
-      else m.agg(sum(col("file_size"))).head()
-    if (aggRow.isNullAt(0)) return Some(0L) // empty manifest
+    val aggRow = readManifestIn(spark, dir)
+      .agg(sum(col("file_size")), sum(col("n_rows"))).head()
+    if (aggRow.isNullAt(0)) return 0L // empty manifest
     val bytes = aggRow.getLong(0)
-    val physRows = if (hasRows && !aggRow.isNullAt(1)) aggRow.getLong(1) else 0L
+    val physRows = if (aggRow.isNullAt(1)) 0L else aggRow.getLong(1)
     val dead = if (physRows > 0L) readDvIn(spark, dir).fold(0L)(_.count()) else 0L
     val live =
       if (dead > 0L)
         math.ceil(bytes.toDouble * (physRows - dead).toDouble / physRows).toLong
       else bytes
-    Some(math.max(live, 0L))
+    math.max(live, 0L)
   }
 
   def tableDetail(spark: SparkSession, path: String): DataFrame = {
@@ -825,9 +811,7 @@ private[sources] trait StorageRead { this: DataSkipping.type =>
     val vStatsCols = trackedCols(spark, vDir).toSeq.sorted
     val feats = manifestFeatures(fs, vDir) ++
       manifestFeatures(fs, dir).filter(_ == CdfFeature)
-    val vManifestSchema = readSidecar(spark, vDir, ManifestSchemaFile)
-      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-      .getOrElse(restored.schema)
+    val vManifestSchema = manifestSchemaIn(fs, vDir)
     val curSchema = tableSchemaIn(spark, path, dir)
     val curFiles = readManifestIn(spark, dir).select("file").collect()
       .map(_.getString(0)).toSet
@@ -911,10 +895,11 @@ private[sources] trait StorageRead { this: DataSkipping.type =>
     // window after a restore — bounded, and erring toward replay
     // protection.)
     val statsDir = new Path(s"$path/$StatsDir")
-    // strict observed+1 targeting — see publishGeneration
-    val nextV = obsVersionOf(dir)
-      .map(_ + 1)
-      .getOrElse(genDirs(fs, statsDir).lastOption.map(_._1 + 1).getOrElse(0L))
+    // strict observed+1 targeting — see publishGeneration (the
+    // current manifest was read above, so `dir` is a committed
+    // generation)
+    val obsV = obsVersionOf(dir).get
+    val nextV = obsV + 1
     val build = new Path(statsDir, s".genbuild-${java.util.UUID.randomUUID}")
     fs.mkdirs(build)
     val conf = spark.sparkContext.hadoopConfiguration
@@ -987,11 +972,9 @@ private[sources] trait StorageRead { this: DataSkipping.type =>
       cd.write.parquet(new Path(build, ChangeDataDir).toString))
     writeOpFile(fs, build, s"RESTORE(v$version)", opStart)
     val now = System.currentTimeMillis()
-    val replacedManifest = currentGen(fs, statsDir)
-      .map { case (v, _) => s"$StatsDir/v$v" }.toSeq
     writeRemovalLog(fs, build,
-      (dropped.map(p => rootRelativeOrName(fs, path, p)) ++
-        replacedManifest).map(_ -> now))
+      (dropped.map(p => rootRelativeOrName(fs, path, p)) :+
+        s"$StatsDir/v$obsV").map(_ -> now))
     val gen = new Path(statsDir, s"v$nextV")
     commitBuildAs(spark, fs, build, gen)
     if (vacuum) vacuumTable(spark, path, retentionMs)
@@ -1001,9 +984,8 @@ private[sources] trait StorageRead { this: DataSkipping.type =>
   /** The table's commit history (the `DESCRIBE HISTORY` analog), one
     * row per RETAINED committed generation, newest first: `version`,
     * `operation` (WRITE / OPTIMIZE / DELETE / UPDATE / MERGE /
-    * RESTORE(vN); UNKNOWN for generations written before the op
-    * sidecar existed), and `op_time` (the operation's entry
-    * timestamp; commit-marker mtime for pre-sidecar generations).
+    * RESTORE(vN) / …, from the generation's [[OpFile]] record), and
+    * `op_time` (the operation's entry timestamp).
     * History reaches back exactly as far as time travel does — the
     * retention window — because superseded generations ARE the
     * history records. Tiny driver-side listing (O(retained
@@ -1015,16 +997,11 @@ private[sources] trait StorageRead { this: DataSkipping.type =>
     val rows = genDirs(fs, statsDir)
       .filter { case (_, f) => isCommittedGen(fs, f.getPath) }
       .map { case (v, f) =>
-        val (op, ts) = readSidecarIn(fs, f.getPath.toString, OpFile) match {
-          case Some(json) =>
-            val opRe = "\"operation\"\\s*:\\s*\"([^\"]*)\"".r
-            val tsRe = "\"ts\"\\s*:\\s*(\\d+)".r
-            (opRe.findFirstMatchIn(json).map(_.group(1)).getOrElse("UNKNOWN"),
-              tsRe.findFirstMatchIn(json).map(_.group(1).toLong).getOrElse(0L))
-          case None =>
-            (if (v == 0L) "WRITE" else "UNKNOWN", commitInstant(fs, f.getPath))
-        }
-        Row(v, op, ts)
+        val json = requiredSidecarIn(fs, f.getPath.toString, OpFile)
+        val opRe = "\"operation\"\\s*:\\s*\"([^\"]*)\"".r
+        val tsRe = "\"ts\"\\s*:\\s*(\\d+)".r
+        Row(v, opRe.findFirstMatchIn(json).get.group(1),
+          tsRe.findFirstMatchIn(json).get.group(1).toLong)
       }.reverse
     val schema = StructType(Seq(
       StructField("version", org.apache.spark.sql.types.LongType,
@@ -1327,8 +1304,7 @@ private[sources] trait StorageRead { this: DataSkipping.type =>
     *    relation whose file index serves the statuses),
     * and the driver never materializes the all-files list — at 10^6
     * manifest entries with a selective predicate, driver memory is
-    * O(kept), not O(files). Pre-sidecar manifests (no
-    * file_size/mod_time columns) fall back to a path-list read.
+    * O(kept), not O(files).
     */
   def readSkipping(spark: SparkSession, path: String, predicate: Column): DataFrame =
     readSkippingMapped(spark, path, manifestDir(spark, path), predicate)
@@ -1419,14 +1395,6 @@ private[sources] trait StorageRead { this: DataSkipping.type =>
         partAwareStatusScan(spark, path, dir, schema, statuses), dv)
         .filter(coalesce(predicate, lit(false)))
         .select(col(column).as("__lo"), col(column).as("__hi")))
-    if (!stats.columns.contains("file_size")) {
-      // legacy manifest: no status metadata — the read path's own
-      // legacy branch handles the path-list scan
-      val r = readSkippingIn(spark, path, dir, predicate)
-        .filter(coalesce(predicate, lit(false)))
-        .agg(min(col(column)), max(col(column))).head()
-      return ((Option(r.get(0)), Option(r.get(1))), -1L)
-    }
     val tracked = stats.columns.collect {
       case c if c.startsWith("min_") => c.drop(4) }.toSet
     val nullsTracked = stats.columns.collect {
@@ -1465,21 +1433,14 @@ private[sources] trait StorageRead { this: DataSkipping.type =>
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dir = manifestDirOf(fs, path)
     val (stats, schema, skip) = planSkip(spark, path, dir, predicate)
-    if (!stats.columns.contains("n_rows") ||
-        !stats.columns.contains("file_size")) {
-      // legacy manifest: no row counts recorded — plain scan count
-      val c = readSkippingIn(spark, path, dir, predicate)
-        .filter(coalesce(predicate, lit(false))).count()
-      return (c, 0L, -1L)
-    }
     val tracked = stats.columns.collect {
       case c if c.startsWith("min_") => c.drop(4) }.toSet
     val nullsTracked = stats.columns.collect {
       case c if c.startsWith("nulls_") => c.drop(6) }.toSet
     val cond = resolvedCondition(spark, schema, predicate)
-    // null-safe tri-state: a null stats term (evolved column, legacy
-    // row) falls to the same side the read path puts it on — skip
-    // null drops the file, all null demotes to boundary scan
+    // null-safe tri-state: a null stats term (evolved column) falls
+    // to the same side the read path puts it on — skip null drops the
+    // file, all null demotes to boundary scan
     val all = coalesce(
       rewriteAll(cond, tracked, nullsTracked).getOrElse(lit(false)),
       lit(false))
@@ -1527,13 +1488,6 @@ private[sources] trait StorageRead { this: DataSkipping.type =>
     val dir = manifestDirOf(fs, path)
     val (stats, schema, skip) = planSkip(spark, path, dir, predicate)
     val notNullPred = coalesce(predicate, lit(false)) && col(column).isNotNull
-    if (!stats.columns.contains("n_rows") ||
-        !stats.columns.contains("file_size")) {
-      // legacy manifest: no row counts recorded — plain scan count
-      val c = readSkippingIn(spark, path, dir, predicate)
-        .filter(notNullPred).count()
-      return (c, 0L, -1L)
-    }
     val tracked = stats.columns.collect {
       case c if c.startsWith("min_") => c.drop(4) }.toSet
     val nullsTracked = stats.columns.collect {
@@ -1605,34 +1559,21 @@ private[sources] trait StorageRead { this: DataSkipping.type =>
   private[sources] def readSkippingIn(spark: SparkSession, path: String, dir: String,
       predicate: Column): DataFrame = {
     val (stats, schema, skip) = planSkip(spark, path, dir, predicate)
-    if (!stats.columns.contains("file_size")) {
-      // legacy manifest: no status metadata recorded — path-list read
-      val kept = stats.filter(skip).select("file").collect().map(_.getString(0)).toSeq
-      if (kept.isEmpty) spark.read.parquet(path).filter(lit(false))
-      else spark.read.schema(schema).parquet(kept: _*).filter(predicate)
-    } else {
-      val kept = stats.filter(skip)
-        .select(col("file"), col("file_size"), col("mod_time")).collect()
-      val statuses = kept.map { r =>
-        FileStatusWithMetadata(new FileStatus(
-          r.getLong(1), false, 1, 128L * 1024 * 1024, r.getLong(2),
-          new Path(r.getString(0))))
-      }.toSeq
-      val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // Partition-converted tables: values come from directory names,
-      // so [[partAwareRelation]] splits the sidecar schema into data
-      // columns (read from bytes) and partition columns (served per
-      // PartitionDirectory by the file index — zero bytes read). The
-      // manifest already pruned on partition predicates via min=max
-      // stats; the index re-applies the partition filters Catalyst
-      // hands it because FileSourceStrategy TRUSTS listing-time
-      // pruning and never re-checks those conjuncts on rows.
-      val relation = partAwareRelation(spark, path,
-        partitionColsIn(fs, dir), schema, statuses)
-      applyDv(classic.baseRelationToDataFrame(relation),
-        readDvIn(spark, dir)).filter(predicate)
-    }
+    val statuses = statusesOf(stats.filter(skip))
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // Partition-converted tables: values come from directory names,
+    // so [[partAwareRelation]] splits the sidecar schema into data
+    // columns (read from bytes) and partition columns (served per
+    // PartitionDirectory by the file index — zero bytes read). The
+    // manifest already pruned on partition predicates via min=max
+    // stats; the index re-applies the partition filters Catalyst
+    // hands it because FileSourceStrategy TRUSTS listing-time
+    // pruning and never re-checks those conjuncts on rows.
+    val relation = partAwareRelation(spark, path,
+      partitionColsIn(fs, dir), schema, statuses)
+    applyDv(classic.baseRelationToDataFrame(relation),
+      readDvIn(spark, dir)).filter(predicate)
   }
 
   /** Rewrite a row predicate into a file-stats predicate over

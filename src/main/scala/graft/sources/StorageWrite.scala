@@ -130,23 +130,16 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
       .foreach(e => fs.delete(e.getPath, true))
   }
 
-  /** Does `path` hold a COMMITTED graft table — a committed
-    * generation, or a legacy flat manifest (repairing a torn
-    * pre-generation swap first, like [[manifestDirOf]])? Decides
-    * whether an overwrite must commit through the generation
-    * machinery ([[overwriteGeneration]]) or may build a fresh v0
-    * ([[stagedOverwrite]] — nothing committed exists to protect).
+  /** Does `path` hold a COMMITTED graft table (a committed
+    * generation; an older layout is refused by [[manifestDirOf]],
+    * never overwritten)? Decides whether an overwrite must commit
+    * through the generation machinery ([[overwriteGeneration]]) or
+    * may build a fresh v0 ([[stagedOverwrite]] — nothing committed
+    * exists to protect).
     */
   private[sources] def committedTableAt(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Boolean = {
-    val statsDir = new Path(s"$path/$StatsDir")
-    currentGen(fs, statsDir).nonEmpty || {
-      if (fs.exists(statsDir)) repairStatsSwap(fs, path)
-      currentGen(fs, statsDir).nonEmpty ||
-        (fs.exists(statsDir) && fs.listStatus(statsDir).exists(f =>
-          f.isFile && f.getPath.getName.endsWith(".parquet")))
-    }
-  }
+      path: String): Boolean =
+    obsVersionOf(manifestDirOf(fs, path)).isDefined
 
   /** Overwrite an EXISTING graft table as ONE atomic generation
     * commit — the Delta overwrite contract: stage the new files, then
@@ -244,7 +237,7 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
           partAwareStatusScanCols(spark, path, partitionBy, sch,
             statusesFor(fs, moved)))
       }
-    val stats = statsFor(written, tracked, withNulls = true, bloom)
+    val stats = statsFor(written, tracked, bloom)
     val statsLocal: Option[(StructType, Seq[Row])] =
       if (moved.size > 10000) None
       else writeStats.flatMap(ws => statsRowsFromWrite(fs, path, moved,
@@ -277,6 +270,7 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
       optimizeWrite: Boolean = false,
       extraSidecars: Map[String, String] = Map.empty): Unit = {
     require(statsCols.nonEmpty, "at least one stats column")
+    val opStart = System.currentTimeMillis()
     // OPTIMIZED WRITE (the Delta optimizeWrite analog): shuffle rows
     // onto their partition values BEFORE the write job, so each
     // partition directory gets ONE file per write instead of one per
@@ -314,7 +308,7 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
       stagedOverwrite(spark, path, s =>
         writeStats = stagedWriteTracked(df, new Path(s), Nil, statsCols, bloom))
       val written = spark.read.parquet(path)
-      val stats = statsFor(written, statsCols, withNulls = true, bloom)
+      val stats = statsFor(written, statsCols, bloom)
       val moved = tfs.listStatus(new Path(path)).filter { f =>
         val n = f.getPath.getName
         f.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&
@@ -339,6 +333,7 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
           (if (changeFeed) Set(CdfFeature) else Set.empty),
         manifestSchema = Some(stats.schema))
       writeExtraSidecars(spark, gen, extraSidecars)
+      writeOpFile(tfs, new Path(gen), "WRITE", opStart)
       commitGen(spark, new Path(gen))
     } else {
       // Staged like the flat branch (write job first, destructive
@@ -378,7 +373,7 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
       val written = partAwareStatusScanCols(spark, path, partitionBy, schema,
         listed)
       val tracked = statsCols ++ partitionBy
-      val stats = statsFor(written, tracked, withNulls = true, bloom)
+      val stats = statsFor(written, tracked, bloom)
       val statsLocal: Option[Seq[Row]] =
         if (listed.size > 10000) None
         else writeStats.flatMap(ws => statsRowsFromWrite(fs, path,
@@ -402,6 +397,7 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
       writeExtraSidecars(spark, gen, extraSidecars)
+      writeOpFile(fs, new Path(gen), "WRITE", opStart)
       commitGen(spark, new Path(gen))
     }
   }
@@ -498,7 +494,7 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
           "Hive-partitioned layout; other nested layouts are not convertible")
       require(topFiles.nonEmpty, s"no top-level parquet data files at $path to convert")
       val existing = spark.read.parquet(path)
-      val stats = statsFor(existing, statsCols, withNulls = true, bloom)
+      val stats = statsFor(existing, statsCols, bloom)
       val gen = s"$path/$StatsDir/v0"
       stats.write.mode("overwrite").parquet(gen)
       writeSidecars(spark, gen, existing.schema, statsCols,
@@ -538,7 +534,7 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
           s"(${partitionBy.mkString(", ")}) — names must be given in " +
           "directory-nesting order")
       val tracked = statsCols ++ partitionBy
-      val stats = statsFor(existing, tracked, withNulls = true, bloom)
+      val stats = statsFor(existing, tracked, bloom)
       val gen = s"$path/$StatsDir/v0"
       stats.write.mode("overwrite").parquet(gen)
       writeSidecars(spark, gen, existing.schema, tracked,
@@ -725,8 +721,7 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
     * timestamps — Delta's fix for the same problem): an object-store
     * migration or a plain `cp -r` rewrites file mtimes, and a
     * TIMESTAMP AS OF keyed on mtime would silently resolve to wrong
-    * versions on the copied table. Readers fall back to the mtime
-    * for legacy empty `_COMMIT`s ([[commitInstant]]).
+    * versions on the copied table.
     */
   private[sources] def commitGen(spark: SparkSession, gen: Path): Unit = {
     val fs = gen.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -752,21 +747,16 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
   }
 
   /** A generation's commit instant: the in-commit timestamp written
-    * by [[commitGen]], falling back to the `_COMMIT` mtime for
-    * legacy tables committed before in-commit timestamps existed.
+    * by [[commitGen]].
     */
   private[sources] def commitInstant(fs: org.apache.hadoop.fs.FileSystem,
       gen: Path): Long = {
-    val p = new Path(gen, CommitFile)
-    val st = fs.getFileStatus(p)
-    if (st.getLen == 0L) st.getModificationTime
-    else {
-      val in = fs.open(p)
-      val txt = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      finally in.close()
-      txt.toLongOption.getOrElse(st.getModificationTime)
-    }
+    val in = fs.open(new Path(gen, CommitFile))
+    val txt = try new String(in.readAllBytes(),
+      java.nio.charset.StandardCharsets.UTF_8).trim
+    finally in.close()
+    txt.toLongOption.getOrElse(refuseLegacyLayout(gen.toString,
+      s"$CommitFile without an in-commit timestamp"))
   }
 
   private[sources] def bloomFeatureLine(b: (Seq[String], Int, Int)): String =
@@ -810,19 +800,14 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
     * one row per file crosses the wire.
     */
   private[sources] def statsFor(scan: DataFrame, statsCols: Seq[String],
-      withNulls: Boolean = true,
       bloom: Option[(Seq[String], Int, Int)] = None,
       ndv: Option[(Seq[String], Int)] = None): DataFrame = {
     if (bloom.isDefined) graft.plans.GraftFunctions.register(scan.sparkSession)
     val aggs = statsCols.flatMap(c =>
-      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")) ++
+      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"),
         // per-file null counts (Delta's nullCount analog) enable
-        // IS [NOT] NULL pruning; emitted only when the table's
-        // manifest generation carries them — a mixed-schema
-        // manifest is exactly what the statsCols check forbids
-        (if (withNulls)
-          Seq(sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nulls_$c"))
-        else Nil)) ++
+        // IS [NOT] NULL pruning
+        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nulls_$c"))) ++
       // per-file Bloom filters over xxhash64 of the column value
       bloom.toSeq.flatMap { case (cols, bits, hashes) =>
         cols.map(c => call_function("graft_bloom_agg",
@@ -879,7 +864,7 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
   }
 
   /** O(1) manifest feature flags ("nulls" = per-file null counts
-    * present). Absent file = legacy manifest, no flags.
+    * present).
     */
   private[sources] def manifestFeatures(
       fs: org.apache.hadoop.fs.FileSystem, dir: String): Set[String] =
@@ -906,15 +891,9 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
     manifestSchema.foreach(ms => put(ManifestSchemaFile, ms.json))
   }
 
-  /** Tracked stats columns from the sidecar (O(1)); falls back to a
-    * manifest listing + footer read for pre-sidecar tables.
-    */
+  /** Tracked stats columns from the sidecar (O(1)). */
   private[sources] def trackedCols(spark: SparkSession, dir: String): Set[String] =
-    readSidecar(spark, dir, StatsColsFile) match {
-      case Some(content) => content.linesIterator.filter(_.nonEmpty).toSet
-      case None => spark.read.parquet(dir).columns
-        .collect { case c if c.startsWith("min_") => c.drop(4) }.toSet
-    }
+    statsColsInOrderOf(spark, dir).toSet
 
   /** Append a batch to an existing stats table WITHOUT touching what
     * is already there: data files are written to a hidden staging dir
@@ -942,9 +921,7 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
     * are rewritten FIRST, old data files read through the widened
     * schema yield nulls, and old manifest rows yield null stats that
     * the rewriter backfills correctly. Dropping or retyping columns
-    * is still rejected loudly. Evolution requires a versioned
-    * (generation) manifest — run [[compactTable]] once to migrate a
-    * legacy flat table.
+    * is still rejected loudly.
     *
     * NAMED COMMITS (`commitName`) — the exactly-once hook for
     * at-least-once writers (Structured Streaming's foreachBatch): the
@@ -1070,13 +1047,12 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
     }
 
   /** A generation's tracked stats columns in FILE order (manifest
-    * part columns are keyed to it); sorted-tracked fallback for
-    * legacy generations without the sidecar.
+    * part columns are keyed to it).
     */
-  private[sources] def statsColsInOrderOf(spark: SparkSession, dir: String): Seq[String] =
-    readSidecar(spark, dir, StatsColsFile)
-      .map(_.linesIterator.filter(_.nonEmpty).toSeq)
-      .getOrElse(trackedCols(spark, dir).toSeq.sorted)
+  private[sources] def statsColsInOrderOf(spark: SparkSession, dir: String): Seq[String] = {
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    requiredSidecarIn(fs, dir, StatsColsFile).linesIterator.filter(_.nonEmpty).toSeq
+  }
 
   def appendWithStats(
       df0raw: DataFrame, path: String, statsCols0: Seq[String],
@@ -1159,19 +1135,15 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
     val spark = df.sparkSession
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dir = manifestDirOf(fs, path)
-    require(fs.exists(new Path(dir, SchemaFile)),
-      s"$path is not a stats table with a schema sidecar; use writeWithStats first")
     val marker = commitName.map(n => new Path(dir, s"$n.parquet"))
     if (marker.exists(fs.exists)) return false
     // appends write manifest rows without reading the manifest, so
-    // the protocol gate (see readManifestIn) must run explicitly —
-    // appending feature-ignorant rows to a newer writer's manifest
-    // would corrupt whatever the feature encodes
-    val unknownFeats = unknownFeatures(manifestFeatures(fs, dir))
-    require(unknownFeats.isEmpty,
-      s"manifest at $dir requires table feature(s) " +
-        s"[${unknownFeats.toSeq.sorted.mkString(", ")}] this build does not " +
-        "implement — refusing to append; upgrade the library")
+    // the protocol gate must run explicitly — appending
+    // feature-ignorant rows to a newer writer's manifest would
+    // corrupt whatever the feature encodes
+    val feats = manifestFeatures(fs, dir)
+    requireManifestProtocol(fs, dir, feats,
+      readSidecarIn(fs, dir, ManifestSchemaFile))
     val tracked = trackedCols(spark, dir)
     val stored = tableSchemaIn(spark, path, dir)
     val storedByName = stored.map(f => f.name -> f.dataType).toMap
@@ -1205,9 +1177,6 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
               "batch carries new columns to track")
           stored
         } else {
-          require(currentGen(fs, new Path(s"$path/$StatsDir")).isDefined,
-            s"$path is a legacy flat-manifest table — run compactTable once to " +
-              "migrate it to generations before evolving its schema")
           require(tracked.subsetOf(statsCols.toSet),
             s"statsCols [${statsCols.sorted.mkString(",")}] must contain the tracked " +
               s"columns [${tracked.toSeq.sorted.mkString(",")}] — evolution extends " +
@@ -1227,9 +1196,8 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
           // SIDECARS FIRST: a crash after this point leaves a widened
           // table whose old files read as nulls for the new columns —
           // consistent and correct (see class doc)
-          val feats = manifestFeatures(fs, dir)
           val widenedManifest = widenedManifestSchema(spark, dir, statsCols,
-            feats.contains("nulls"), newFields)
+            newFields)
           writeSidecars(spark, dir, widened, statsCols, feats,
             manifestSchema = Some(widenedManifest))
           widened
@@ -1237,13 +1205,10 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
       }
 
     val staging = new Path(path, s".append-${java.util.UUID.randomUUID}")
-    // match the table's manifest generation: appending null-count
-    // or bloom columns to a legacy manifest (or vice versa) is
-    // the mixed-schema mis-pruning the statsCols check forbids.
-    // Legacy tables are upgraded wholesale by compactTable. Resolved
-    // BEFORE the write so the batch's manifest stats ride the write
-    // tasks (guide §6 — no re-scan of just-written output).
-    val feats = manifestFeatures(fs, dir)
+    // match the table's bloom configuration (a mixed-schema manifest
+    // mis-prunes). Resolved BEFORE the write so the batch's manifest
+    // stats ride the write tasks (guide §6 — no re-scan of
+    // just-written output).
     val bloomCfg = bloomFeature(feats)
     val writeStats = stagedWriteTracked(df, staging, Nil, statsCols, bloomCfg)
     // validated under the TABLE schema (already widened if this batch
@@ -1255,7 +1220,7 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
     val batchStats =
       if (moved.nonEmpty)
         statsFor(statusScan(spark, path, schema, statusesFor(fs, moved)),
-          statsCols, withNulls = feats.contains("nulls"), bloom = bloomCfg)
+          statsCols, bloom = bloomCfg)
       else readManifestIn(spark, dir).limit(0) // zero-row marker
     // write-task stats registered driver-side (bounded batches): the
     // statsFor frame above then never executes — its schema is the
@@ -1317,8 +1282,7 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
             writeSidecars(spark, cur, mergedSchema, mergedTracked,
               manifestFeatures(fs, cur),
               manifestSchema = Some(widenedManifestSchema(spark, cur,
-                statsCols, manifestFeatures(fs, cur).contains("nulls"),
-                missing.toSeq)))
+                statsCols, missing.toSeq)))
           }
         }
         val claimed = commitName match {
@@ -1363,15 +1327,12 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
   /** The manifest schema after tracking `statsCols` over a table that
     * gained `newFields`: existing manifest columns keep their
     * positions, new stat columns append. Derived from the persisted
-    * manifest schema when present (no footer reads), else from a
-    * merged-footer read of the manifest parts.
+    * manifest schema (no footer reads).
     */
   private[sources] def widenedManifestSchema(spark: SparkSession, dir: String,
-      statsCols: Seq[String], withNulls: Boolean,
-      newFields: Seq[StructField]): StructType = {
-    val existing = readSidecar(spark, dir, ManifestSchemaFile)
-      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-      .getOrElse(spark.read.option("mergeSchema", "true").parquet(dir).schema)
+      statsCols: Seq[String], newFields: Seq[StructField]): StructType = {
+    val existing = manifestSchemaIn(
+      new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
     val typesByName = newFields.map(f => f.name -> f.dataType).toMap
     // a stats key may be a NESTED path rooted at a new struct column
     // (`meta.b`) — resolve its leaf type through the struct
@@ -1389,9 +1350,8 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
     }
     val have = existing.fieldNames.toSet
     val added = statsCols.flatMap(c => typeOfPath(c).toSeq.flatMap { dt =>
-      Seq(StructField(s"min_$c", dt), StructField(s"max_$c", dt)) ++
-        (if (withNulls) Seq(StructField(s"nulls_$c", org.apache.spark.sql.types.LongType))
-        else Nil)
+      Seq(StructField(s"min_$c", dt), StructField(s"max_$c", dt),
+        StructField(s"nulls_$c", org.apache.spark.sql.types.LongType))
     }).filterNot(f => have(f.name))
     StructType(existing.fields ++ added)
   }
@@ -1432,11 +1392,9 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
       s"commitName '$n' must start with an alphanumeric and use only " +
         "[A-Za-z0-9._-] (a '_'/'.' prefix would HIDE the marker; 'part-' " +
         "is reserved for plain manifest parts)"))
-    val unknownFeats = unknownFeatures(manifestFeatures(fs, dir))
-    require(unknownFeats.isEmpty,
-      s"manifest at $dir requires table feature(s) " +
-        s"[${unknownFeats.toSeq.sorted.mkString(", ")}] this build does not " +
-        "implement — refusing to append; upgrade the library")
+    val feats = manifestFeatures(fs, dir)
+    requireManifestProtocol(fs, dir, feats,
+      readSidecarIn(fs, dir, ManifestSchemaFile))
     val stored = tableSchemaIn(spark, path, dir)
     val tracked = trackedCols(spark, dir)
     partCols.foreach(c => require(df0.columns.contains(c),
@@ -1496,11 +1454,10 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
           val widened = StructType(
             stored.fields ++ newFields.map(_.copy(nullable = true)))
           // SIDECARS FIRST, exactly the flat path's crash order
-          val feats0 = manifestFeatures(fs, dir)
           val widenedManifest = widenedManifestSchema(spark, dir,
-            statsData, feats0.contains("nulls"), newFields.toSeq)
+            statsData, newFields.toSeq)
           writeSidecars(spark, dir, widened,
-            statsData ++ partCols, feats0,
+            statsData ++ partCols, feats,
             manifestSchema = Some(widenedManifest))
           widened
         }
@@ -1515,7 +1472,6 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
     // (partition values included — min=max=directory value) ride the
     // write tasks, so the part-aware statsFor below usually never
     // executes (guide §6 — no re-scan of just-written output)
-    val feats = manifestFeatures(fs, dir)
     val bloomCfg = bloomFeature(feats)
     val writeStats = stagedWriteTracked(df, staging, partCols,
       statsData ++ partCols, bloomCfg)
@@ -1526,8 +1482,7 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
       if (moved.nonEmpty)
         statsFor(partAwareStatusScanCols(spark, path, partCols, schema,
             statusesFor(fs, moved)),
-          statsData ++ partCols, withNulls = feats.contains("nulls"),
-          bloom = bloomCfg)
+          statsData ++ partCols, bloom = bloomCfg)
       else readManifestIn(spark, dir).limit(0) // zero-row marker
     val batchLocal: Option[(StructType, Seq[Row])] =
       if (moved.isEmpty) Some((batchStats.schema, Nil))
@@ -1579,8 +1534,7 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
             writeSidecars(spark, cur, mergedSchema, mergedTracked,
               manifestFeatures(fs, cur),
               manifestSchema = Some(widenedManifestSchema(spark, cur,
-                statsData, manifestFeatures(fs, cur).contains("nulls"),
-                missing.toSeq)))
+                statsData, missing.toSeq)))
           }
         }
         val claimed = commitName match {
@@ -1747,23 +1701,18 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
     * output; the Delta statistics-tracker shape via
     * [[org.apache.spark.sql.graft.TrackedParquetWrite]]). Falls back
     * to the plain staged writer — identical machinery, no tracker —
-    * when the stats shape is unsupported or the tracker is disabled
-    * (`spark.graft.write.trackedStats=false`), returning None; the
-    * caller then keeps its read-back `statsFor` route.
+    * when the stats shape is unsupported, returning None; the caller
+    * then keeps its read-back `statsFor` route.
     */
   private[sources] def stagedWriteTracked(df: DataFrame, staging: Path,
       partCols: Seq[String], statsCols: Seq[String],
       bloom: Option[(Seq[String], Int, Int)])
       : Option[Seq[org.apache.spark.sql.graft.FileWriteStats]] = {
-    val enabled = df.sparkSession.conf
-      .getOption("spark.graft.write.trackedStats").forall(_.toBoolean)
     val statsData = statsCols.filterNot(partCols.contains)
-    val tracked =
-      if (!enabled) None
-      else org.apache.spark.sql.graft.TrackedParquetWrite.write(
-        df, staging.toString, partCols, statsData,
-        bloom.map(_._1).getOrElse(Nil),
-        bloom.map(_._2).getOrElse(64), bloom.map(_._3).getOrElse(1))
+    val tracked = org.apache.spark.sql.graft.TrackedParquetWrite.write(
+      df, staging.toString, partCols, statsData,
+      bloom.map(_._1).getOrElse(Nil),
+      bloom.map(_._2).getOrElse(64), bloom.map(_._3).getOrElse(1))
     if (tracked.isEmpty) {
       if (partCols.isEmpty) df.write.parquet(staging.toString)
       else df.write.partitionBy(partCols: _*).parquet(staging.toString)
@@ -1777,8 +1726,9 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
     * frame WOULD have produced (built lazily by the caller — analysis
     * only, no action), so type/order/nullability parity is by
     * construction. Returns None when any moved file lacks a tracker
-    * entry or the schema carries a column the tracker cannot fill
-    * (ndv registers) — the caller then runs the distributed scan.
+    * entry, two entries share one relative path, or the schema
+    * carries a column the tracker cannot fill (ndv registers) — the
+    * caller then runs the distributed scan.
     * Zero-row files are dropped exactly like the grouped aggregate
     * drops them (no input rows → no group).
     */
@@ -1795,6 +1745,7 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
     val roots = Seq(new Path(path).toString + "/",
       fs.makeQualified(new Path(path)).toString + "/").distinct
     val byRel = files.map(f => f.relPath -> f).toMap
+    if (byRel.size != files.size) return None // colliding keys — re-scan
     val statsData = tracked.filterNot(partCols.contains)
     val dataIdx = statsData.zipWithIndex.toMap
     val partIdx = partCols.zipWithIndex.toMap

@@ -42,10 +42,9 @@ import graft.plans.VectorExpressions
   */
 object VectorIndex {
 
-  /** Root-level sidecar holding the frozen model. Underscore-hidden
-    * from plain parquet readers; generation commits never touch the
-    * table root, so it survives every append/OPTIMIZE/DML on the
-    * coded table.
+  /** Root-level model file of indexes built before the model moved
+    * into the generation ([[DataSkipping.VIndexFile]]). Never written;
+    * an index that still has one is refused, not read.
     */
   val MetaFile = "_vector_index.txt"
 
@@ -108,12 +107,6 @@ object VectorIndex {
       extraSidecars = Map(DataSkipping.VIndexFile -> serializeMeta(
         Meta(idCol, vecCol, dim, nCenters, m, ksub, residual,
           centroids, books))))
-    // a legacy root-level sidecar (pre-generation-model indexes)
-    // would shadow nothing — meta() prefers the generation — but
-    // remove it so the root never contradicts the served model
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val legacy = new Path(path, MetaFile)
-    if (fs.exists(legacy)) fs.delete(legacy, false)
   }
 
   // ------------------------------------------------------------------
@@ -160,8 +153,8 @@ object VectorIndex {
     // SNAPSHOT consistency under concurrent rebuild/OPTIMIZE: pin ONE
     // version and take BOTH the model and the codes from it — the
     // model sidecar lives inside the generation, so (model, codes)
-    // can never mix epochs. Legacy tables without generations fall
-    // back to the unpinned read + root sidecar.
+    // can never mix epochs. A path without generations fails in
+    // meta().
     val pin = DataSkipping.tableVersions(spark, path).maxOption
     val mt = pin.map(metaAt(spark, path, _)).getOrElse(meta(spark, path))
     require(nProbe >= 1 && nProbe <= mt.nCenters, "1 <= nProbe <= nCenters")
@@ -221,27 +214,30 @@ object VectorIndex {
       .groupBy(col("cid")).agg(count(lit(1)).as("n_vectors"))
 
   /** The frozen model serving the CURRENT generation (the
-    * [[DataSkipping.VIndexFile]] sidecar), falling back to the legacy
-    * root-level file for pre-generation-model indexes. Fails loudly
-    * if `path` holds neither.
+    * [[DataSkipping.VIndexFile]] sidecar). Fails loudly if `path`
+    * holds none.
     */
-  def meta(spark: SparkSession, path: String): Meta = {
+  def meta(spark: SparkSession, path: String): Meta =
+    metaOption(spark, path).getOrElse(throw new IllegalArgumentException(
+      s"no vector index at $path (no ${DataSkipping.VIndexFile} " +
+        "generation sidecar)"))
+
+  /** [[meta]], or None when `path` holds no index — an index whose
+    * model still sits in the root-level [[MetaFile]] is refused.
+    */
+  def metaOption(spark: SparkSession, path: String): Option[Meta] = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     DataSkipping.readSidecarIn(fs,
         DataSkipping.manifestDirOf(fs, path), DataSkipping.VIndexFile)
       .map(parseMeta(_, path))
-      .getOrElse {
-        val p = new Path(path, MetaFile)
-        require(fs.exists(p), s"no vector index at $path (no " +
-          s"${DataSkipping.VIndexFile} generation sidecar or legacy $MetaFile)")
-        val in = fs.open(p)
-        val text =
-          try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-            java.nio.charset.StandardCharsets.UTF_8)
-          finally in.close()
-        parseMeta(text, path)
-      }
+      .orElse { refuseRootModel(fs, path); None }
   }
+
+  private def refuseRootModel(fs: org.apache.hadoop.fs.FileSystem,
+      path: String): Unit =
+    if (fs.exists(new Path(path, MetaFile)))
+      DataSkipping.refuseLegacyLayout(path,
+        s"root-level $MetaFile vector-index model (no generation sidecar)")
 
   /** The model that served VERSION `v` — paired with
     * `readSkippingAt(path, v)` this is a consistent historical index
@@ -254,18 +250,9 @@ object VectorIndex {
     DataSkipping.readSidecarIn(fs, gen, DataSkipping.VIndexFile)
       .map(parseMeta(_, path))
       .getOrElse {
-        // a retained pre-model generation of a since-rebuilt index
-        // has no model of its own; the legacy root file is the only
-        // candidate — loud failure otherwise
-        val p = new Path(path, MetaFile)
-        require(fs.exists(p),
+        refuseRootModel(fs, path)
+        throw new IllegalArgumentException(
           s"version $version of $path carries no index model")
-        val in = fs.open(p)
-        val text =
-          try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-            java.nio.charset.StandardCharsets.UTF_8)
-          finally in.close()
-        parseMeta(text, path)
       }
   }
 

@@ -32,9 +32,9 @@ object StatsTableSink {
     * for an existing STATS table (left untouched) — but a directory
     * that holds files WITHOUT a schema sidecar is refused loudly:
     * bootstrapping runs writeWithStats, whose overwrite would
-    * destroy whatever lives there (a raw parquet dataset, a legacy
-    * pre-sidecar stats table). Convert such tables explicitly with
-    * [[DataSkipping.writeWithStats]] over their read-back contents.
+    * destroy whatever lives there (a raw parquet dataset). Convert
+    * such a dataset explicitly with [[DataSkipping.writeWithStats]]
+    * over its read-back contents.
     *
     * FIRST-TIME bootstrap is serialized by an exclusive-create
     * sentinel NEXT TO the table dir (inside it would be destroyed by

@@ -312,7 +312,7 @@ class CatalogSpec extends SparkSpec {
         case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
           l.relation
       }.get
-      val live = DataSkipping.tableSizeInBytes(s, t).get
+      val live = DataSkipping.tableSizeInBytes(s, t)
       assert(live > 0L && rel.sizeInBytes === live,
         s"GraftRelation must report the manifest's live bytes, got " +
           s"${rel.sizeInBytes} vs $live")
@@ -338,16 +338,16 @@ class CatalogSpec extends SparkSpec {
     val t = s"${tmpDir("graft_cat8")}/tbl"
     DataSkipping.writeWithStats(
       (0L until 1000L).map(i => (i, s"v$i")).toDF("id", "v"), t, Seq("id"))
-    val s0 = DataSkipping.tableSizeInBytes(s, t).get
+    val s0 = DataSkipping.tableSizeInBytes(s, t)
     assert(s0 > 0L)
     DataSkipping.appendWithStats(
       (1000L until 2000L).map(i => (i, s"v$i")).toDF("id", "v"), t, Seq("id"))
-    val s1 = DataSkipping.tableSizeInBytes(s, t).get
+    val s1 = DataSkipping.tableSizeInBytes(s, t)
     assert(s1 > s0, s"append must grow the live size ($s0 -> $s1)")
     // merge-on-read DELETE: file bytes unchanged, live size discounts
     // by the dead-row fraction
     DataSkipping.deleteWhereDV(s, t, col("id") < 1000L)
-    val s2 = DataSkipping.tableSizeInBytes(s, t).get
+    val s2 = DataSkipping.tableSizeInBytes(s, t)
     assert(s2 < s1 && s2 > 0L,
       s"DV delete must discount the live size ($s1 -> $s2)")
     // a fresh relation instance over the same path serves the new size
@@ -355,7 +355,7 @@ class CatalogSpec extends SparkSpec {
     assert(rel.sizeInBytes === s2)
     // copy-on-write delete shrinks real bytes too
     DataSkipping.deleteWhere(s, t, col("id") >= 1500L)
-    val s3 = DataSkipping.tableSizeInBytes(s, t).get
+    val s3 = DataSkipping.tableSizeInBytes(s, t)
     assert(s3 < s2, s"CoW delete must shrink the live size ($s2 -> $s3)")
   }
 }

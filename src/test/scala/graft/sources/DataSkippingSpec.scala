@@ -141,7 +141,7 @@ class DataSkippingSpec extends SparkSpec {
     assert(DataSkipping.readSkipping(s, dir, col("id").isin()).count() === 0)
   }
 
-  test("null-count stats prune IS NULL / IS NOT NULL; legacy manifests append compatibly and upgrade via compact") {
+  test("null-count stats prune IS NULL / IS NOT NULL") {
     val s = spark
     import s.implicits._
     val dir = tmp()
@@ -162,52 +162,110 @@ class DataSkippingSpec extends SparkSpec {
     assert(keptNotNull.size < all.size,
       s"IS NOT NULL must drop all-null files: $keptNotNull")
     assert(DataSkipping.readSkipping(s, dir, col("v").isNotNull).count() === 800)
+  }
 
-    // LEGACY table (pre-generation flat manifest, no null counts, no
-    // feature flag): appends must emit the legacy shape — a
-    // mixed-schema manifest mis-prunes. Hand-built, since
-    // writeWithStats now always produces a versioned manifest.
-    val legacy = tmp()
-    (0L until 100L).map(i => (i, i)).toDF("id", "v").repartitionByRange(2, col("id"))
-      .write.mode("overwrite").parquet(legacy)
-    val statsDir = s"$legacy/${DataSkipping.StatsDir}"
-    s.read.parquet(legacy).select(col("*"), col("_metadata"))
-      .groupBy(col("_metadata.file_path").as("file"))
-      .agg(min("id").as("min_id"), max("id").as("max_id"),
-        count(lit(1)).as("n_rows"),
-        max(col("_metadata.file_size")).as("file_size"),
-        max(unix_millis(col("_metadata.file_modification_time"))).as("mod_time"))
-      .coalesce(1).write.parquet(statsDir)
-    val fs = new org.apache.hadoop.fs.Path(legacy)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(statsDir, DataSkipping.SchemaFile), true)
-    out.write(s.read.parquet(legacy).schema.json.getBytes("UTF-8")); out.close()
-    val out2 = fs.create(new org.apache.hadoop.fs.Path(statsDir, DataSkipping.StatsColsFile), true)
-    out2.write("id".getBytes("UTF-8")); out2.close()
+  test("legacy layouts are refused by name and left untouched; an empty path still bootstraps") {
+    val s = spark
+    import s.implicits._
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(tmp()).getFileSystem(s.sparkContext.hadoopConfiguration)
+    def put(p: Path, body: String): Unit = {
+      val out = fs.create(p, true)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+    }
+    def rows(lo: Long, hi: Long) = (lo until hi).map(i => (i, i)).toDF("id", "v")
+    // pre-generation flat manifest parts written straight into `dir`
+    def flatManifest(table: String, dir: String): Unit = {
+      s.read.parquet(table).select(col("*"), col("_metadata"))
+        .groupBy(col("_metadata.file_path").as("file"))
+        .agg(min("id").as("min_id"), max("id").as("max_id"),
+          count(lit(1)).as("n_rows"),
+          max(col("_metadata.file_size")).as("file_size"),
+          max(unix_millis(col("_metadata.file_modification_time"))).as("mod_time"))
+        .coalesce(1).write.parquet(dir)
+      put(new Path(dir, DataSkipping.SchemaFile), s.read.parquet(table).schema.json)
+      put(new Path(dir, DataSkipping.StatsColsFile), "id")
+    }
+    def listing(root: String): Seq[(String, Long)] = {
+      val it = fs.listFiles(new Path(root), true)
+      val b = Seq.newBuilder[(String, Long)]
+      while (it.hasNext) { val f = it.next(); b += f.getPath.toString -> f.getLen }
+      b.result().sorted
+    }
+    def refused(root: String, layout: String)(ops: (String, () => Any)*): Unit = {
+      val before = listing(root)
+      ops.foreach { case (name, op) =>
+        val e = intercept[IllegalStateException](op())
+        assert(e.getMessage.contains(layout), s"$name: ${e.getMessage}")
+        assert(listing(root) === before, s"$name changed files under $root")
+      }
+    }
+    def tableOps(t: String): Seq[(String, () => Any)] = Seq(
+      "read" -> (() => DataSkipping.readSkipping(s, t, lit(true)).count()),
+      "append" -> (() => DataSkipping.appendWithStats(rows(100L, 150L), t, Seq("id"))),
+      "compactTable" -> (() => DataSkipping.compactTable(s, t, retentionMs = 0L)))
 
-    DataSkipping.appendWithStats(
-      (100L until 150L).map(i => (i, i)).toDF("id", "v"), legacy, Seq("id"))
-    assert(!DataSkipping.readManifest(s, legacy).columns.contains("nulls_id"),
-      "append to a legacy manifest must not introduce null-count columns")
-    assert(DataSkipping.readSkipping(s, legacy, lit(true)).count() === 150)
-    // ...and value pruning still works without the feature
-    assert(DataSkipping.readSkipping(s, legacy, col("id") < 50L).count() === 50)
+    // flat manifest parts under _graft_stats, no generation
+    val flat = tmp()
+    rows(0L, 100L).repartitionByRange(2, col("id")).write.mode("overwrite").parquet(flat)
+    flatManifest(flat, s"$flat/${DataSkipping.StatsDir}")
+    refused(flat, "flat manifest")(tableOps(flat): _*)
 
-    // compactTable MIGRATES the legacy flat manifest to a committed
-    // generation and upgrades it to the nulls feature
-    val n = DataSkipping.compactTable(s, legacy, targetFileBytes = 1L << 30,
-      retentionMs = 0L)
-    assert(n > 0)
-    assert(DataSkipping.manifestDir(s, legacy).contains("/v0"),
-      "compaction must migrate a flat manifest to generation v0")
-    assert(DataSkipping.readManifest(s, legacy).columns.contains("nulls_id"),
-      "compaction must upgrade a legacy manifest to null-count stats")
-    assert(DataSkipping.readSkipping(s, legacy,
-      col("id").isNotNull).count() === 150)
-    // retention-0 vacuum reclaimed the migrated flat manifest files
-    assert(!fs.listStatus(new org.apache.hadoop.fs.Path(statsDir))
-      .exists(f => f.isFile && f.getPath.getName.endsWith(".parquet")),
-      "migrated flat manifest parts must be vacuumed at retention 0")
+    // a torn pre-generation swap: the built swap dir, no stats dir
+    val torn = tmp()
+    rows(0L, 100L).repartitionByRange(2, col("id")).write.mode("overwrite").parquet(torn)
+    flatManifest(torn, s"$torn/${DataSkipping.SwapPrefix}0")
+    refused(torn, "torn stats swap")(tableOps(torn): _*)
+
+    // a committed generation without its manifest-schema sidecar
+    val noSchema = tmp()
+    DataSkipping.writeWithStats(rows(0L, 100L), noSchema, Seq("id"))
+    fs.delete(new Path(DataSkipping.manifestDir(s, noSchema),
+      DataSkipping.ManifestSchemaFile), false)
+    refused(noSchema, s"generation without a ${DataSkipping.ManifestSchemaFile} sidecar")(
+      tableOps(noSchema): _*)
+
+    // a committed generation without per-file null counts
+    val noNulls = tmp()
+    DataSkipping.writeWithStats(rows(0L, 100L), noNulls, Seq("id"))
+    put(new Path(DataSkipping.manifestDir(s, noNulls), DataSkipping.FeaturesFile), "")
+    refused(noNulls, "without per-file null counts")(tableOps(noNulls): _*)
+
+    // a vector index whose model sits in the root-level file instead
+    // of the generation sidecar
+    val idx = s"${tmp()}/idx"
+    val corpus = (0 until 32).map(i =>
+      (i.toLong, Array.tabulate(4)(j => ((i * 7 + j * 3) % 11).toFloat)))
+      .toDF("vec_id", "embedding")
+    VectorIndex.build(s, corpus, "vec_id", "embedding", idx, nCenters = 2,
+      m = 2, ksub = 4, coarseSeedIds = Some(Seq(0L, 1L)),
+      pqSeedIds = Some(Seq(0L, 1L, 2L, 3L)))
+    val model = new Path(DataSkipping.manifestDir(s, idx), DataSkipping.VIndexFile)
+    val modelText = DataSkipping.readSidecarIn(fs, model.getParent.toString,
+      DataSkipping.VIndexFile).get
+    fs.delete(model, false)
+    put(new Path(idx, VectorIndex.MetaFile), modelText)
+    refused(idx, s"root-level ${VectorIndex.MetaFile}")(
+      "read" -> (() => VectorIndex.search(s, corpus.limit(2), idx, k = 2, nProbe = 1)),
+      "append" -> (() => VectorIndex.append(s, corpus.limit(2), idx)),
+      "show indexes" -> (() => VectorIndex.metaOption(s, idx)))
+
+    // a stats dir holding only an UNCOMMITTED generation is no table —
+    // never read as a flat manifest
+    val uncommitted = tmp()
+    DataSkipping.writeWithStats(rows(0L, 100L), uncommitted, Seq("id"))
+    fs.delete(new Path(DataSkipping.manifestDir(s, uncommitted),
+      DataSkipping.CommitFile), false)
+    val e = intercept[IllegalArgumentException](
+      DataSkipping.readSkipping(s, uncommitted, lit(true)).count())
+    assert(e.getMessage.contains("not a committed graft generation"), e.getMessage)
+
+    // an empty path is "not a table yet": the streaming bootstrap
+    // still creates v0
+    val fresh = s"${tmp()}/fresh"
+    graft.streaming.StatsTableSink.ensureTable(s, fresh, rows(0L, 0L).schema, Seq("id"))
+    assert(DataSkipping.manifestDir(s, fresh).endsWith("/v0"))
+    assert(DataSkipping.readSkipping(s, fresh, lit(true)).count() === 0L)
   }
 
   test("type-coerced literals (Cast-wrapped by the analyzer) still prune") {
@@ -315,21 +373,21 @@ class DataSkippingSpec extends SparkSpec {
     val fakes = s.range(9984).select(
       concat(lit(s"file:$dir/fake-"), col("id"), lit(".parquet")).as("file"),
       (col("id") + 1000000L).as("min_id"), (col("id") + 1000000L).as("max_id"),
-      lit(1L).as("n_rows"), lit(123L).as("file_size"), lit(0L).as("mod_time"))
-    manifest.select("file", "min_id", "max_id", "n_rows", "file_size", "mod_time")
-      .union(fakes)
+      lit(0L).as("nulls_id"), lit(1L).as("n_rows"), lit(123L).as("file_size"),
+      lit(0L).as("mod_time"))
+    manifest.unionByName(fakes)
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/__newstats")
-    // swap the inflated manifest in (keep the schema sidecar)
+    // swap the inflated part in for the committed generation's parts
+    // (every sidecar stays)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/${DataSkipping.StatsDir}"), true)
-    fs.rename(new org.apache.hadoop.fs.Path(s"$dir/__newstats"),
-      new org.apache.hadoop.fs.Path(s"$dir/${DataSkipping.StatsDir}"))
-    val schemaOut = fs.create(new org.apache.hadoop.fs.Path(
-      s"$dir/${DataSkipping.StatsDir}/${DataSkipping.SchemaFile}"), true)
-    schemaOut.write(new org.apache.spark.sql.types.StructType()
-      .add("id", "bigint", nullable = false).json.getBytes("UTF-8"))
-    schemaOut.close()
+    val gen = new org.apache.hadoop.fs.Path(DataSkipping.manifestDir(s, dir))
+    def parts(d: org.apache.hadoop.fs.Path) = fs.listStatus(d)
+      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getPath)
+    parts(gen).foreach(fs.delete(_, false))
+    parts(new org.apache.hadoop.fs.Path(s"$dir/__newstats"))
+      .foreach(p => fs.rename(p, new org.apache.hadoop.fs.Path(gen, p.getName)))
+    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/__newstats"), true)
 
     val df = DataSkipping.readSkipping(s, dir, col("id") >= 100L && col("id") < 300L)
     // none of the 9,984 synthetic paths may appear anywhere in the

@@ -82,11 +82,16 @@ class WriteStatsParitySpec extends SparkSpec {
       DataSkipping.statusScan(spark, path,
         StructType(data.schema.map(_.copy(nullable = true))),
         DataSkipping.statusesFor(fs, moved)),
-      statsCols, withNulls = true, bloom = bloom)
+      statsCols, bloom = bloom)
     val local = DataSkipping.statsRowsFromWrite(fs, path, moved, statsCols,
       Nil, bloom.get._1, tracked.get, frame.schema)
     assert(local.isDefined, "assembly must cover every moved file")
     assertRowsMatch(frame.collect().toSeq, local.get, frame.schema)
+    // two tracker entries under one relative path: ambiguous, so the
+    // assembly declines and the caller re-scans
+    val collided = tracked.get :+ tracked.get.head
+    assert(DataSkipping.statsRowsFromWrite(fs, path, moved, statsCols, Nil,
+      bloom.get._1, collided, frame.schema).isEmpty)
   }
 
   test("partitioned tracked write: partition values, empty-string null " +
@@ -117,7 +122,7 @@ class WriteStatsParitySpec extends SparkSpec {
     val frame = DataSkipping.statsFor(
       DataSkipping.partAwareStatusScanCols(spark, path, partCols, schema,
         DataSkipping.statusesFor(fs, moved)),
-      statsCols, withNulls = true, bloom = bloom)
+      statsCols, bloom = bloom)
     val local = DataSkipping.statsRowsFromWrite(fs, path, moved, statsCols,
       partCols, bloom.get._1, tracked.get, frame.schema)
     assert(local.isDefined)

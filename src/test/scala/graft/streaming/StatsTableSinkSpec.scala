@@ -265,7 +265,7 @@ class StatsTableSinkSpec extends SparkSpec {
     assert(DataSkipping.readSkipping(s, table, lit(true)).count() === 100)
   }
 
-  test("a torn manifest swap (crash between delete and rename) is completed on next access") {
+  test("a torn pre-generation manifest swap is refused and left on disk") {
     val s = spark
     import s.implicits._
     import java.nio.file.{Files, Paths}
@@ -273,18 +273,22 @@ class StatsTableSinkSpec extends SparkSpec {
     StatsTableSink.ensureTable(s, table, schema, Seq("id"))
     DataSkipping.appendWithStats((0L until 100L).map(i => (i, i)).toDF("id", "v"),
       table, Seq("id"), commitName = Some("commit-batchA"))
-    // fake the torn swap: the fully-built replacement dir exists
-    // under the hidden swap name, the live stats dir is gone
+    // fake the torn swap of the pre-generation layout: the built
+    // replacement dir sits under the hidden swap name, the live stats
+    // dir is gone
     val statsDir = Paths.get(table, DataSkipping.StatsDir)
     val swap = Paths.get(table, ".stats-swap-torn")
     Files.move(statsDir, swap)
-    assert(!Files.exists(statsDir))
-    // any manifest-touching entry completes the swap first
-    assert(DataSkipping.readSkipping(s, table, lit(true)).count() === 100)
-    assert(Files.exists(statsDir) && !Files.exists(swap))
-    // markers survived the repair: the replay still short-circuits
-    assert(!DataSkipping.appendWithStats((0L until 100L).map(i => (i, i)).toDF("id", "v"),
-      table, Seq("id"), commitName = Some("commit-batchA")))
+    // every manifest-touching entry refuses by name instead of
+    // repairing, and moves nothing
+    val read = intercept[IllegalStateException](
+      DataSkipping.readSkipping(s, table, lit(true)).count())
+    assert(read.getMessage.contains("torn stats swap"), read.getMessage)
+    val append = intercept[IllegalStateException](
+      DataSkipping.appendWithStats((0L until 100L).map(i => (i, i)).toDF("id", "v"),
+        table, Seq("id"), commitName = Some("commit-batchA")))
+    assert(append.getMessage.contains("torn stats swap"), append.getMessage)
+    assert(!Files.exists(statsDir) && Files.exists(swap))
   }
 
   test("a no-op compact still vacuums orphans; hidden/illegal commit names are rejected") {
