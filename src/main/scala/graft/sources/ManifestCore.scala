@@ -259,6 +259,12 @@ private[sources] trait ManifestCore { this: DataSkipping.type =>
       manifestCacheBytes.set(0L)
     }
 
+  /** Test/diagnostic hook: the dirs the cached parts are keyed under. */
+  private[sources] def manifestCacheDirs(): Set[String] =
+    manifestPartCache.synchronized {
+      manifestPartCache.keySet().toArray.map(_.toString.takeWhile(_ != '#')).toSet
+    }
+
   /** Drop every cached part keyed under `dir` — called when a
     * generation directory is physically DELETED (vacuum). Keys are
     * content-addressed so stale service was never possible; this is
@@ -267,9 +273,9 @@ private[sources] trait ManifestCore { this: DataSkipping.type =>
   private[sources] def dropManifestCacheUnder(dir: String): Unit =
     manifestPartCache.synchronized {
       // scheme-tolerant: keys carry the dir string as the reader saw
-      // it (possibly `file:/...`-qualified); the vacuum hands the raw
-      // path — compare with schemes stripped so hygiene still fires
-      def bare(s: String): String = s.stripPrefix("file:")
+      // it (raw or scheme-qualified, `file:/`, `file:///`, `hdfs://`);
+      // compare bare paths so hygiene fires for every spelling
+      def bare(s: String): String = new Path(s).toUri.getPath
       val prefix = bare(dir)
       val it = manifestPartCache.entrySet().iterator()
       while (it.hasNext) {

@@ -1249,335 +1249,57 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
     } finally src.unpersist()
   }
 
-  /** Keyed MERGE DELETE (the Delta `MERGE ... WHEN MATCHED THEN
-    * DELETE` arm): drop every target row whose key appears in
-    * `keys` — the CDC-tombstone apply path, where the delete set is
-    * a DATAFRAME of keys, not a predicate (a predicate form would
-    * need an O(batch) IN literal; the frame rides joins). Same
-    * prune→touch→rewrite shape as [[mergeUpsert]]: the target
-    * manifest prunes by the keys' min/max envelope, one semi-join
-    * scan finds the files actually holding matched rows, only those
-    * rewrite (anti-join), everything else carries verbatim. Keys
-    * absent from the target are no-ops (delete is idempotent).
-    * CDF records the dropped rows as `delete`; `txn` gives the same
-    * idempotent-writer skip as [[mergeUpsert]]. Returns the number
-    * of rows deleted.
+  /** The table schema a [[mergeUpsert]] source must match, checked —
+    * and with `mergeSchema` (the Delta autoMerge analog) widened —
+    * ONCE before the keyed-MERGE kernel runs. Without evolution the
+    * source carries exactly the table's columns (any order). With it
+    * the source may ADD columns: the table widens sidecars-first (the
+    * append-evolution crash order: a crash after the sidecar write
+    * leaves a widened table whose old files read as nulls —
+    * consistent), matched rows take the source's new values, and
+    * UNTOUCHED files are never rewritten (their rows surface nulls
+    * for the new columns from the parquet reader, zero data movement
+    * — the 100 TB point). Shared columns never retype; the
+    * tracked-stats set is unchanged (track a new column via append
+    * evolution or a stats rewrite). Partitioned tables evolve too:
+    * a new field is by definition not a partition column.
     */
-  private[sources] def mergeDeletePhys(spark: SparkSession, path: String, keys: DataFrame,
-      keyCols: Seq[String],
-      vacuum: Boolean = true,
-      retentionMs: Long = RetentionDefaultMs,
-      markerRetentionMs: Long = RetentionDefaultMs,
-      txn: Option[(String, Long)] = None): Long =
-      withConcurrentRetry("mergeDelete") {
-    require(keyCols.nonEmpty, "mergeDelete needs at least one key column")
-    val opStart = System.currentTimeMillis()
+  private[sources] def mergeUpsertSchema(spark: SparkSession, path: String,
+      source: StructType, mergeSchema: Boolean): StructType = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dir = manifestDirOf(fs, path)
-    // partitioned tables merge-delete too (see replaceKeyed note)
-    val replayed = txn.exists { case (app, v) =>
-      readSidecarIn(fs, dir, TxnFile)
-        .flatMap(j => txnMapFromJson(j).get(app)).exists(_ >= v)
-    }
-    if (replayed) return 0L
-    val schema = tableSchemaIn(spark, path, dir)
-    keyCols.foreach(k => require(schema.fieldNames.contains(k),
-      s"key column $k is not in the table schema ${schema.simpleString}"))
-    val observed = listManifestNames(fs, dir)
-    val stats = readManifestPinned(spark, dir, observed)
-    val delKeys = keys.select(keyCols.map(col): _*).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // one action: emptiness + key envelope (guide §1.2)
-      val tracked = trackedCols(spark, dir)
-      val prunable = keyCols.filter(tracked)
-      val envAggs = Seq(count(lit(1)).as("__total")) ++
-        prunable.flatMap(k =>
-          Seq(min(col(k)).as(s"__lo_$k"), max(col(k)).as(s"__hi_$k")))
-      val env = delKeys.agg(envAggs.head, envAggs.tail: _*).head()
-      if (env.getLong(0) == 0L) {
-        if (vacuum) vacuumTable(spark, path, retentionMs)
-        return 0L
-      }
-      val skip: Column =
-        if (prunable.isEmpty) lit(true)
-        else prunable.zipWithIndex.map { case (k, i) =>
-          val lo = env.get(1 + 2 * i); val hi = env.get(1 + 2 * i + 1)
-          if (lo == null) lit(false)
-          else minC(k) <= lit(hi) && maxC(k) >= lit(lo)
-        }.reduce(_ && _)
-      val candStatuses = statusesOf(stats.filter(skip))
-      val dv = readDvIn(spark, dir)
-      val matched: Option[DataFrame] =
-        if (candStatuses.isEmpty) None
-        else Some(applyDv(partAwareStatusScan(spark, path, dir, schema, candStatuses), dv)
-          .select(keyCols.map(col) :+ col("_metadata.file_path").as("__file"): _*)
-          .join(delKeys, keyCols)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      try {
-        val touched: Seq[(String, Long)] = matched.fold(Seq.empty[(String, Long)])(
-          _.groupBy("__file").agg(count(lit(1)).as("__n"))
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq)
-        if (touched.isEmpty) {
-          if (vacuum) vacuumTable(spark, path, retentionMs)
-          return 0L
-        }
-        val files = touched.map(_._1)
-        val touchedSet = files.toSet
-        val cdf = cdfEnabled(fs, dir)
-        // shared persisted scan: rewrite + delete images scan once
-        val touchedScan = {
-          val base = applyDv(partAwareStatusScan(spark, path, dir, schema,
-            candStatuses.filter(s => touchedSet(s.getPath.toString))), dv)
-          if (cdf) base.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          else base
-        }
-        try {
-        val replacement = touchedScan.join(delKeys, keyCols, "left_anti")
-        val changes =
-          if (!cdf) None
-          else Some(touchedScan.join(delKeys, keyCols, "semi")
-            .withColumn(ChangeTypeCol, lit("delete")))
-        rewriteFiles(spark, fs, path, dir, stats, schema, files,
-          Some(replacement), vacuum, retentionMs, markerRetentionMs,
-          opStart, changes, op = "MERGE", txn = txn,
-          observedParts = Some(observed),
-          // read scope = the key-envelope prune: a winner-added file
-          // outside the source/key envelope can match no key, so a
-          // disjoint maintenance winner rebases instead of re-running
-          readSkip = Some(skip))
-        touched.map(_._2).sum
-        } finally if (cdf) touchedScan.unpersist()
-      } finally matched.foreach(_.unpersist())
-    } finally delKeys.unpersist()
-  }
-
-  /** Upsert MERGE (the Delta `MERGE ... WHEN MATCHED THEN UPDATE SET *
-    * WHEN NOT MATCHED THEN INSERT *` analog), copy-on-write on the
-    * target's files:
-    *
-    *  1. PRUNE: the target manifest keeps only files whose per-key
-    *     min/max ranges overlap the source's key envelope (one small
-    *     agg over the source) — at 100 TB a CDC batch touching one
-    *     day's keys prunes everything else at planning time.
-    *  2. TOUCH: one distributed semi-join of the candidate scan
-    *     against the source's distinct keys finds the files holding
-    *     at least one matched row; only (file, count) rows reach the
-    *     driver.
-    *  3. REWRITE: touched rows whose key matches the source are
-    *     dropped (anti-join) and EVERY source row is written as new
-    *     files — matched keys become updates, unmatched keys
-    *     inserts. Files without a matched row are carried into the
-    *     next generation verbatim.
-    *
-    * The generation commit snapshots the whole merge atomically
-    * (readers see none or all of it); removal-log / retention /
-    * time-travel semantics are [[compactTable]]'s. Source keys must
-    * be UNIQUE (checked — a key matching twice would make the merge
-    * order-dependent, the same error Delta MERGE raises); a target
-    * key duplicated across rows collapses to its single source row
-    * (update-all semantics). The source must carry exactly the
-    * table's columns (any order). Returns (matched source keys,
-    * inserted source keys).
-    *
-    * IDEMPOTENT WRITES (`txn = Some(appId -> version)`, the Delta
-    * `txnAppId`/`txnVersion` analog): if the table's [[txnVersion]]
-    * for `appId` is already >= `version`, the whole merge is SKIPPED
-    * (returns (0, 0)) — an at-least-once writer replaying a batch
-    * whose merge committed but whose own offset didn't cannot
-    * double-apply. On commit the stamp lands in the generation's
-    * [[TxnFile]] atomically with the merged rows and is carried
-    * forward by every later generation.
-    */
-  private[sources] def mergeUpsertPhys(spark: SparkSession, path: String, source: DataFrame,
-      keyCols: Seq[String],
-      vacuum: Boolean = true,
-      retentionMs: Long = RetentionDefaultMs,
-      markerRetentionMs: Long = RetentionDefaultMs,
-      txn: Option[(String, Long)] = None,
-      mergeSchema: Boolean = false): (Long, Long) =
-      withConcurrentRetry("mergeUpsert") {
-    require(keyCols.nonEmpty, "mergeUpsert needs at least one key column")
-    val opStart = System.currentTimeMillis()
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = manifestDirOf(fs, path)
-    // merge evolution works on PARTITIONED tables too (r14): the
-    // widened schema's new fields are by definition not partition
-    // columns (those are stored), the touched scans are part-aware,
-    // and the rewrite stages partitionBy — same machinery as append
-    // evolution
-    val replayed = txn.exists { case (app, v) =>
-      readSidecarIn(fs, dir, TxnFile)
-        .flatMap(j => txnMapFromJson(j).get(app)).exists(_ >= v)
-    }
-    if (replayed) return (0L, 0L)
     val schema0 = tableSchemaIn(spark, path, dir)
-    keyCols.foreach(k => require(schema0.fieldNames.contains(k),
-      s"key column $k is not in the table schema ${schema0.simpleString}"))
-    // SCHEMA EVOLUTION on merge (`mergeSchema = true`, the Delta
-    // autoMerge analog): the source may ADD columns — the table
-    // widens sidecars-first (the append-evolution crash order: a
-    // crash after the sidecar write leaves a widened table whose
-    // old files read as nulls — consistent), matched target rows
-    // take the source's new values, UNTOUCHED files are never
-    // rewritten (their rows surface nulls for the new columns from
-    // the parquet reader, zero data movement — the 100 TB point).
-    // Shared columns never retype; the tracked-stats set is
-    // unchanged (track a new column via append evolution or a
-    // stats rewrite).
-    val newFields = source.schema
-      .filterNot(f => schema0.fieldNames.contains(f.name))
-    val schema: StructType =
-      if (!mergeSchema) {
-        require(
-          source.schema.map(f => (f.name, f.dataType)).toSet ==
-            schema0.map(f => (f.name, f.dataType)).toSet,
-          s"source schema ${source.schema.simpleString} must carry exactly the " +
-            s"table's columns ${schema0.simpleString} (any order); pass " +
-            "mergeSchema = true to add columns")
-        schema0
-      } else {
-        schema0.foreach { f =>
-          source.schema.find(_.name == f.name) match {
-            case Some(b) => require(b.dataType == f.dataType,
-              s"column ${f.name}: source type ${b.dataType.simpleString} must " +
-                s"match stored ${f.dataType.simpleString} — evolution adds " +
-                "columns, never retypes")
-            case None => require(false,
-              s"merge source must carry every stored column; missing ${f.name}")
-          }
-        }
-        if (newFields.isEmpty) schema0
-        else {
-          require(colMapIn(fs, dir).isEmpty,
-            "merge schema evolution on a column-mapped table is not " +
-              "supported — evolve via appendWithStats(mergeSchema = true) " +
-              "first (it allocates collision-free physical names), then merge")
-          val widened = StructType(schema0.fields ++
-            newFields.map(_.copy(nullable = true)))
-          // tracked set unchanged — preserve the stats-cols FILE
-          // order verbatim (manifest part columns are keyed to it)
-          val statsColsInOrder = statsColsInOrderOf(spark, dir)
-          writeSidecars(spark, dir, widened, statsColsInOrder,
-            manifestFeatures(fs, dir))
-          widened
-        }
+    if (!mergeSchema) {
+      require(
+        source.map(f => (f.name, f.dataType)).toSet ==
+          schema0.map(f => (f.name, f.dataType)).toSet,
+        s"source schema ${source.simpleString} must carry exactly the " +
+          s"table's columns ${schema0.simpleString} (any order); pass " +
+          "mergeSchema = true to add columns")
+      return schema0
+    }
+    schema0.foreach { f =>
+      source.find(_.name == f.name) match {
+        case Some(b) => require(b.dataType == f.dataType,
+          s"column ${f.name}: source type ${b.dataType.simpleString} must " +
+            s"match stored ${f.dataType.simpleString} — evolution adds " +
+            "columns, never retypes")
+        case None => require(false,
+          s"merge source must carry every stored column; missing ${f.name}")
       }
-    val observed = listManifestNames(fs, dir)
-    val stats = readManifestPinned(spark, dir, observed)
-    // the source is read several times below (key envelope, distinct
-    // keys, counts, the final union) — materialize it once; merge
-    // sources are CDC-batch-sized, not table-sized
-    val src = source.select(schema.fieldNames.map(col).toSeq: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // ONE action answers source count, key uniqueness, and the
-      // per-key envelope (previously three separate jobs over the
-      // persisted source — guide §1.2: fewer actions). The duplicate
-      // EXAMPLE is only computed on the failure path.
-      val tracked = trackedCols(spark, dir)
-      val prunable = keyCols.filter(tracked)
-      val perKey = src.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("__n"))
-      val sumAggs = Seq(sum(col("__n")).as("__total"),
-        max(col("__n")).as("__maxn")) ++
-        prunable.flatMap(k =>
-          Seq(min(col(k)).as(s"__lo_$k"), max(col(k)).as(s"__hi_$k")))
-      val env = perKey.agg(sumAggs.head, sumAggs.tail: _*).head()
-      val srcCount = if (env.isNullAt(0)) 0L else env.getLong(0)
-      if (srcCount == 0L) return (0L, 0L)
-      if (env.getLong(1) > 1L) {
-        val dup = perKey.filter(col("__n") > 1).limit(1).collect()
-        require(dup.isEmpty,
-          s"source keys must be unique on (${keyCols.mkString(",")}) — " +
-            s"duplicate: ${dup.headOption.getOrElse("")}")
-      }
-      // 1. PRUNE — per-key range overlap against the source envelope.
-      // Untracked key columns contribute no constraint (all files stay
-      // candidates — correct, just unpruned). An all-null key column
-      // never matches any target row (SQL equality), so its term is
-      // FALSE; a file with null stats for a key (evolved/all-null)
-      // yields a NULL term and is correctly dropped from candidates.
-      val skip: Column =
-        if (prunable.isEmpty) lit(true)
-        else prunable.zipWithIndex.map { case (k, i) =>
-          val lo = env.get(2 + 2 * i); val hi = env.get(2 + 2 * i + 1)
-          if (lo == null) lit(false)
-          else minC(k) <= lit(hi) && maxC(k) >= lit(lo)
-        }.reduce(_ && _)
-      val candStatuses = statusesOf(stats.filter(skip))
-      val dv = readDvIn(spark, dir)
-      // 2. TOUCH — ONE scan of the candidates, inner-joined to the
-      // (unique, so duplication-free) source keys; the narrow matched
-      // frame (keys + file) is kept for BOTH aggregates — per-file
-      // match counts and the global matched-key count — instead of
-      // scanning the touched files a second time
-      val srcKeys = src.select(keyCols.map(col): _*).distinct()
-      val matched: Option[DataFrame] =
-        if (candStatuses.isEmpty) None
-        else Some(applyDv(partAwareStatusScan(spark, path, dir, schema, candStatuses), dv)
-          .select(keyCols.map(col) :+ col("_metadata.file_path").as("__file"): _*)
-          .join(srcKeys, keyCols)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      try {
-        val touched: Seq[(String, Long)] = matched.fold(Seq.empty[(String, Long)])(
-          _.groupBy("__file").agg(count(lit(1)).as("__n"))
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq)
-        val files = touched.map(_._1)
-        val touchedSet = files.toSet
-        val cdf = cdfEnabled(fs, dir)
-        // the touched rows feed the rewrite AND (with the feed on) the
-        // preimages — persist so the files scan once, not twice
-        val touchedScan = {
-          val base = partAwareStatusScan(spark, path, dir, schema,
-            candStatuses.filter(s => touchedSet(s.getPath.toString)))
-          if (cdf && files.nonEmpty)
-            base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          else base
-        }
-        try {
-        val matchedKeys = matched.fold(0L)(
-          _.select(keyCols.map(col): _*).distinct().count())
-        // 3. REWRITE
-        val replacement =
-          if (files.isEmpty) src
-          else touchedScan
-            .join(srcKeys, keyCols, "left_anti")
-            .unionByName(src)
-        // CDF: matched target rows are the update preimages (every
-        // duplicate target row that collapses is a preimage — each
-        // was replaced), matched source rows the postimages,
-        // unmatched source rows plain inserts
-        val changes =
-          if (!cdf) None
-          else {
-            val matchedKeyDf = matched.map(
-              _.select(keyCols.map(col): _*).distinct())
-            val pre =
-              if (files.isEmpty) src.limit(0)
-              else touchedScan
-                .join(srcKeys, keyCols, "semi")
-            val post = matchedKeyDf.fold(src.limit(0))(
-              k => src.join(k, keyCols, "semi"))
-            val ins = matchedKeyDf.fold(src)(
-              k => src.join(k, keyCols, "left_anti"))
-            Some(pre.withColumn(ChangeTypeCol, lit("update_preimage"))
-              .unionByName(post.withColumn(ChangeTypeCol, lit("update_postimage")))
-              .unionByName(ins.withColumn(ChangeTypeCol, lit("insert"))))
-          }
-        rewriteFiles(spark, fs, path, dir, stats, schema, files, Some(replacement),
-          vacuum, retentionMs, markerRetentionMs, opStart, changes,
-          op = "MERGE", txn = txn,
-          observedParts = Some(observed),
-          // read scope = the key-envelope prune: a winner-added file
-          // outside the source/key envelope can match no key, so a
-          // disjoint maintenance winner rebases instead of re-running
-          readSkip = Some(skip))
-        (matchedKeys, srcCount - matchedKeys)
-        } finally if (cdf && files.nonEmpty) touchedScan.unpersist()
-      } finally matched.foreach(_.unpersist())
-    } finally src.unpersist()
+    }
+    val newFields = source.filterNot(f => schema0.fieldNames.contains(f.name))
+    if (newFields.isEmpty) return schema0
+    require(colMapIn(fs, dir).isEmpty,
+      "merge schema evolution on a column-mapped table is not " +
+        "supported — evolve via appendWithStats(mergeSchema = true) " +
+        "first (it allocates collision-free physical names), then merge")
+    val widened = StructType(schema0.fields ++ newFields.map(_.copy(nullable = true)))
+    // tracked set unchanged — preserve the stats-cols FILE order
+    // verbatim (manifest part columns are keyed to it)
+    writeSidecars(spark, dir, widened, statsColsInOrderOf(spark, dir),
+      manifestFeatures(fs, dir))
+    widened
   }
 
   /** FULL CONDITIONAL MERGE — the Delta `MERGE INTO` with the
@@ -1587,21 +1309,51 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
     * row), and `WHEN NOT MATCHED BY SOURCE [AND cond] THEN
     * UPDATE | DELETE`. The ON condition is equi-key on `keyCols`
     * (the scalable case; source keys must be unique so each matched
-    * target row pairs one source row). Matched rows take the FIRST
-    * clause whose condition holds; rows matching no clause carry
-    * unchanged and do NOT force their file to rewrite.
+    * target row pairs one source row — the error Delta MERGE raises;
+    * a target key stored in several rows updates or deletes each of
+    * them). Matched rows take the FIRST clause whose condition holds;
+    * rows matching no clause carry unchanged and do NOT force their
+    * file to rewrite. The one keyed-MERGE kernel: [[mergeUpsert]],
+    * [[mergeDelete]] and the streaming CDC sink are clause sets over
+    * it.
     *
-    * Same copy-on-write shape as [[mergeUpsertPhys]]: candidates =
-    * key-envelope-pruned files UNION (when by-source clauses exist)
-    * files passing the stats rewrite of the by-source conditions'
-    * OR (an unprunable by-source condition keeps every file a
-    * candidate — Delta's cost too: "not matched by source" is a
-    * whole-table question); ONE candidate scan computes each row's
-    * action, only (file, action) rows reach the driver aggregated,
-    * and only files holding an acting row are rewritten. CDF records
-    * update pre/postimages, deletes and inserts; `txn` gives the
-    * Delta txnAppId/txnVersion idempotency. A merge where nothing
-    * acts commits no generation.
+    * Every source column stays visible to clause conditions and SET
+    * values as `s.<col>`, table column or not. The source must carry
+    * the key columns; only INSERT (and a SET reading them) needs
+    * every table column, so a key-only source drives a pure
+    * `WHEN MATCHED THEN DELETE`.
+    *
+    * Copy-on-write on the target's files:
+    *
+    *  1. PRUNE: candidates = files whose per-key min/max ranges
+    *     overlap the source's key envelope (one small agg over the
+    *     source — a CDC batch touching one day's keys prunes
+    *     everything else at planning time) UNION (when by-source
+    *     clauses exist) files passing the stats rewrite of the
+    *     by-source conditions' OR (an unprunable by-source condition
+    *     keeps every file a candidate — Delta's cost too: "not
+    *     matched by source" is a whole-table question).
+    *  2. PROBE: ONE candidate scan computes each row's action; only
+    *     (file, action) counts reach the driver, and only the rows
+    *     that matched a source key or act are persisted (the insert
+    *     anti-join needs just those keys).
+    *  3. REWRITE: only files holding an acting row are rewritten,
+    *     everything else carries into the next generation verbatim.
+    *
+    * The generation commit snapshots the whole merge atomically
+    * (readers see none or all of it); removal-log / retention /
+    * time-travel semantics are [[compactTable]]'s. CDF records update
+    * pre/postimages, deletes and inserts. A merge where nothing acts
+    * commits no generation.
+    *
+    * IDEMPOTENT WRITES (`txn = Some(appId -> version)`, the Delta
+    * `txnAppId`/`txnVersion` analog): if the table's [[txnVersion]]
+    * for `appId` is already >= `version`, the whole merge is SKIPPED
+    * (returns zeros) — an at-least-once writer replaying a batch
+    * whose merge committed but whose own offset didn't cannot
+    * double-apply. On commit the stamp lands in the generation's
+    * [[TxnFile]] atomically with the merged rows and is carried
+    * forward by every later generation.
     *
     * Returns (target rows updated, target rows deleted, source rows
     * inserted).
@@ -1646,16 +1398,23 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
         sys.error(s"SET column $c is not in the table schema"))
       case _ => ()
     }
+    keyCols.foreach(k => require(source.columns.contains(k),
+      s"merge source must carry key column $k"))
+    if (insertClauses.nonEmpty) schema.fieldNames.foreach(c =>
+      require(source.columns.contains(c),
+        s"INSERT needs every table column in the source; missing $c"))
     val observed = listManifestNames(fs, dir)
     val stats = readManifestPinned(spark, dir, observed)
-    val src = source.select(schema.fieldNames.map(col).toSeq: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // every source column is kept: clause conditions may read
+    // non-table columns (the CDC sink's delete marker)
+    val src = source.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // table-shaped empty frame for change-feed arms with no rows
+    val noRows = spark.createDataFrame(
+      java.util.Collections.emptyList[Row](), schema)
     try {
       // ONE action answers source count, key uniqueness, and the
-      // per-key envelope (previously three separate jobs over the
-      // persisted source — guide §1.2: fewer actions; the same fusion
-      // mergeUpsertPhys got in r18). The duplicate EXAMPLE is only
-      // computed on the failure path.
+      // per-key envelope (guide §1.2: fewer actions). The duplicate
+      // EXAMPLE is only computed on the failure path.
       val tracked = trackedCols(spark, dir)
       val nullsTracked = stats.columns.collect {
         case c if c.startsWith("nulls_") => c.drop(6) }.toSet
@@ -1754,17 +1513,21 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
           bySourceClauses.zipWithIndex.collect { case (_: BySourceDelete, i) => 101 + i }
 
       // PASS A: ONE candidate scan -> (target keys, file, action) for
-      // EVERY candidate row, persisted narrow. One collect over the
-      // acting rows' (file, action) groups answers both the per-action
-      // counts and the touched-file list (previously two jobs), and
-      // the insert probe's target-key set reads the SAME persisted
-      // frame instead of re-scanning every candidate file a second
-      // time (guide §1.2 / §2: fewer actions, fewer bytes scanned).
+      // the candidate rows that matched a source key or act,
+      // persisted narrow. One collect over the acting rows' (file,
+      // action) groups answers both the per-action counts and the
+      // touched-file list, and the insert probe's target-key set
+      // reads the SAME persisted frame instead of re-scanning every
+      // candidate file (guide §1.2 / §2: fewer actions, fewer bytes
+      // scanned). Rows that neither match nor act can change no
+      // count and no insert, so they are never cached.
       val probe =
         if (candStatuses.isEmpty) None
         else Some(joined(candStatuses)
+          .withColumn("__act", act)
+          .filter(matchedCol || col("__act") =!= 0)
           .select(keyCols.map(k => col(s"t.$k").as(k)) ++
-            Seq(col("__tfile"), act.as("__act")): _*)
+            Seq(col("__tfile"), col("__act")): _*)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       try {
         val fileActs: Seq[(String, Int, Long)] = probe.fold(
@@ -1783,19 +1546,24 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
 
         // unmatched source rows -> inserts (matched keys computed
         // from the candidates; the key envelope keeps every file that
-        // could hold a matching key, so the set is complete)
+        // could hold a matching key, so the set is complete). The
+        // anti-join needs no distinct target keys, and the rows are
+        // counted AND written, so they are persisted (source-sized)
+        // and the anti-join runs once
         val insertRows: Option[DataFrame] =
           if (insertClauses.isEmpty || srcCount == 0L) None
           else {
             val tgtKeys = probe.fold(
               src.limit(0).select(keyCols.map(col): _*))(
-              _.select(keyCols.map(col): _*).distinct())
+              _.select(keyCols.map(col): _*))
             val insCond = insertClauses.map(_.condition)
               .map(_.getOrElse(lit(true))).reduce(_ || _)
             Some(src.join(tgtKeys, keyCols, "left_anti").as("s")
               .filter(insCond)
-              .select(schema.fieldNames.map(col).toSeq: _*))
+              .select(schema.fieldNames.map(col).toSeq: _*)
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
           }
+        try {
         val inserted = insertRows.fold(0L)(_.count())
         if (files.isEmpty && inserted == 0L) {
           if (vacuum) vacuumTable(spark, path, retentionMs)
@@ -1841,15 +1609,15 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
               if (deleteActs.isEmpty) lit(false)
               else c.isin(deleteActs.map(Integer.valueOf): _*)
             val pre =
-              if (files.isEmpty) src.limit(0)
+              if (files.isEmpty) noRows
               else withAct.filter(updIn(col("__act"))).select(tRow: _*)
             val post =
-              if (files.isEmpty) src.limit(0)
+              if (files.isEmpty) noRows
               else withAct.filter(updIn(col("__act"))).select(projectedCols: _*)
             val del =
-              if (files.isEmpty) src.limit(0)
+              if (files.isEmpty) noRows
               else withAct.filter(delIn(col("__act"))).select(tRow: _*)
-            val ins = insertRows.getOrElse(src.limit(0))
+            val ins = insertRows.getOrElse(noRows)
             Some(pre.withColumn(ChangeTypeCol, lit("update_preimage"))
               .unionByName(post.withColumn(ChangeTypeCol, lit("update_postimage")))
               .unionByName(del.withColumn(ChangeTypeCol, lit("delete")))
@@ -1867,6 +1635,7 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
           // read is the whole table)
           readSkip = Some(envelopeSkip || bySourceSkip))
         (updated, deleted, inserted)
+        } finally insertRows.foreach(_.unpersist())
       } finally probe.foreach(_.unpersist())
     } finally src.unpersist()
   }

@@ -106,7 +106,15 @@ private[sources] trait StorageRead { this: DataSkipping.type =>
       markerRetentionMs, txn)
   }
 
-  /** Keyed MERGE DELETE arm; see [[mergeDeletePhys]]. */
+  /** Keyed MERGE DELETE preset: `WHEN MATCHED THEN DELETE` over
+    * [[mergeIntoPhys]], the source being the distinct keys of `keys`
+    * (duplicate keys stay legal; other columns are ignored) — the
+    * CDC-tombstone apply path, where the delete set is a DATAFRAME of
+    * keys, not a predicate (a predicate form would need an O(batch)
+    * IN literal; the frame rides joins). Keys absent from the target
+    * are no-ops; CDF records the dropped rows as `delete`. Returns the
+    * number of target rows deleted.
+    */
   def mergeDelete(spark: SparkSession, path: String, keys: DataFrame,
       keyCols: Seq[String],
       vacuum: Boolean = true,
@@ -114,11 +122,19 @@ private[sources] trait StorageRead { this: DataSkipping.type =>
       markerRetentionMs: Long = RetentionDefaultMs,
       txn: Option[(String, Long)] = None): Long = {
     val (src, kc) = mapDfCols(spark, path, keys, keyCols)
-    mergeDeletePhys(spark, path, src, kc, vacuum, retentionMs,
-      markerRetentionMs, txn)
+    mergeIntoPhys(spark, path, src.select(kc.map(col): _*).distinct(), kc,
+      Seq(MergeClause.MatchedDelete(None)), vacuum, retentionMs,
+      markerRetentionMs, txn)._2
   }
 
-  /** Keyed MERGE upsert; see [[mergeUpsertPhys]]. */
+  /** Upsert MERGE preset: `WHEN MATCHED THEN UPDATE SET * WHEN NOT
+    * MATCHED THEN INSERT *` over [[mergeIntoPhys]]. The source must
+    * carry exactly the table's columns (any order) and unique keys;
+    * `mergeSchema = true` lets it add columns, widening the table
+    * once before the merge ([[mergeUpsertSchema]]). A target key
+    * stored in several rows updates each of them (Delta MERGE
+    * semantics). Returns (target rows updated, source rows inserted).
+    */
   def mergeUpsert(spark: SparkSession, path: String, source: DataFrame,
       keyCols: Seq[String],
       vacuum: Boolean = true,
@@ -127,8 +143,12 @@ private[sources] trait StorageRead { this: DataSkipping.type =>
       txn: Option[(String, Long)] = None,
       mergeSchema: Boolean = false): (Long, Long) = {
     val (src, keys) = mapDfCols(spark, path, source, keyCols)
-    mergeUpsertPhys(spark, path, src, keys, vacuum, retentionMs,
-      markerRetentionMs, txn, mergeSchema)
+    val setAll = mergeUpsertSchema(spark, path, src.schema, mergeSchema)
+      .fieldNames.map(c => c -> col(s"s.$c")).toMap
+    val (updated, _, inserted) = mergeIntoPhys(spark, path, src, keys,
+      Seq(MergeClause.MatchedUpdate(None, setAll), MergeClause.NotMatchedInsert(None)),
+      vacuum, retentionMs, markerRetentionMs, txn)
+    (updated, inserted)
   }
 
   /** Live violation counts per constraint, `(constraint, violations)`

@@ -118,18 +118,7 @@ object StatsTableSink {
     // layout that does not exist)
     DataSkipping.requireDeclaredPartitioning(spark, path, partitionBy,
       "StatsTableSink.run")
-    val writer = writerId.getOrElse {
-      // hash the QUALIFIED path, not the raw string: "/tmp/ck",
-      // "/tmp/ck/" and "file:/tmp/ck" are the same checkpoint and
-      // must yield the same writer identity, or a restart under a
-      // different spelling re-appends its replayed batches
-      val p = new Path(checkpointDir)
-      val qualified = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .makeQualified(p).toString
-      val d = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(qualified.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      d.take(8).map(b => f"$b%02x").mkString
-    }
+    val writer = writerId.getOrElse(checkpointWriterId(spark, checkpointDir))
     source.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -141,25 +130,47 @@ object StatsTableSink {
       .start()
   }
 
+  /** The default writer identity of a sink: a hash of the QUALIFIED
+    * checkpoint path, not the raw string — "/tmp/ck", "/tmp/ck/" and
+    * "file:/tmp/ck" are the same checkpoint and must yield the same
+    * identity, or a restart under a different spelling re-applies its
+    * replayed batches.
+    */
+  private def checkpointWriterId(spark: SparkSession, checkpointDir: String): String = {
+    val p = new Path(checkpointDir)
+    val qualified = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(p).toString
+    val d = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(qualified.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    d.take(8).map(b => f"$b%02x").mkString
+  }
+
   /** Streaming CDC MERGE sink — the Delta
     * `foreachBatch { merge }` pattern as a first-class sink, closing
     * the continuous `apply_changes`-into-storage loop: each
-    * micro-batch collapses to one winner per key (ordered by
-    * `seqCols`, a delete marker beating an update at equal
-    * sequence — [[graft.operators.Cdc.applyChanges]]'s tie rule),
-    * then winning deletes apply via [[DataSkipping.mergeDelete]] and
-    * winning upserts via [[DataSkipping.mergeUpsert]] — both
-    * key-envelope-pruned copy-on-write commits, so a CDC batch
+    * micro-batch collapses to one winner per key, the greatest
+    * `struct(seqCols :+ __del ++ payload)` (latest by `seqCols`, a
+    * delete marker beating an update at equal sequence —
+    * [[graft.operators.Cdc.applyChanges]]'s tie rule), then ONE
+    * [[DataSkipping.mergeInto]] applies the winners — a
+    * key-envelope-pruned copy-on-write commit, so a CDC batch
     * touching one day's keys rewrites a handful of files of a 100 TB
     * target.
     *
-    * EXACTLY-ONCE across foreachBatch's at-least-once delivery: both
-    * DML arms carry `txn` stamps keyed by (sink identity, arm,
-    * batchId) — a replayed batch whose delete and/or upsert already
-    * committed re-applies as detected no-ops, including the torn
-    * middle state (delete committed, upsert not) which the replay
-    * completes rather than doubles. Winner keys are DISJOINT between
-    * the arms, so arm order cannot matter.
+    * SEQUENCE ORDER ACROSS BATCHES: a stored row is replaced or
+    * deleted only when the incoming winner would have won the same
+    * collapse against it (the stored row ranking as a non-delete), so
+    * an update or delete older than the stored row is a no-op; an
+    * unmatched winner inserts unless it is a delete. The remaining
+    * gap: deletes keep no tombstone, so a row OLDER than a delete
+    * applied in an earlier batch finds no stored row and re-inserts
+    * the key (the tombstone-retaining store is
+    * [[graft.streaming.ParquetStateStore]]).
+    *
+    * EXACTLY-ONCE across foreachBatch's at-least-once delivery: each
+    * batch is ONE commit carrying the `txn` stamp
+    * (`graft-merge-sink-ups:<writer>`, batchId), so a replayed batch
+    * whose merge already committed re-applies as a detected no-op.
     *
     * `dropCols` are visible to `deleteWhen`/collapse but not stored
     * (the op/tombstone column of a CDC feed). The target's schema is
@@ -174,6 +185,7 @@ object StatsTableSink {
       writerId: Option[String] = None,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import org.apache.spark.sql.functions._
+    import graft.sources.MergeClause._
     val spark = source.sparkSession
     require(keyCols.nonEmpty && seqCols.nonEmpty,
       "runMerge needs key and sequence columns")
@@ -184,42 +196,32 @@ object StatsTableSink {
     val payload = storedCols.filterNot(c =>
       keyCols.contains(c) || seqCols.contains(c))
     ensureTable(spark, path, storedSchema, statsCols)
-    val writer = writerId.getOrElse {
-      val p = new Path(checkpointDir)
-      val qualified = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .makeQualified(p).toString
-      val d = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(qualified.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      d.take(8).map(b => f"$b%02x").mkString
-    }
-    val appDel = s"graft-merge-sink-del:$writer"
-    val appUps = s"graft-merge-sink-ups:$writer"
+    // kept from the two-arm sink, so a checkpoint written by it
+    // replays as a detected no-op
+    val app = s"graft-merge-sink-ups:${writerId.getOrElse(
+      checkpointWriterId(spark, checkpointDir))}"
+    val ranked = (seqCols :+ "__del") ++ payload
+    // the collapse's order key for the incoming (s) and the stored (t)
+    // row; a stored row is never a delete
+    val wins = struct(ranked.map(c => col(s"s.$c").as(c)): _*) >
+      struct(ranked.map(c =>
+        (if (c == "__del") lit(false) else col(s"t.$c")).as(c)): _*)
+    val clauses = Seq(
+      MatchedDelete(Some(col("s.__del") && wins)),
+      MatchedUpdate(Some(wins), storedCols.map(c => c -> col(s"s.$c")).toMap),
+      NotMatchedInsert(Some(!col("s.__del"))))
     source.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val del = coalesce(deleteWhen.getOrElse(lit(false)), lit(false))
-        // one winner per key: latest by seq, delete beating an
-        // update at EQUAL sequence (the marker is compared before
-        // the payload in the max-struct — applyChanges' stated rule)
-        val ordered = (seqCols.map(col) :+ col("__del")) ++ payload.map(col)
         val winners = batch.withColumn("__del", del)
           .groupBy(keyCols.map(col): _*)
-          .agg(max(struct(ordered: _*)).as("__w"))
-          .select(keyCols.map(col) ++
-            (seqCols ++ Seq("__del") ++ payload)
-              .map(c => col(s"__w.$c").as(c)): _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          DataSkipping.mergeDelete(spark, path,
-            winners.filter(col("__del")).select(keyCols.map(col): _*),
-            keyCols, txn = Some(appDel -> batchId))
-          DataSkipping.mergeUpsert(spark, path,
-            winners.filter(!col("__del"))
-              .select(storedCols.map(col): _*),
-            keyCols, txn = Some(appUps -> batchId))
-          ()
-        } finally winners.unpersist()
+          .agg(max(struct(ranked.map(col): _*)).as("__w"))
+          .select(keyCols.map(col) ++ ranked.map(c => col(s"__w.$c").as(c)): _*)
+        DataSkipping.mergeInto(spark, path, winners, keyCols, clauses,
+          txn = Some(app -> batchId))
+        ()
       }
       .start()
   }

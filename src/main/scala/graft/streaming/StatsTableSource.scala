@@ -90,7 +90,8 @@ private[streaming] object StatsCommitOffset {
   * marker is re-created zero-row, so an in-flight batch replayed
   * across a compaction reads empty (indistinguishable from a
   * legitimately empty commit). Row-level DML
-  * ([[DataSkipping.deleteWhere]]/`updateWhere`/`mergeUpsert`) is
+  * ([[DataSkipping.deleteWhere]]/`updateWhere`, and every keyed MERGE
+  * — `mergeInto` and its `mergeUpsert`/`mergeDelete` presets) is
   * gentler: a commit none of whose files were rewritten survives the
   * new generation VERBATIM and replays unchanged; only commits whose
   * files the DML op touched fold to zero-row. Rewrites themselves

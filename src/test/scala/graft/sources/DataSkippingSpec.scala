@@ -668,6 +668,16 @@ class DataSkippingSpec extends SparkSpec {
       DataSkipping.readSkippingAt(s, dir, 7L, lit(true))
     }
     assert(e.getMessage.contains("not retained"))
+    // the v0 reads above cached its manifest parts; evicting under a
+    // `file:///`-qualified spelling of the generation dir drops them
+    // however the reader spelled the dir
+    val v0Dir = new org.apache.hadoop.fs.Path(s"$dir/${DataSkipping.StatsDir}/v0")
+      .toUri.getPath
+    def cachedUnderV0 = DataSkipping.manifestCacheDirs().filter(d =>
+      new org.apache.hadoop.fs.Path(d).toUri.getPath.startsWith(v0Dir))
+    assert(cachedUnderV0.nonEmpty, "the v0 reads cache their manifest parts")
+    DataSkipping.dropManifestCacheUnder(s"file://$v0Dir")
+    assert(cachedUnderV0.isEmpty, "a file:///-qualified dir must evict its entries")
     // retention-0 vacuum reclaims the superseded generation: it
     // leaves the version list and can no longer be read
     DataSkipping.vacuumTable(s, dir, retentionMs = 0L)

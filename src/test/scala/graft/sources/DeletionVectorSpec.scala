@@ -280,16 +280,19 @@ class DeletionVectorSpec extends SparkSpec {
       (0L until 100L).map(i => (i, i)).toDF("id", "v")
         .repartitionByRange(2, col("id")),
       dir, Seq("id"))
-    DataSkipping.deleteWhereDV(s, dir, col("id") === 7L)
-    assert(DataSkipping.readSkipping(s, dir, lit(true)).count() === 99)
+    DataSkipping.deleteWhereDV(s, dir, col("id") === 7L || col("id") === 6L)
+    assert(DataSkipping.readSkipping(s, dir, lit(true)).count() === 98)
     val (matched, inserted) = DataSkipping.mergeUpsert(s, dir,
       Seq((7L, 700L), (8L, 800L)).toDF("id", "v"), Seq("id"))
     assert(matched === 1L, "only the VISIBLE row 8 matches")
     assert(inserted === 1L, "dead row 7 is logically absent -> insert")
     val got = DataSkipping.readSkipping(s, dir, lit(true))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got.size === 100)
+    assert(got.size === 99)
     assert(got(7L) === 700L && got(8L) === 800L)
+    // dead row 6 shares the rewritten file but not a source key: the
+    // rewrite must not bring it back
+    assert(!got.contains(6L), "a DV-dead row of a rewritten file must stay dead")
   }
 
   test("change feed records DV deletes and updates; restore diffs vector visibility") {

@@ -6,7 +6,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Streaming CDC MERGE sink ([[StatsTableSink.runMerge]]) and the
-  * keyed MERGE DELETE arm ([[DataSkipping.mergeDelete]]).
+  * keyed-MERGE presets ([[DataSkipping.mergeDelete]],
+  * [[DataSkipping.mergeUpsert]]).
   */
 class MergeSinkSpec extends SparkSpec {
 
@@ -105,7 +106,8 @@ class MergeSinkSpec extends SparkSpec {
     val table = s"$root/t"
     val ckpt = s"$root/ckpt"
     // the partitioned target exists first; the streaming merge's
-    // upsert/delete arms must route through the partition layout
+    // updates, deletes and inserts must route through the partition
+    // layout
     DataSkipping.writeWithStats(
       (0L until 30L).map(i => (i, i % 3, 0L, s"v$i")).toDF("id", "p", "seq", "v"),
       table, Seq("id", "seq", "v"), bloomCols = Nil, partitionBy = Seq("p"))
@@ -146,33 +148,83 @@ class MergeSinkSpec extends SparkSpec {
       .head.getAs[Long]("p") === 0L)
   }
 
-  test("runMerge: a replayed batch whose arms already committed re-applies as no-ops") {
+  test("runMerge: each batch is one commit; a replayed batch is a detected no-op") {
     val s = spark
     import s.implicits._
+    implicit val ctx = s.sqlContext
     val root = tmpDir("msink_replay")
     val table = s"$root/t"
     DataSkipping.writeWithStats(
       Seq((1L, 1L, "a"), (2L, 1L, "b")).toDF("id", "seq", "v"),
       table, Seq("id"))
-    // simulate the sink's arms directly with pinned txn ids: first
-    // application
-    DataSkipping.mergeDelete(s, table, Seq(2L).toDF("id"), Seq("id"),
-      txn = Some("graft-merge-sink-del:w" -> 1L))
-    DataSkipping.mergeUpsert(s, table,
-      Seq((1L, 2L, "a2")).toDF("id", "seq", "v"), Seq("id"),
-      txn = Some("graft-merge-sink-ups:w" -> 1L))
-    assert(state(table) === Map(1L -> ((2L, "a2"))))
-    // the foreachBatch replay (offset lost after both commits): both
-    // arms detect their stamps — including a torn replay where only
-    // the delete had committed (the upsert then completes, never
-    // doubles)
-    assert(DataSkipping.mergeDelete(s, table, Seq(1L).toDF("id"), Seq("id"),
-      txn = Some("graft-merge-sink-del:w" -> 1L)) === 0L)
-    val (m, i) = DataSkipping.mergeUpsert(s, table,
-      Seq((1L, 9L, "boom")).toDF("id", "seq", "v"), Seq("id"),
-      txn = Some("graft-merge-sink-ups:w" -> 1L))
-    assert(m === 0L && i === 0L)
-    assert(state(table) === Map(1L -> ((2L, "a2"))),
-      "replayed arms must be detected no-ops")
+    def drain(in: MemoryStream[(Long, Long, String, String)], ckpt: String): Unit =
+      StatsTableSink.runMerge(in.toDS.toDF("id", "seq", "v", "op"),
+        table, keyCols = Seq("id"), seqCols = Seq("seq"),
+        statsCols = Seq("id"), checkpointDir = ckpt,
+        deleteWhen = Some(col("op") === "D"), dropCols = Seq("op"),
+        writerId = Some("w")).awaitTermination()
+    val gens = DataSkipping.tableVersions(s, table).size
+    val in = MemoryStream[(Long, Long, String, String)]
+    in.addData((1L, 2L, "a2", "U"), (2L, 2L, "", "D"), (3L, 1L, "c", "U"))
+    drain(in, s"$root/ckpt")
+    assert(state(table) === Map(1L -> ((2L, "a2")), 3L -> ((1L, "c"))))
+    // an update, a delete and an insert land in ONE generation commit
+    // stamped with the writer's app id (the id the two-arm sink used
+    // for its upsert arm, so its checkpoints still replay)
+    assert(DataSkipping.tableVersions(s, table).size === gens + 1)
+    assert(DataSkipping.txnVersion(s, table, "graft-merge-sink-ups:w") === Some(0L))
+    // the foreachBatch replay (offset lost after the commit): a fresh
+    // checkpoint under the same writer restarts at batch 0, whose
+    // stamp is already on the table
+    val replay = MemoryStream[(Long, Long, String, String)]
+    replay.addData((1L, 9L, "boom", "U"), (3L, 9L, "", "D"))
+    drain(replay, s"$root/ckpt2")
+    assert(state(table) === Map(1L -> ((2L, "a2")), 3L -> ((1L, "c"))),
+      "a replayed batch must be a detected no-op")
+    assert(DataSkipping.tableVersions(s, table).size === gens + 1)
+  }
+
+  test("runMerge honours sequence order across batches: stale updates and deletes are no-ops") {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val root = tmpDir("msink_seq")
+    val table = s"$root/t"
+    val in = MemoryStream[(Long, Long, String, String)]
+    def drain(): Unit =
+      StatsTableSink.runMerge(in.toDS.toDF("id", "seq", "v", "op"),
+        table, keyCols = Seq("id"), seqCols = Seq("seq"),
+        statsCols = Seq("id"), checkpointDir = s"$root/ckpt",
+        deleteWhen = Some(col("op") === "D"), dropCols = Seq("op"))
+        .awaitTermination()
+    in.addData((1L, 5L, "new", "U"), (2L, 5L, "keep", "U"), (3L, 5L, "tie", "U"))
+    drain()
+    // a later batch carries OLDER changes: an update of 1 and a delete
+    // of 2 (both no-ops), and a delete of 3 at the stored row's own
+    // sequence (a delete beats an update at equal sequence)
+    in.addData((1L, 1L, "stale", "U"), (2L, 1L, "", "D"), (3L, 5L, "", "D"))
+    drain()
+    assert(state(table) === Map(1L -> ((5L, "new")), 2L -> ((5L, "keep"))))
+    // genuinely newer changes still apply
+    in.addData((1L, 6L, "newer", "U"), (2L, 6L, "", "D"))
+    drain()
+    assert(state(table) === Map(1L -> ((6L, "newer"))))
+  }
+
+  test("mergeUpsert updates every row of a target key stored more than once") {
+    val s = spark
+    import s.implicits._
+    val table = tmpDir("mdup") + "/t"
+    DataSkipping.writeWithStats(
+      Seq((1L, 1L, "a"), (2L, 1L, "b")).toDF("id", "seq", "v"), table, Seq("id"))
+    DataSkipping.appendWithStats(
+      Seq((1L, 2L, "a-dup")).toDF("id", "seq", "v"), table, Seq("id"))
+    // Delta MERGE semantics: each matched target row is updated (no
+    // collapse to one row); the count is of target rows
+    assert(DataSkipping.mergeUpsert(s, table,
+      Seq((1L, 3L, "x"), (4L, 1L, "d")).toDF("id", "seq", "v"), Seq("id")) === ((2L, 1L)))
+    val rows = DataSkipping.readSkipping(s, table, lit(true))
+      .as[(Long, Long, String)].collect().toSeq.sorted
+    assert(rows === Seq((1L, 3L, "x"), (1L, 3L, "x"), (2L, 1L, "b"), (4L, 1L, "d")))
   }
 }
