@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: times every registered query at
-  * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line on stdout.
+  * `SPARK_GRAFT_SF_DIR` and prints ONE short JSON line on stdout
+  * (per-query minima keyed by run index); the full record goes to
+  * an artifact file.
   *
   * Honesty rules (round-1 verdict "What's wrong" #4):
   *  - results are materialized through the `noop` sink, not
@@ -198,12 +200,6 @@ object Bench {
     // only — same fields, same timing methodology).
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       s"BENCH_FULL_c${cpus}_${System.currentTimeMillis()}.json")
-    // FULL record (per-attempt timings, wall-clock starts, calibration
-    // samples) goes to the artifact file; stdout gets a COMPACT line —
-    // the driver's stdout tail buffer truncated the full 81-query line
-    // in r8 ("parsed": null), and everything it needs for the gate is
-    // metric/value/queries/failures. Query minima are rounded to ms in
-    // the compact line (full precision lives in the artifact).
     // steady-state fold cost per micro-batch, grouped by fold kind in
     // arrival order (each [batchId, sec] pair; attempts re-run the
     // whole composite, so the same batchId recurs once per attempt)
@@ -213,19 +209,24 @@ object Bench {
         s"${jstr(kind)}:${es.map { case (_, b, t) => s"[$b,${dec(t)}]" }
           .mkString("[", ",", "]")}"
       }.mkString("{", ",", "}")
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"attempts":$attJson,"attempt_start_ms":$tsJson,"calibration":$calJson,"calibration_min":${dec(calMin)},"load_poisoned":$poisoned,"unstable":$unstable,"fold_sec":$foldJson,"repeats":$repeats,"failures":${errors.size},"errors":$errJson,"sf":"$sfDir"}"""
-    val qsCompact = results.map { case (k, v) =>
-      s"${jstr(k)}:${v.map(dec).getOrElse("null")}"
-    }.mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":${dec(total)},"unit":"sec","queries":$qsCompact,"calibration_min":${dec(calMin)},"load_poisoned":$poisoned,"unstable":$unstable,"repeats":$repeats,"failures":${errors.size},"errors":$errJson,"sf":"$sfDir","full":${jstr(outPath)}}"""
-    println(line)
+    // FULL record (per-attempt timings, wall-clock starts, calibration
+    // samples) goes to the artifact file; stdout gets one TINY line.
+    // Queries are numbered in run order: the tiny line keys minima by
+    // that index, the artifact's `query_ids` maps index -> name.
+    val idJson = results.map(_._1).zipWithIndex
+      .map { case (k, i) => s""""$i":${jstr(k)}""" }.mkString("{", ",", "}")
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"query_ids":$idJson,"attempts":$attJson,"attempt_start_ms":$tsJson,"calibration":$calJson,"calibration_min":${dec(calMin)},"load_poisoned":$poisoned,"unstable":$unstable,"fold_sec":$foldJson,"repeats":$repeats,"failures":${errors.size},"errors":$errJson,"sf":"$sfDir"}"""
     // The driver keeps only the LAST ~2000 stdout chars ("tail") and
-    // parses JSON out of them — the compact line above is ~4 KB at
-    // 131 queries, so its head gets cut off and every round since r8
-    // shipped `"parsed": null`. Emit one final TINY line (bounded
-    // size: no per-query map) that always survives the tail buffer;
-    // per-query minima live in the artifact file it points at.
-    val tiny = s"""{"metric":"total","value":${dec(total)},"unit":"sec","queries":{},"n_queries":${results.size},"calibration_min":${dec(calMin)},"load_poisoned_n":${calibrations.count { case (_, t) => isPoisoned(t) }},"unstable_n":${attempts.count { case (_, ts) => ts.flatten.size >= 2 && ts.flatten.max >= 3 * ts.flatten.min }},"repeats":$repeats,"failures":${errors.size},"sf":"$sfDir","per_query_in":${jstr(outPath)}}"""
+    // parses JSON out of them, so the one stdout line must stay short:
+    // per-query minima keyed by run index at 3 significant figures
+    // (~1.6 KB at 148 queries, ~1.85 KB for the whole line); names,
+    // attempts and errors live in the artifact it points at.
+    def sig3(t: Double): String = BigDecimal(t)
+      .round(new java.math.MathContext(3)).bigDecimal.stripTrailingZeros.toPlainString
+    val qsTiny = results.zipWithIndex.map { case ((_, v), i) =>
+      s""""$i":${v.map(sig3).getOrElse("null")}"""
+    }.mkString("{", ",", "}")
+    val tiny = s"""{"metric":"total","value":${dec(total)},"unit":"sec","queries":$qsTiny,"n_queries":${results.size},"calibration_min":${dec(calMin)},"load_poisoned_n":${calibrations.count { case (_, t) => isPoisoned(t) }},"unstable_n":${attempts.count { case (_, ts) => ts.flatten.size >= 2 && ts.flatten.max >= 3 * ts.flatten.min }},"repeats":$repeats,"failures":${errors.size},"sf":"$sfDir","per_query_in":${jstr(outPath)}}"""
     println(tiny)
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -80,24 +80,37 @@ object Queries {
               FROM events) WHERE rn = 1
             ORDER BY user_id, event_type"""))
 
-  // Change-data-feed through the REAL versioned store: two CDC
-  // batches committed as v0/v1, then `changes(0,1)` read back. The
-  // oracle recomputes both snapshots (windowed latest-per-key) and
-  // diffs them — insert = key born in batch 2, update = key whose
-  // winning row changed. Delete transitions are CdcStreamSpec's job
-  // (they need deleteWhen); this gate pins the diff arithmetic.
+  // Change-data-feed through the REAL CDC sink: two batches merged by
+  // StatsTableSink.runMerge's per-batch body into a graft table with
+  // its change feed on, then the second batch's generation read back
+  // from the feed (its insert / update_postimage rows). The oracle
+  // recomputes both snapshots (windowed latest-per-key) and diffs
+  // them — insert = key born in batch 2, update = key whose winning
+  // row changed. Delete transitions are MergeSinkSpec's job (they
+  // need deleteWhen); this gate pins the diff arithmetic.
   val cdcChanges = QueryDef(
     "q_cdc_changes",
     (s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_cdf").toString
-      val ev = Tables.events(s, d)
-      val store = new graft.streaming.ParquetStateStore(s, root,
-        keys = Seq("user_id", "event_type"), seqCols = Seq("ts", "event_id"),
-        payload = Seq("value"), retainVersions = 10)
-      val b = ev.select("user_id", "event_type", "ts", "event_id", "value")
-      store.upsertBatch(b.filter(col("event_id") < 5000))
-      store.upsertBatch(b.filter(col("event_id") >= 5000))
-      store.changes(0L, 1L).orderBy("user_id", "event_type")
+      import graft.sources.DataSkipping
+      val root = java.nio.file.Files.createTempDirectory("graft_cdf").toString + "/t"
+      val b = Tables.events(s, d)
+        .select("user_id", "event_type", "ts", "event_id", "value")
+      DataSkipping.writeWithStats(s.createDataFrame(
+          java.util.Collections.emptyList[org.apache.spark.sql.Row](), b.schema),
+        root, Seq("user_id"), bloomCols = Nil, changeFeed = true)
+      def merge(batch: DataFrame): Unit =
+        graft.streaming.StatsTableSink.mergeBatch(s, batch, root,
+          keyCols = Seq("user_id", "event_type"), seqCols = Seq("ts", "event_id"),
+          deleteWhen = None, dropCols = Nil, txn = None)
+      merge(b.filter(col("event_id") < 5000))
+      merge(b.filter(col("event_id") >= 5000))
+      val v = DataSkipping.tableVersions(s, root).max
+      val ct = col(DataSkipping.ChangeTypeCol)
+      DataSkipping.readChangeFeed(s, root, v, Some(v))
+        .filter(ct.isin("insert", "update_postimage"))
+        .select(when(ct === "insert", "insert").otherwise("update").as("change_type"),
+          col("user_id"), col("event_type"), col("ts"), col("event_id"), col("value"))
+        .orderBy("user_id", "event_type")
     },
     Some("""WITH s0 AS (
               SELECT user_id, event_type, ts, event_id, value FROM (

@@ -38,38 +38,22 @@ object Cdc {
       .select(keyCols ++ (seqCols ++ payload).map(c => col(s"__latest.$c").as(c)): _*)
   }
 
-  /** Merge a batch of updates into a current-state snapshot: union
-    * then latest-per-key. This is the foreachBatch body used by the
-    * streaming CDC path (see graft.streaming.CdcStream).
+  /** Column marking delete tombstones: the delete flag inside the
+    * collapse, and the stored tombstone column of a `deleteWhen`
+    * [[graft.streaming.StatsTableSink.runMerge]] target.
     */
-  def upsert(
-      current: DataFrame,
-      updates: DataFrame,
-      keys: Seq[String],
-      seqCols: Seq[String],
-      payload: Seq[String]): DataFrame =
-    latestByKey(current.unionByName(updates), keys, seqCols, payload)
-
-  /** Column marking tombstone rows in a tombstone-retaining state. */
   val DeletedCol = "__del"
 
   /** Full `apply_changes` semantics including deletes — the
-    * `APPLY AS DELETE WHEN <cond>` clause of the DLT API the plain
-    * [[upsert]] lacks: among all rows per key the LATEST by `seqCols`
-    * wins, and if that winner is a delete marker the key is deleted.
-    * Sequencing rules match DLT: a delete older than the current row
-    * is ignored; a row newer than a delete re-inserts the key.
-    *
-    * `retainTombstones` decides what "deleted" means across MERGES:
-    *  - `true` (what a multi-batch stream needs): the winning delete
-    *    stays in the state as a tombstone row (`__del = true`), so a
-    *    LATE update with an older sequence arriving in a later batch
-    *    still loses to it — without the tombstone that late row
-    *    would silently resurrect the key. Filter `!__del` on read.
-    *    `current` may already carry a `__del` column from a previous
-    *    merge.
-    *  - `false` (single-shot merges): tombstones are dropped from
-    *    the output immediately.
+    * `APPLY AS DELETE WHEN <cond>` clause of the DLT API that
+    * [[latestByKey]] lacks: among all rows per key the LATEST by
+    * `seqCols` wins, and if that winner is a delete marker the key is
+    * deleted. Sequencing rules match DLT: a delete older than the
+    * current row is ignored; a row newer than a delete re-inserts the
+    * key. Deleted keys leave no row, so this is a single-shot merge; a
+    * multi-batch stream needs the tombstones that
+    * [[graft.streaming.StatsTableSink.runMerge]] retains, or a LATE
+    * update older than a delete would resurrect the key.
     *
     * `deleteWhen` is evaluated on `updates`; null results count as
     * not-delete.
@@ -81,10 +65,9 @@ object Cdc {
     * between two non-deletes still fall through to payload order;
     * include a unique tiebreaker in `seqCols` if updates may tie.
     *
-    * Scale: identical shape to [[upsert]] — ONE partial-aggregated
-    * shuffle; the marker is one boolean riding the max(struct).
-    * Retained tombstones cost one state row per deleted key (bounded
-    * by key cardinality like every other state row).
+    * Scale: identical shape to [[latestByKey]] — ONE
+    * partial-aggregated shuffle; the marker is one boolean riding the
+    * max(struct).
     */
   def applyChanges(
       current: DataFrame,
@@ -92,8 +75,7 @@ object Cdc {
       keys: Seq[String],
       seqCols: Seq[String],
       payload: Seq[String],
-      deleteWhen: Column,
-      retainTombstones: Boolean = false): DataFrame = {
+      deleteWhen: Column): DataFrame = {
     val cols = keys ++ seqCols ++ payload
     val cur =
       if (current.columns.contains(DeletedCol))
@@ -101,10 +83,9 @@ object Cdc {
       else current.select(cols.map(col): _*).withColumn(DeletedCol, lit(false))
     val upd = updates.select(cols.map(col) :+
       coalesce(deleteWhen, lit(false)).as(DeletedCol): _*)
-    val merged = latestByKey(cur.unionByName(upd), keys, seqCols, DeletedCol +: payload)
-      .select((keys ++ seqCols ++ payload :+ DeletedCol).map(col): _*)
-    if (retainTombstones) merged
-    else merged.filter(!col(DeletedCol)).drop(DeletedCol)
+    latestByKey(cur.unionByName(upd), keys, seqCols, DeletedCol +: payload)
+      .filter(!col(DeletedCol))
+      .select((keys ++ seqCols ++ payload).map(col): _*)
   }
 
   /** Prefix for SCD2 validity-interval columns (one pair per seq

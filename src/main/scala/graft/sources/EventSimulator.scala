@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * is reproducible across restarts and engines — the property the
   * reference gets by replaying recorded files. Output rows have the
   * reference's inventory-change shape and chain directly into
-  * `PayloadParser`/`Transactionalize`/`Dedupe`/`CdcStream` for
+  * `PayloadParser`/`Transactionalize`/`Dedupe`/`StatsTableSink.runMerge` for
   * end-to-end pipeline rehearsal without external infrastructure.
   *
   * Scale: the rate source partitions generation across tasks

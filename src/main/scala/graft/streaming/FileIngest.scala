@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{DataStreamReader, StreamingQuery, Trigger
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Incremental file ingestion — the Auto Loader analog.
   *
@@ -117,8 +118,21 @@ object FileIngest {
     mergeFields(new StructType(),
       fileSchemas(spark, dir, format, options, sampleFiles).map(_._2))
 
-  private def schemaVersions(schemaLocation: String): Seq[Long] =
-    VersionedDir.list(Paths.get(schemaLocation), "^v(\\d+)\\.json$".r).map(_._1)
+  private val SchemaVersionFile = "^v(\\d+)\\.json$".r
+
+  /** The persisted schema versions under `schemaLocation`, ascending;
+    * empty for a missing dir.
+    */
+  private def schemaVersions(schemaLocation: String): Seq[Long] = {
+    val dir = Paths.get(schemaLocation)
+    if (!Files.isDirectory(dir)) Nil
+    else {
+      val listing = Files.list(dir) // holds a descriptor until closed
+      try listing.iterator().asScala.map(_.getFileName.toString)
+        .collect { case SchemaVersionFile(v) => v.toLong }.toSeq.sorted
+      finally listing.close()
+    }
+  }
 
   /** Latest persisted schema under `schemaLocation`, if any. */
   def persistedSchema(schemaLocation: String): Option[StructType] =

@@ -12,7 +12,7 @@ import java.nio.charset.StandardCharsets
   *
   *   file drop (CSV)  --FileIngest-->  bronze stream
   *   bronze           --Dedupe-------> exactly-once silver
-  *   silver           --CdcStream----> latest-state store (upsert)
+  *   silver           --runMerge-----> latest-state graft table (upsert)
   *
   * Run: sbt "runMain graft.streaming.PipelineDemo"
   * Prints the deduped row count and the final per-key state.
@@ -55,14 +55,14 @@ object PipelineDemo {
     val silver = Dedupe.exactlyOnce(bronze,
       keys = Seq("trans_id", "item_id"), eventTimeCol = "date_time")
 
-    val store = new ParquetStateStore(spark, root.resolve("state").toString,
-      keys = Seq("item_id"), seqCols = Seq("date_time"),
-      payload = Seq("trans_id", "quantity"))
-    val q = CdcStream.run(silver, store, root.resolve("ckpt").toString)
+    val state = root.resolve("state").toString
+    val q = StatsTableSink.runMerge(silver, state, keyCols = Seq("item_id"),
+      seqCols = Seq("date_time"), statsCols = Seq("item_id"),
+      checkpointDir = root.resolve("ckpt").toString)
     q.awaitTermination()
 
     println("=== latest state per item (expect item 100 -> t3/-2, item 200 -> t2/3) ===")
-    store.current.get.orderBy("item_id").show(truncate = false)
+    StatsTableSink.readCurrent(spark, state).orderBy("item_id").show(truncate = false)
     spark.stop()
   }
 }

@@ -1,9 +1,12 @@
 package graft.streaming
 
+import graft.operators.Cdc
 import graft.sources.DataSkipping
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
 
 /** Streaming sink into a [[DataSkipping]] stats table — the bridge
   * between the ingest boundary ([[FileIngest]], Kafka-shaped
@@ -48,7 +51,7 @@ object StatsTableSink {
     */
   def ensureTable(
       spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       statsCols: Seq[String], partitionBy: Seq[String] = Nil): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(new Path(DataSkipping.manifestDir(spark, path),
@@ -146,26 +149,23 @@ object StatsTableSink {
   }
 
   /** Streaming CDC MERGE sink — the Delta
-    * `foreachBatch { merge }` pattern as a first-class sink, closing
-    * the continuous `apply_changes`-into-storage loop: each
-    * micro-batch collapses to one winner per key, the greatest
-    * `struct(seqCols :+ __del ++ payload)` (latest by `seqCols`, a
-    * delete marker beating an update at equal sequence —
-    * [[graft.operators.Cdc.applyChanges]]'s tie rule), then ONE
-    * [[DataSkipping.mergeInto]] applies the winners — a
-    * key-envelope-pruned copy-on-write commit, so a CDC batch
-    * touching one day's keys rewrites a handful of files of a 100 TB
-    * target.
+    * `foreachBatch { merge }` pattern as a first-class sink, and
+    * graft's one `apply_changes` store (pos-dlt `03_Bronze-to-Silver
+    * ETL.py:375-384`): each micro-batch goes through [[mergeBatch]],
+    * ONE key-envelope-pruned copy-on-write [[DataSkipping.mergeInto]]
+    * commit, so a CDC batch touching one day's keys rewrites a
+    * handful of files, not the whole state.
     *
-    * SEQUENCE ORDER ACROSS BATCHES: a stored row is replaced or
-    * deleted only when the incoming winner would have won the same
-    * collapse against it (the stored row ranking as a non-delete), so
-    * an update or delete older than the stored row is a no-op; an
-    * unmatched winner inserts unless it is a delete. The remaining
-    * gap: deletes keep no tombstone, so a row OLDER than a delete
-    * applied in an earlier batch finds no stored row and re-inserts
-    * the key (the tombstone-retaining store is
-    * [[graft.streaming.ParquetStateStore]]).
+    * DELETES (`deleteWhen`, DLT's `APPLY AS DELETE WHEN`): the target
+    * stores one more column, [[Cdc.DeletedCol]], and keeps each
+    * winning delete as a TOMBSTONE row, so a later change older than
+    * the delete loses to it instead of re-inserting the key; a newer
+    * change replaces the tombstone. Read the live rows through
+    * [[readCurrent]] (a raw read shows the tombstones, as DLT's
+    * backing table does). The column exists exactly when `deleteWhen`
+    * is given: a target whose schema disagrees is refused by name
+    * before the stream starts. Without `deleteWhen` the target holds
+    * the source's columns only.
     *
     * EXACTLY-ONCE across foreachBatch's at-least-once delivery: each
     * batch is ONE commit carrying the `txn` stamp
@@ -173,8 +173,8 @@ object StatsTableSink {
     * whose merge already committed re-applies as a detected no-op.
     *
     * `dropCols` are visible to `deleteWhen`/collapse but not stored
-    * (the op/tombstone column of a CDC feed). The target's schema is
-    * the source's minus `dropCols`.
+    * (the op column of a CDC feed). The target's schema is the
+    * source's minus `dropCols` (plus the tombstone column).
     */
   def runMerge(
       source: DataFrame, path: String, keyCols: Seq[String],
@@ -184,45 +184,85 @@ object StatsTableSink {
       dropCols: Seq[String] = Nil,
       writerId: Option[String] = None,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    import graft.sources.MergeClause._
     val spark = source.sparkSession
     require(keyCols.nonEmpty && seqCols.nonEmpty,
       "runMerge needs key and sequence columns")
+    val tombstones = deleteWhen.isDefined
     val storedFields = source.schema.fields
-      .filterNot(f => dropCols.contains(f.name))
-    val storedSchema = org.apache.spark.sql.types.StructType(storedFields)
-    val storedCols = storedFields.map(_.name).toSeq
-    val payload = storedCols.filterNot(c =>
-      keyCols.contains(c) || seqCols.contains(c))
-    ensureTable(spark, path, storedSchema, statsCols)
+      .filterNot(f => dropCols.contains(f.name)) ++
+      (if (tombstones) Seq(StructField(Cdc.DeletedCol, BooleanType)) else Nil)
+    ensureTable(spark, path, StructType(storedFields), statsCols)
+    val has = DataSkipping.tableSchema(spark, path).fieldNames.contains(Cdc.DeletedCol)
+    require(has == tombstones,
+      if (tombstones) s"runMerge with deleteWhen needs a target that stores the " +
+        s"${Cdc.DeletedCol} tombstone column; $path has none"
+      else s"$path stores the ${Cdc.DeletedCol} tombstone column of a deleteWhen " +
+        "target; runMerge without deleteWhen would lose it")
     // kept from the two-arm sink, so a checkpoint written by it
     // replays as a detected no-op
     val app = s"graft-merge-sink-ups:${writerId.getOrElse(
       checkpointWriterId(spark, checkpointDir))}"
-    val ranked = (seqCols :+ "__del") ++ payload
-    // the collapse's order key for the incoming (s) and the stored (t)
-    // row; a stored row is never a delete
-    val wins = struct(ranked.map(c => col(s"s.$c").as(c)): _*) >
-      struct(ranked.map(c =>
-        (if (c == "__del") lit(false) else col(s"t.$c")).as(c)): _*)
-    val clauses = Seq(
-      MatchedDelete(Some(col("s.__del") && wins)),
-      MatchedUpdate(Some(wins), storedCols.map(c => c -> col(s"s.$c")).toMap),
-      NotMatchedInsert(Some(!col("s.__del"))))
     source.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val del = coalesce(deleteWhen.getOrElse(lit(false)), lit(false))
-        val winners = batch.withColumn("__del", del)
-          .groupBy(keyCols.map(col): _*)
-          .agg(max(struct(ranked.map(col): _*)).as("__w"))
-          .select(keyCols.map(col) ++ ranked.map(c => col(s"__w.$c").as(c)): _*)
-        DataSkipping.mergeInto(spark, path, winners, keyCols, clauses,
+        mergeBatch(spark, batch, path, keyCols, seqCols, deleteWhen, dropCols,
           txn = Some(app -> batchId))
-        ()
       }
       .start()
+  }
+
+  /** One [[runMerge]] batch against an existing target: the batch
+    * collapses to one winner per key, the greatest
+    * `struct(seqCols :+ __del ++ payload)` (latest by `seqCols`, a
+    * delete beating an update at equal sequence —
+    * [[graft.operators.Cdc.applyChanges]]'s tie rule), and ONE
+    * [[DataSkipping.mergeInto]] applies the winners. A stored row is
+    * replaced only when the incoming winner would have won the same
+    * collapse against it, so a change older than the stored row
+    * (or its tombstone) is a no-op. The same two clauses serve both
+    * shapes: with `deleteWhen` the SET carries [[Cdc.DeletedCol]], so
+    * a winning delete is stored as a tombstone (update or insert);
+    * without it no row is a delete and the stored row ranks as a
+    * non-delete. The merge runs in `spark`,
+    * not in the micro-batch's own session (a streaming clone with
+    * adaptive execution off).
+    */
+  private[graft] def mergeBatch(
+      spark: SparkSession, batch: DataFrame, path: String, keyCols: Seq[String],
+      seqCols: Seq[String], deleteWhen: Option[org.apache.spark.sql.Column],
+      dropCols: Seq[String], txn: Option[(String, Long)]): Unit = {
+    import graft.sources.MergeClause._
+    val del = Cdc.DeletedCol
+    val storedCols = batch.columns.toSeq.filterNot(dropCols.contains)
+    val payload = storedCols.filterNot(c =>
+      keyCols.contains(c) || seqCols.contains(c))
+    val ranked = (seqCols :+ del) ++ payload
+    // the collapse's order key for the incoming (s) and the stored (t)
+    // row
+    val wins = struct(ranked.map(c => col(s"s.$c").as(c)): _*) >
+      struct(ranked.map(c =>
+        (if (c == del && deleteWhen.isEmpty) lit(false) else col(s"t.$c")).as(c)): _*)
+    val tableCols = storedCols ++ deleteWhen.map(_ => del)
+    val clauses = Seq(
+      MatchedUpdate(Some(wins), tableCols.map(c => c -> col(s"s.$c")).toMap),
+      NotMatchedInsert(None))
+    val winners = batch
+      .withColumn(del, coalesce(deleteWhen.getOrElse(lit(false)), lit(false)))
+      .groupBy(keyCols.map(col): _*)
+      .agg(max(struct(ranked.map(col): _*)).as("__w"))
+      .select(keyCols.map(col) ++ ranked.map(c => col(s"__w.$c").as(c)): _*)
+    DataSkipping.mergeInto(spark, path, winners, keyCols, clauses, txn = txn)
+  }
+
+  /** The live rows of a [[runMerge]] target: the skipping read with
+    * a `deleteWhen` target's tombstones filtered out and the
+    * [[Cdc.DeletedCol]] column dropped. A target without tombstones
+    * reads as it is stored.
+    */
+  def readCurrent(spark: SparkSession, path: String): DataFrame = {
+    val df = DataSkipping.readSkipping(spark, path, lit(true))
+    if (!df.columns.contains(Cdc.DeletedCol)) df
+    else df.filter(!col(Cdc.DeletedCol)).drop(Cdc.DeletedCol)
   }
 }

@@ -28,7 +28,8 @@ import scala.collection.mutable
   *    restartable and downstream tables re-read its storage as a
   *    stream, exactly the DLT storage model.
   *  - `sink(name, dep)` declares a terminal flow with a custom
-  *    writer (e.g. [[CdcStream.run]] into a [[ParquetStateStore]]).
+  *    writer (e.g. [[StatsTableSink.runMerge]], the CDC upsert into a
+  *    graft table).
   *
   * Lifecycle:
   *  - [[runOnce]] — triggered mode: one `Trigger.AvailableNow`
@@ -145,7 +146,8 @@ final class StreamingPipeline(spark: SparkSession, storageRoot: String) {
 
   /** Terminal flow with a custom writer; `start` receives the
     * upstream stream and this sink's checkpoint dir. The writer owns
-    * the trigger (e.g. [[CdcStream.run]] defaults to AvailableNow).
+    * the trigger (e.g. [[StatsTableSink.runMerge]] defaults to
+    * AvailableNow).
     */
   def sink(name: String, dep: String,
       expectations: Seq[Expectations.Rule] = Nil)(
@@ -205,9 +207,11 @@ final class StreamingPipeline(spark: SparkSession, storageRoot: String) {
         }
         ts
       }
+    val fs = new org.apache.hadoop.fs.Path(storageRoot)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     order.filter(targets).foreach { name =>
-      ParquetStateStore.deleteRecursively(Paths.get(dataDir(name)))
-      ParquetStateStore.deleteRecursively(Paths.get(checkpointDir(name)))
+      fs.delete(new org.apache.hadoop.fs.Path(dataDir(name)), true)
+      fs.delete(new org.apache.hadoop.fs.Path(checkpointDir(name)), true)
       schemas.remove(name)
     }
   }

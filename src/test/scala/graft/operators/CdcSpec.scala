@@ -30,27 +30,6 @@ class CdcSpec extends SparkSpec {
     assert(reinserted === Map(1 -> ((4, 11)), 2 -> ((1, 20)), 3 -> ((1, 30))))
   }
 
-  test("retainTombstones keeps the winning delete as a marker row a stale update cannot beat") {
-    val s = spark
-    import s.implicits._
-    val current = Seq((1, 2, 10)).toDF("k", "seq", "v")
-    val deleted = Cdc.applyChanges(current,
-      Seq((1, 5, 0, "D")).toDF("k", "seq", "v", "op"),
-      keys = Seq("k"), seqCols = Seq("seq"), payload = Seq("v"),
-      deleteWhen = col("op") === "D", retainTombstones = true)
-    val row = deleted.collect()
-    assert(row.length === 1 && row.head.getAs[Boolean](Cdc.DeletedCol))
-
-    // a later merge with a STALE update: the tombstone wins
-    val after = Cdc.applyChanges(deleted,
-      Seq((1, 3, 99, "U")).toDF("k", "seq", "v", "op"),
-      keys = Seq("k"), seqCols = Seq("seq"), payload = Seq("v"),
-      deleteWhen = col("op") === "D", retainTombstones = true)
-      .collect()
-    assert(after.length === 1 && after.head.getAs[Boolean](Cdc.DeletedCol),
-      "stale update must lose to the retained tombstone")
-  }
-
   test("equal-seq delete vs update: the delete wins regardless of payload values") {
     val s = spark
     import s.implicits._
@@ -67,19 +46,6 @@ class CdcSpec extends SparkSpec {
       keys = Seq("k"), seqCols = Seq("seq"), payload = Seq("v"),
       deleteWhen = col("op") === "D")
     assert(state.collect().isEmpty)
-
-    // the same tie against a retained tombstone: an equal-seq late
-    // update does not resurrect the key
-    val tomb = Cdc.applyChanges(current,
-      Seq((1, 3, 0, "D")).toDF("k", "seq", "v", "op"),
-      keys = Seq("k"), seqCols = Seq("seq"), payload = Seq("v"),
-      deleteWhen = col("op") === "D", retainTombstones = true)
-    val late = Cdc.applyChanges(tomb,
-      Seq((1, 3, 99, "U")).toDF("k", "seq", "v", "op"),
-      keys = Seq("k"), seqCols = Seq("seq"), payload = Seq("v"),
-      deleteWhen = col("op") === "D")
-      .filter(col("k") === 1)
-    assert(late.collect().isEmpty)
   }
 
   test("applyChanges: null delete condition counts as not-delete") {

@@ -17,8 +17,8 @@ import java.sql.Timestamp
   * — and everything downstream of that boundary is the real
   * production chain: [[KafkaSource.parsePayload]] (payload decode +
   * item explode, pos-dlt `03_Bronze-to-Silver ETL.py:283-324`) ->
-  * [[Dedupe.exactlyOnce]] -> [[CdcStream.run]] into a
-  * [[ParquetStateStore]] (`03:375-384`), orchestrated by
+  * [[Dedupe.exactlyOnce]] -> [[StatsTableSink.runMerge]] into a
+  * graft table (`03:375-384`), orchestrated by
   * [[StreamingPipeline]]. KafkaSourceSpec tests the option block and
   * the payload transform in isolation; this proves they compose.
   */
@@ -67,9 +67,7 @@ class KafkaPipelineSpec extends SparkSpec {
         "offset" -> LongType, "timestamp" -> TimestampType,
         "timestampType" -> IntegerType))
 
-    val store = new ParquetStateStore(s, tmpDir("kp_state"),
-      keys = Seq("store_id", "item_id"), seqCols = Seq("date_time"),
-      payload = Seq("trans_id", "quantity"))
+    val state = tmpDir("kp_state") + "/t"
 
     val p = new StreamingPipeline(s, tmpDir("kp_root"))
     p.source("bronze")(input.toDF())
@@ -80,7 +78,9 @@ class KafkaPipelineSpec extends SparkSpec {
         keys = Seq("trans_id", "item_id"), eventTimeCol = "date_time")
         .select("trans_id", "store_id", "date_time", "item_id", "quantity")
     }
-    p.sink("state", "silver")((df, ckpt) => CdcStream.run(df, store, ckpt))
+    p.sink("state", "silver")((df, ckpt) => StatsTableSink.runMerge(df, state,
+      keyCols = Seq("store_id", "item_id"), seqCols = Seq("date_time"),
+      statsCols = Seq("store_id", "item_id"), checkpointDir = ckpt))
 
     // batch 1: two transactions, one retransmitted verbatim (the
     // at-least-once broker redelivery dedup must absorb)
@@ -94,7 +94,7 @@ class KafkaPipelineSpec extends SparkSpec {
     assert(silver1.count() === 3)
     assert(silver1.select("trans_id").distinct().count() === 2)
     // CDC state: latest quantity per (store, item) by event time
-    val v1 = store.current.get.collect()
+    val v1 = StatsTableSink.readCurrent(s, state).collect()
       .map(r => r.getAs[Int]("item_id") -> r.getAs[Int]("quantity")).toMap
     assert(v1 === Map(11 -> 7, 12 -> 1))
 
@@ -103,7 +103,7 @@ class KafkaPipelineSpec extends SparkSpec {
     publish(t1, txn("t3", 5, "2024-01-01 09:00:00", 12 -> 9))
     p.runOnce()
     assert(p.readTable("silver").count() === 4) // only t3's row landed
-    val v2 = store.current.get.collect()
+    val v2 = StatsTableSink.readCurrent(s, state).collect()
       .map(r => r.getAs[Int]("item_id") -> r.getAs[Int]("quantity")).toMap
     assert(v2 === Map(11 -> 7, 12 -> 9))
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.operators.Cdc
 import graft.sources.DataSkipping
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -11,8 +12,9 @@ import org.apache.spark.sql.functions._
   */
 class MergeSinkSpec extends SparkSpec {
 
+  /** Live rows, tombstones hidden. */
   private def state(table: String): Map[Long, (Long, String)] =
-    DataSkipping.readSkipping(spark, table, lit(true))
+    StatsTableSink.readCurrent(spark, table)
       .collect().map(r => r.getAs[Long]("id") ->
         ((r.getAs[Long]("seq"), r.getAs[String]("v")))).toMap
 
@@ -93,9 +95,9 @@ class MergeSinkSpec extends SparkSpec {
     drain()
     assert(state(table) === Map(1L -> ((3L, "a3")), 3L -> ((2L, "c2"))))
 
-    // the op column is not stored
+    // the op column is not stored; the tombstone column is
     assert(DataSkipping.tableSchema(s, table).fieldNames.toSet ===
-      Set("id", "seq", "v"))
+      Set("id", "seq", "v", Cdc.DeletedCol))
   }
 
   test("runMerge into a PARTITIONED target: upserts route to partition dirs, updates migrate partitions, replays no-op") {
@@ -109,8 +111,10 @@ class MergeSinkSpec extends SparkSpec {
     // updates, deletes and inserts must route through the partition
     // layout
     DataSkipping.writeWithStats(
-      (0L until 30L).map(i => (i, i % 3, 0L, s"v$i")).toDF("id", "p", "seq", "v"),
+      (0L until 30L).map(i => (i, i % 3, 0L, s"v$i", false))
+        .toDF("id", "p", "seq", "v", Cdc.DeletedCol),
       table, Seq("id", "seq", "v"), bloomCols = Nil, partitionBy = Seq("p"))
+    def live = StatsTableSink.readCurrent(s, table)
     val in = MemoryStream[(Long, Long, Long, String, String)]
     def drain(): Unit = {
       val q = StatsTableSink.runMerge(
@@ -126,26 +130,30 @@ class MergeSinkSpec extends SparkSpec {
       (3L, 0L, 1L, "", "D"),     // keyed delete
       (100L, 2L, 1L, "new", "U")) // insert routes into p=2
     drain()
-    assert(DataSkipping.readSkipping(s, table, lit(true)).count() === 30L)
-    val r1 = DataSkipping.readSkipping(s, table, col("id") === 1L).head
+    assert(live.count() === 30L)
+    // pruning reads: the rewritten files' stats must still find the
+    // updated, migrated and inserted rows (none of them has a tombstone)
+    def byId(k: Long) = DataSkipping.readSkipping(s, table, col("id") === k)
+    val r1 = byId(1L).head
     assert(r1.getAs[Long]("p") === 1L && r1.getAs[String]("v") === "a2")
-    val r2 = DataSkipping.readSkipping(s, table, col("id") === 2L).head
+    val r2 = byId(2L).head
     assert(r2.getAs[Long]("p") === 0L && r2.getAs[String]("v") === "mig",
       "the update must migrate the row to its new partition directory")
-    assert(DataSkipping.readSkipping(s, table, col("id") === 3L).count() === 0L)
-    val r100 = DataSkipping.readSkipping(s, table, col("id") === 100L).head
+    assert(live.filter(col("id") === 3L).count() === 0L)
+    assert(byId(3L).collect().map(_.getAs[Boolean](Cdc.DeletedCol)).toSeq === Seq(true),
+      "the delete is stored as one tombstone row")
+    val r100 = byId(100L).head
     assert(r100.getAs[Long]("p") === 2L && r100.getAs[String]("v") === "new")
     // files really live in their partition dirs (no flat leakage)
     val (kept, files) = DataSkipping.prunedFiles(s, table, col("p") === 0L)
     assert(kept.nonEmpty && kept.forall(_.contains("p=0")), kept.mkString("\n"))
     assert(kept.size < files.size)
-    assert(DataSkipping.readSkipping(s, table, col("p") === 0L)
+    assert(live.filter(col("p") === 0L)
       .count() === 10L) // 10 original (ids 0,3..27) - deleted 3 + migrated 2
     // an empty re-drain (restart, nothing new) changes nothing
     drain()
-    assert(DataSkipping.readSkipping(s, table, lit(true)).count() === 30L)
-    assert(DataSkipping.readSkipping(s, table, col("id") === 2L)
-      .head.getAs[Long]("p") === 0L)
+    assert(live.count() === 30L)
+    assert(byId(2L).head.getAs[Long]("p") === 0L)
   }
 
   test("runMerge: each batch is one commit; a replayed batch is a detected no-op") {
@@ -155,7 +163,8 @@ class MergeSinkSpec extends SparkSpec {
     val root = tmpDir("msink_replay")
     val table = s"$root/t"
     DataSkipping.writeWithStats(
-      Seq((1L, 1L, "a"), (2L, 1L, "b")).toDF("id", "seq", "v"),
+      Seq((1L, 1L, "a", false), (2L, 1L, "b", false))
+        .toDF("id", "seq", "v", Cdc.DeletedCol),
       table, Seq("id"))
     def drain(in: MemoryStream[(Long, Long, String, String)], ckpt: String): Unit =
       StatsTableSink.runMerge(in.toDS.toDF("id", "seq", "v", "op"),
@@ -226,5 +235,288 @@ class MergeSinkSpec extends SparkSpec {
     val rows = DataSkipping.readSkipping(s, table, lit(true))
       .as[(Long, Long, String)].collect().toSeq.sorted
     assert(rows === Seq((1L, 3L, "x"), (1L, 3L, "x"), (2L, 1L, "b"), (4L, 1L, "d")))
+  }
+
+  /** A runMerge over `in` with `op = "D"` rows as deletes. */
+  private def drainWithDeletes(in: MemoryStream[(Long, Long, String, String)],
+      table: String, ckpt: String, writerId: Option[String] = None): Unit =
+    StatsTableSink.runMerge(in.toDS().toDF("id", "seq", "v", "op"),
+      table, keyCols = Seq("id"), seqCols = Seq("seq"),
+      statsCols = Seq("id"), checkpointDir = ckpt,
+      deleteWhen = Some(col("op") === "D"), dropCols = Seq("op"),
+      writerId = writerId).awaitTermination()
+
+  test("runMerge: a late update older than a delete from an earlier batch does not resurrect the key") {
+    val s = spark
+    implicit val ctx = s.sqlContext
+    import s.implicits._
+    val root = tmpDir("msink_tomb")
+    val table = s"$root/t"
+    val in = MemoryStream[(Long, Long, String, String)]
+    def drain(): Unit = drainWithDeletes(in, table, s"$root/ckpt")
+    in.addData((1L, 1L, "a", "U"), (2L, 1L, "b", "U"))
+    drain()
+    in.addData((1L, 2L, "", "D"), (2L, 0L, "", "D"), (3L, 1L, "c", "U"))
+    drain()
+    // 1 deleted (newest change), 2's stale delete ignored, 3 inserted
+    assert(state(table) === Map(2L -> ((1L, "b")), 3L -> ((1L, "c"))))
+    // a LATE update older than 1's delete arrives in a later batch:
+    // the stored tombstone wins
+    in.addData((1L, 1L, "late", "U"))
+    drain()
+    assert(state(table) === Map(2L -> ((1L, "b")), 3L -> ((1L, "c"))),
+      "late out-of-order update must not resurrect a deleted key")
+    // a genuinely NEWER row re-inserts the key
+    in.addData((1L, 3L, "back", "U"))
+    drain()
+    assert(state(table) === Map(1L -> ((3L, "back")), 2L -> ((1L, "b")),
+      3L -> ((1L, "c"))))
+  }
+
+  test("runMerge keeps the winning delete as a tombstone row that stale and equal-sequence updates cannot beat") {
+    val s = spark
+    implicit val ctx = s.sqlContext
+    import s.implicits._
+    val root = tmpDir("msink_tombrow")
+    val table = s"$root/t"
+    val in = MemoryStream[(Long, Long, String, String)]
+    def drain(): Unit = drainWithDeletes(in, table, s"$root/ckpt")
+    def raw() = DataSkipping.readSkipping(s, table, lit(true))
+      .select("id", "seq", "v", Cdc.DeletedCol).as[(Long, Long, String, Boolean)]
+      .collect().toSet
+    in.addData((1L, 2L, "a", "U"))
+    drain()
+    in.addData((1L, 5L, "gone", "D"))
+    drain()
+    // the delete's own row is stored, marked
+    assert(raw() === Set((1L, 5L, "gone", true)))
+    in.addData((1L, 3L, "stale", "U"))
+    drain()
+    assert(raw() === Set((1L, 5L, "gone", true)),
+      "a stale update must lose to the retained tombstone")
+    // equal sequence: the delete wins whatever the payloads
+    in.addData((1L, 5L, "zzz", "U"))
+    drain()
+    assert(raw() === Set((1L, 5L, "gone", true)))
+    // an unmatched delete is inserted as a tombstone
+    in.addData((7L, 1L, "", "D"))
+    drain()
+    assert(raw() === Set((1L, 5L, "gone", true), (7L, 1L, "", true)))
+    assert(state(table).isEmpty)
+  }
+
+  test("runMerge refuses a target whose tombstone column disagrees with deleteWhen, by name, before any write") {
+    val s = spark
+    implicit val ctx = s.sqlContext
+    import s.implicits._
+    val root = tmpDir("msink_refuse")
+    // deleteWhen against a target without the tombstone column
+    val plain = s"$root/plain"
+    DataSkipping.writeWithStats(Seq((1L, 1L, "a")).toDF("id", "seq", "v"),
+      plain, Seq("id"))
+    val in = MemoryStream[(Long, Long, String, String)]
+    in.addData((1L, 2L, "", "D"))
+    val e1 = intercept[IllegalArgumentException] {
+      drainWithDeletes(in, plain, s"$root/ck1")
+    }
+    assert(e1.getMessage.contains(Cdc.DeletedCol), e1.getMessage)
+    assert(DataSkipping.tableVersions(s, plain) === Seq(0L))
+    assert(!new java.io.File(s"$root/ck1").exists(), "the stream must not start")
+    assert(DataSkipping.readSkipping(s, plain, lit(true)).count() === 1L)
+    // a tombstone target fed by a runMerge without deleteWhen
+    val tomb = s"$root/tomb"
+    DataSkipping.writeWithStats(
+      Seq((1L, 1L, "a", false)).toDF("id", "seq", "v", Cdc.DeletedCol),
+      tomb, Seq("id"))
+    val in2 = MemoryStream[(Long, Long, String)]
+    in2.addData((1L, 2L, "b"))
+    val e2 = intercept[IllegalArgumentException] {
+      StatsTableSink.runMerge(in2.toDS().toDF("id", "seq", "v"), tomb,
+        keyCols = Seq("id"), seqCols = Seq("seq"), statsCols = Seq("id"),
+        checkpointDir = s"$root/ck2").awaitTermination()
+    }
+    assert(e2.getMessage.contains(Cdc.DeletedCol), e2.getMessage)
+    assert(DataSkipping.tableVersions(s, tomb) === Seq(0L))
+    assert(!new java.io.File(s"$root/ck2").exists(), "the stream must not start")
+    assert(state(tomb) === Map(1L -> ((1L, "a"))))
+  }
+
+  test("runMerge keeps the latest row per key across batches (composite key, timestamp sequence)") {
+    val s = spark
+    implicit val ctx = s.sqlContext
+    import s.implicits._
+    import java.sql.Timestamp
+    def ts(t: String) = Timestamp.valueOf(t)
+    val root = tmpDir("msink_latest")
+    val table = s"$root/t"
+    val in = MemoryStream[(Int, Int, Timestamp, Int)]
+    def drain(): Unit = StatsTableSink.runMerge(
+      in.toDS().toDF("store_id", "item_id", "date_time", "quantity"), table,
+      keyCols = Seq("store_id", "item_id"), seqCols = Seq("date_time"),
+      statsCols = Seq("store_id", "item_id"), checkpointDir = s"$root/ckpt")
+      .awaitTermination()
+    def current() = StatsTableSink.readCurrent(s, table).collect()
+      .map(r => (r.getAs[Int]("store_id"), r.getAs[Int]("item_id")) ->
+        r.getAs[Int]("quantity")).toMap
+    in.addData(
+      (1, 100, ts("2024-01-01 08:00:00"), 50),
+      (1, 100, ts("2024-01-01 09:00:00"), 40), // newer wins
+      (2, 200, ts("2024-01-01 08:30:00"), 10))
+    drain()
+    assert(current() === Map((1, 100) -> 40, (2, 200) -> 10))
+    // an older row must NOT overwrite, a newer one must
+    in.addData(
+      (1, 100, ts("2024-01-01 07:00:00"), 99),
+      (2, 200, ts("2024-01-01 10:00:00"), 5))
+    drain()
+    assert(current() === Map((1, 100) -> 40, (2, 200) -> 5))
+  }
+
+  test("runMerge: re-applying an already-merged batch without its txn stamp changes nothing and commits nothing") {
+    val s = spark
+    implicit val ctx = s.sqlContext
+    import s.implicits._
+    val root = tmpDir("msink_idem")
+    val table = s"$root/t"
+    val rows = Seq((1L, 1L, "a", "U"), (2L, 1L, "b", "U"), (2L, 2L, "", "D"),
+      (3L, 1L, "c", "U"))
+    def apply(writer: String): Unit = {
+      val in = MemoryStream[(Long, Long, String, String)]
+      in.addData(rows: _*)
+      drainWithDeletes(in, table, s"$root/ckpt-$writer", writerId = Some(writer))
+    }
+    apply("w1")
+    val after = state(table)
+    assert(after === Map(1L -> ((1L, "a")), 3L -> ((1L, "c"))))
+    val versions = DataSkipping.tableVersions(s, table)
+    // at-least-once delivery under ANOTHER writer identity (a lost or
+    // relocated checkpoint): no stored row loses to its own change
+    apply("w2")
+    assert(state(table) === after)
+    assert(DataSkipping.tableVersions(s, table) === versions,
+      "a batch that changes nothing must not commit")
+  }
+
+  test("runMerge commits time-travel through readSkippingAt") {
+    val s = spark
+    implicit val ctx = s.sqlContext
+    import s.implicits._
+    val root = tmpDir("msink_tt")
+    val table = s"$root/t"
+    val in = MemoryStream[(Long, Long, String)]
+    def drain(): Unit = StatsTableSink.runMerge(in.toDS().toDF("id", "seq", "v"),
+      table, keyCols = Seq("id"), seqCols = Seq("seq"), statsCols = Seq("id"),
+      checkpointDir = s"$root/ckpt").awaitTermination()
+    def at(v: Long) = DataSkipping.readSkippingAt(s, table, v, lit(true))
+      .as[(Long, Long, String)].collect().map(r => r._1 -> r._3).toMap
+    in.addData((1L, 1L, "a"))
+    drain()
+    in.addData((1L, 2L, "b"), (2L, 1L, "x"))
+    drain()
+    in.addData((2L, 2L, "y"))
+    drain()
+    // v0 is the empty bootstrap; each batch is one generation
+    assert(DataSkipping.tableVersions(s, table) === Seq(0L, 1L, 2L, 3L))
+    assert(at(0L).isEmpty)
+    assert(at(1L) === Map(1L -> "a"))
+    assert(at(2L) === Map(1L -> "b", 2L -> "x"))
+    assert(at(3L) === Map(1L -> "b", 2L -> "y"))
+    assert(at(3L) === StatsTableSink.readCurrent(s, table)
+      .as[(Long, Long, String)].collect().map(r => r._1 -> r._3).toMap)
+    val err = intercept[IllegalArgumentException](at(99L))
+    assert(err.getMessage.contains("not retained"))
+  }
+
+  test("compactTable over a runMerge target keeps rows and tombstones identical") {
+    val s = spark
+    implicit val ctx = s.sqlContext
+    import s.implicits._
+    val root = tmpDir("msink_compact")
+    val table = s"$root/t"
+    val in = MemoryStream[(Long, Long, String, String)]
+    def drain(): Unit = drainWithDeletes(in, table, s"$root/ckpt")
+    (0 until 4).foreach { b =>
+      in.addData((0 until 50).map(i => ((b * 50 + i).toLong, 1L, s"v$b", "U")): _*)
+      drain()
+    }
+    in.addData((3L, 2L, "", "D"), (120L, 2L, "", "D"))
+    drain()
+    def raw() = DataSkipping.readSkipping(s, table, lit(true))
+      .as[(Long, Long, String, Boolean)].collect().toSet
+    val rows = raw()
+    val live = state(table)
+    assert(rows.size === 200 && live.size === 198)
+    assert(DataSkipping.readManifest(s, table).count() > 1L)
+    assert(DataSkipping.compactTable(s, table) === 1)
+    assert(DataSkipping.readManifest(s, table).count() === 1L)
+    assert(raw() === rows)
+    assert(state(table) === live)
+    // the compacted tombstones still beat late updates
+    in.addData((3L, 1L, "late", "U"))
+    drain()
+    assert(state(table) === live)
+  }
+
+  test("runMerge change feed: inserts, updates, and a delete as the tombstone's update_postimage") {
+    val s = spark
+    implicit val ctx = s.sqlContext
+    import s.implicits._
+    val root = tmpDir("msink_cdf")
+    val table = s"$root/t"
+    DataSkipping.writeWithStats(
+      Seq.empty[(Long, Long, Long, Boolean)].toDF("k", "seq", "v", Cdc.DeletedCol),
+      table, Seq("k"), bloomCols = Nil, changeFeed = true)
+    val in = MemoryStream[(Long, Long, Long)]
+    def drain(): Unit = StatsTableSink.runMerge(in.toDS().toDF("k", "seq", "v"),
+      table, keyCols = Seq("k"), seqCols = Seq("seq"), statsCols = Seq("k"),
+      checkpointDir = s"$root/ckpt", deleteWhen = Some(col("v") < 0L))
+      .awaitTermination()
+    def feed(v: Long) = DataSkipping.readChangeFeed(s, table, v, Some(v))
+      .select(col(DataSkipping.ChangeTypeCol), col("k"), col("seq"), col("v"),
+        col(Cdc.DeletedCol))
+      .as[(String, Long, Long, Long, Boolean)].collect().toSet
+    in.addData((1L, 1L, 10L), (2L, 1L, 20L))
+    drain()
+    assert(feed(1L) === Set(("insert", 1L, 1L, 10L, false), ("insert", 2L, 1L, 20L, false)))
+    in.addData((2L, 2L, 21L), (3L, 1L, 30L))
+    drain()
+    assert(feed(2L) === Set(
+      ("update_preimage", 2L, 1L, 20L, false), ("update_postimage", 2L, 2L, 21L, false),
+      ("insert", 3L, 1L, 30L, false)))
+    // a delete is an UPDATE of the stored row into its tombstone: the
+    // pre-image is the live row, the post-image the delete's own row
+    in.addData((1L, 2L, -1L))
+    drain()
+    assert(feed(3L) === Set(
+      ("update_preimage", 1L, 1L, 10L, false), ("update_postimage", 1L, 2L, -1L, true)))
+    // a batch that changes nothing commits no generation
+    in.addData((3L, 1L, 30L))
+    drain()
+    assert(DataSkipping.tableVersions(s, table).max === 3L)
+  }
+
+  test("runMerge: 4 concurrent writers all commit; no lost update; history is linear") {
+    val s = spark
+    implicit val ctx = s.sqlContext
+    import s.implicits._
+    val root = tmpDir("msink_many")
+    val table = s"$root/t"
+    // bootstrap first: concurrent first-time bootstraps are refused
+    // by ensureTable's sentinel, not serialized
+    StatsTableSink.ensureTable(s, table,
+      Seq.empty[(Long, Long, String)].toDF("id", "seq", "v").schema, Seq("id"))
+    val queries = (0 until 4).map { i =>
+      val in = MemoryStream[(Long, Long, String)]
+      in.addData((i.toLong, 1L, s"w$i"))
+      StatsTableSink.runMerge(in.toDS().toDF("id", "seq", "v"), table,
+        keyCols = Seq("id"), seqCols = Seq("seq"), statsCols = Seq("id"),
+        checkpointDir = s"$root/ckpt$i", writerId = Some(s"w$i"))
+    }
+    queries.foreach(_.awaitTermination())
+    assert(state(table) === (0 until 4).map(i => i.toLong -> ((1L, s"w$i"))).toMap)
+    assert(DataSkipping.tableVersions(s, table) === Seq(0L, 1L, 2L, 3L, 4L),
+      "4 commits must serialize into 4 consecutive generations")
+    (0 until 4).foreach(i => assert(
+      DataSkipping.txnVersion(s, table, s"graft-merge-sink-ups:w$i") === Some(0L)))
   }
 }

@@ -47,9 +47,7 @@ class PosPipelineSpec extends SparkSpec {
       col("user_id"), col("event_type"), col("value"))
     toDrop.coalesce(1).write.mode("overwrite").option("header", "true").csv(dropDir)
 
-    val store = new ParquetStateStore(s, tmpDir("sp_state"),
-      keys = Seq("event_id"), seqCols = Seq("ts"),
-      payload = Seq("user_id", "event_type", "value"))
+    val state = tmpDir("sp_state") + "/t"
 
     val p = new StreamingPipeline(s, tmpDir("sp_root"))
     p.source("bronze")(FileIngest.stream(s, dropDir, toDrop.schema,
@@ -59,7 +57,9 @@ class PosPipelineSpec extends SparkSpec {
         d("bronze").withColumn("ts", timestamp_micros(col("ts_us"))).drop("ts_us"),
         keys = Seq("event_id"), eventTimeCol = "ts")
     }
-    p.sink("state", "silver")((df, ckpt) => CdcStream.run(df, store, ckpt))
+    p.sink("state", "silver")((df, ckpt) => StatsTableSink.runMerge(df, state,
+      keyCols = Seq("event_id"), seqCols = Seq("ts"), statsCols = Seq("event_id"),
+      checkpointDir = ckpt))
 
     val built = p.runOnce()
     val silverCount = built("silver").count()
@@ -68,7 +68,7 @@ class PosPipelineSpec extends SparkSpec {
     def gold(df: org.apache.spark.sql.DataFrame) =
       Inventory.currentInventoryOverEvents(s, df.select(cols.head, cols.tail: _*))
         .collect().map(_.toString).sorted.toSeq
-    val viaDsl = gold(store.current.get)
+    val viaDsl = gold(StatsTableSink.readCurrent(s, state))
     val direct = gold(events)
     assert(viaDsl === direct)
     assert(viaDsl.nonEmpty)
@@ -79,7 +79,7 @@ class PosPipelineSpec extends SparkSpec {
     newest.coalesce(1).write.mode("append").option("header", "true").csv(dropDir)
     p.runOnce()
     assert(p.readTable("silver").count() === silverCount)
-    assert(gold(store.current.get) === direct)
+    assert(gold(StatsTableSink.readCurrent(s, state)) === direct)
   }
 
   test("streaming DSL continuous mode: drop -> drain -> assert, twice, then stop") {
@@ -105,9 +105,7 @@ class PosPipelineSpec extends SparkSpec {
       org.apache.spark.sql.types.StructField("quantity",
         org.apache.spark.sql.types.IntegerType)))
 
-    val store = new ParquetStateStore(s, tmpDir("spc_state"),
-      keys = Seq("item_id"), seqCols = Seq("date_time"),
-      payload = Seq("trans_id", "quantity"))
+    val state = tmpDir("spc_state") + "/t"
 
     val p = new StreamingPipeline(s, tmpDir("spc_root"))
     p.source("bronze")(FileIngest.stream(s, dropDir, schema,
@@ -116,13 +114,15 @@ class PosPipelineSpec extends SparkSpec {
       Dedupe.exactlyOnce(d("bronze"),
         keys = Seq("trans_id", "item_id"), eventTimeCol = "date_time")
     }
-    p.sink("state", "silver")((df, ckpt) => CdcStream.run(df, store, ckpt,
+    p.sink("state", "silver")((df, ckpt) => StatsTableSink.runMerge(df, state,
+      keyCols = Seq("item_id"), seqCols = Seq("date_time"), statsCols = Seq("item_id"),
+      checkpointDir = ckpt,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(100)))
 
     val run = p.start()
     try {
       run.processAllAvailable()
-      val v1 = store.current.get.collect()
+      val v1 = StatsTableSink.readCurrent(s, state).collect()
         .map(r => r.getAs[Int]("item_id") -> r.getAs[Int]("quantity")).toMap
       assert(v1 === Map(100 -> 5, 200 -> 3))
 
@@ -131,7 +131,7 @@ class PosPipelineSpec extends SparkSpec {
         "t3,100,2024-01-01 09:00:00,-2")
       run.processAllAvailable()
       assert(p.readTable("silver").count() === 3) // t1, t2, t3 once each
-      val v2 = store.current.get.collect()
+      val v2 = StatsTableSink.readCurrent(s, state).collect()
         .map(r => r.getAs[Int]("item_id") -> r.getAs[Int]("quantity")).toMap
       assert(v2 === Map(100 -> -2, 200 -> 3))
     } finally run.stopAll()
