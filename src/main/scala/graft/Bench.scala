@@ -195,11 +195,12 @@ object Bench {
     // `n_common: 0` for exactly this reason (r18 verdict #1). Each
     // run's tiny line names its own artifact via `per_query_in`; an
     // explicit SPARK_GRAFT_BENCH_OUT is honored verbatim, and the
-    // legacy BENCH_FULL.json is still mirrored for readers that
-    // hard-code it. Output contract otherwise unchanged (additions
-    // only — same fields, same timing methodology).
+    // legacy root BENCH_FULL.json is still mirrored for readers that
+    // hard-code it; the per-run artifacts collect under bench/. Output
+    // contract otherwise unchanged (additions only — same fields, same
+    // timing methodology).
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      s"BENCH_FULL_c${cpus}_${System.currentTimeMillis()}.json")
+      s"bench/BENCH_FULL_c${cpus}_${System.currentTimeMillis()}.json")
     // steady-state fold cost per micro-batch, grouped by fold kind in
     // arrival order (each [batchId, sec] pair; attempts re-run the
     // whole composite, so the same batchId recurs once per attempt)
@@ -228,9 +229,12 @@ object Bench {
     }.mkString("{", ",", "}")
     val tiny = s"""{"metric":"total","value":${dec(total)},"unit":"sec","queries":$qsTiny,"n_queries":${results.size},"calibration_min":${dec(calMin)},"load_poisoned_n":${calibrations.count { case (_, t) => isPoisoned(t) }},"unstable_n":${attempts.count { case (_, ts) => ts.flatten.size >= 2 && ts.flatten.max >= 3 * ts.flatten.min }},"repeats":$repeats,"failures":${errors.size},"sf":"$sfDir","per_query_in":${jstr(outPath)}}"""
     println(tiny)
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: java.io.IOException => () } // stdout has the gate line
+    try {
+      val out = java.nio.file.Paths.get(outPath)
+      Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
+      java.nio.file.Files.write(out,
+        (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    } catch { case _: java.io.IOException => () } // stdout has the gate line
     // legacy mirror (only when the default unique path is in use —
     // an explicit SPARK_GRAFT_BENCH_OUT is the caller's one artifact)
     if (!sys.env.contains("SPARK_GRAFT_BENCH_OUT"))

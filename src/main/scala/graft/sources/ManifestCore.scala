@@ -190,7 +190,7 @@ private[sources] trait ManifestCore { this: DataSkipping.type =>
   // -----------------------------------------------------------------
 
   /** `weight` is the part's DRIVER-HEAP footprint (SizeEstimator over
-    * the deserialized rows), not its on-disk length: bloom/ndv stat
+    * the deserialized rows), not its on-disk length: bloom stat
     * columns are incompressible binary that expands ~3-8x into boxed
     * Row values, so accounting by compressed bytes would overshoot
     * the nominal cache budget by that factor (r18 advice, medium).
@@ -204,8 +204,8 @@ private[sources] trait ManifestCore { this: DataSkipping.type =>
 
   /** Conservative on-disk → heap expansion factor for GATING a read
     * before its rows exist to measure: schemas carrying non-atomic
-    * stat columns (bloom word arrays, ndv register structs) expand
-    * hardest — incompressible binary into boxed element objects.
+    * stat columns (bloom word arrays) expand hardest — incompressible
+    * binary into boxed element objects.
     */
   private def heapExpansionFactor(schema: StructType): Long = {
     val complex = schema.fields.exists(_.dataType match {

@@ -155,39 +155,32 @@ private[sources] trait StorageCluster { this: DataSkipping.type =>
       .sortWithinPartitions(rangeKeys: _*)
       .drop("__z")
     val bloomCfg = bloomFeature(manifestFeatures(fs, dir))
+    val bloomCols = bloomCfg.map(_._1).getOrElse(Nil)
     // tracked set GROWS to include the z columns (dropping an
     // existing tracked column would silently stop pruning on it)
     val newTracked = (trackedCols(spark, dir) ++ zCols).toSeq.distinct.sorted
-    // per-file stats ride the write tasks (guide §6 — the statsFor
-    // read-back below then never executes)
+    val ms = manifestSchemaFor(schema, newTracked, partCols, bloomCols)
+    // per-file stats ride the write tasks (guide §6)
     val writeStats = stagedWriteTracked(zSorted, staging, partCols,
       newTracked, bloomCfg)
     val moved =
       if (partCols.isEmpty) moveIn(fs, staging, new Path(path))
       else moveInPartitioned(fs, staging, new Path(path))
-    val newStats = statsFor(
-      partAwareStatusScan(spark, path, dir, schema, statusesFor(fs, moved)),
-      newTracked, bloom = bloomCfg)
-    val statsLocal: Option[(StructType, Seq[Row])] =
-      if (moved.size > 10000) None
-      else writeStats.flatMap(ws => statsRowsFromWrite(fs, path, moved,
-          newTracked, partCols, bloomCfg.map(_._1).getOrElse(Nil), ws,
-          newStats.schema))
-        .map(rows => (newStats.schema, rows))
+    val rows = statsRowsFromWrite(fs, path, moved, newTracked, partCols,
+      bloomCols, writeStats, ms)
     val movedNames = moved.map(p => new Path(p).getName).toSet
     val replaced = old.map(p => rootRelativeOrName(fs, path, p))
       .filterNot(rel => movedNames(new Path(rel).getName)).toSeq
-    publishGeneration(spark, fs, path, dir, newStats, schema,
+    publishGeneration(spark, fs, path, dir, Right((ms, rows)), schema,
       newTracked,
       Set("nulls") ++ bloomCfg.map(bloomFeatureLine).toSet ++
         manifestFeatures(fs, dir).filter(_ == CdfFeature),
-      manifestSchema = newStats.schema, removedData = replaced,
+      manifestSchema = ms, removedData = replaced,
       markerRetentionMs = markerRetentionMs, opStartMs = opStart,
       op = "OPTIMIZE ZORDER",
       clustered = Some((s"$curve:${zCols.mkString(",")}" +:
         moved.map(p => new Path(p).getName)).mkString("\n")),
-      observedParts = Some(observed),
-      manifestRowsLocal = statsLocal)
+      observedParts = Some(observed))
     if (vacuum) vacuumTable(spark, path, retentionMs)
     moved.size
   }

@@ -114,9 +114,10 @@ private[sources] trait StorageCommit { this: DataSkipping.type =>
     val snapshot = applyDv(partAwareStatusScan(spark, path, dir, schema,
       statusesOf(stats)), dv)
     // the rewrite preserves the table's bloom configuration; per-file
-    // stats ride the write tasks (guide §6 — the statsFor read-back
-    // below then never executes)
+    // stats ride the write tasks (guide §6)
     val bloomCfg = bloomFeature(manifestFeatures(fs, dir))
+    val bloomCols = bloomCfg.map(_._1).getOrElse(Nil)
+    val ms = manifestSchemaFor(schema, statsCols, partCols, bloomCols)
     val writeStats =
       if (partCols.isEmpty) stagedWriteTracked(snapshot.coalesce(target),
         staging, Nil, statsCols, bloomCfg)
@@ -126,28 +127,21 @@ private[sources] trait StorageCommit { this: DataSkipping.type =>
     val moved =
       if (partCols.isEmpty) moveIn(fs, staging, new Path(path))
       else moveInPartitioned(fs, staging, new Path(path))
-    val newStats = statsFor(
-      partAwareStatusScan(spark, path, dir, schema, statusesFor(fs, moved)),
-      statsCols, bloom = bloomCfg)
-    val statsLocal: Option[(StructType, Seq[Row])] =
-      if (moved.size > 10000) None
-      else writeStats.flatMap(ws => statsRowsFromWrite(fs, path, moved,
-          statsCols, partCols, bloomCfg.map(_._1).getOrElse(Nil), ws,
-          newStats.schema))
-        .map(rows => (newStats.schema, rows))
+    val rows = statsRowsFromWrite(fs, path, moved, statsCols, partCols,
+      bloomCols, writeStats, ms)
     val movedNames = moved.map(p => new Path(p).getName).toSet
     val replacedData = old.map(r => rootRelativeOrName(fs, path, r.getString(0)))
       .filterNot(rel => movedNames(new Path(rel).getName)).toSeq
     // compaction changes nothing logically, so it records NO change
     // data — but the feed feature flag must survive the rebuilt
     // feature set or the next DML would silently stop recording
-    publishGeneration(spark, fs, path, dir, newStats, schema, statsCols,
+    publishGeneration(spark, fs, path, dir, Right((ms, rows)), schema,
+      statsCols,
       Set("nulls") ++ bloomCfg.map(bloomFeatureLine).toSet ++
         manifestFeatures(fs, dir).filter(_ == CdfFeature),
-      manifestSchema = newStats.schema, removedData = replacedData,
+      manifestSchema = ms, removedData = replacedData,
       markerRetentionMs = markerRetentionMs, opStartMs = opStart,
-      op = "OPTIMIZE", observedParts = Some(observed),
-      manifestRowsLocal = statsLocal)
+      op = "OPTIMIZE", observedParts = Some(observed))
     if (vacuum) vacuumTable(spark, path, retentionMs)
     moved.size
   }
@@ -263,12 +257,12 @@ private[sources] trait StorageCommit { this: DataSkipping.type =>
     // Spark jobs for a CHECKPOINT.
     val local = localManifestRowsPinned(spark, dir, observed)
       .map { case (ms, rs) => (ms, rs.map(_._1)) }
-    val v = publishGeneration(spark, fs, path, dir, rows.coalesce(1),
+    val v = publishGeneration(spark, fs, path, dir,
+      local.toRight(rows.coalesce(1)),
       schema, statsCols, manifestFeatures(fs, dir), manifestSchema,
       removedData = Nil, markerRetentionMs = markerRetentionMs,
       opStartMs = opStart, op = "CHECKPOINT",
-      dv = readDvIn(spark, dir), observedParts = Some(observed),
-      manifestRowsLocal = local)
+      dv = readDvIn(spark, dir), observedParts = Some(observed))
     if (vacuum) vacuumTable(spark, path, retentionMs)
     v
   }
@@ -440,7 +434,8 @@ private[sources] trait StorageCommit { this: DataSkipping.type =>
 
   private[sources] def publishGeneration(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String, dir: String,
-      manifestRows: DataFrame, schema: StructType, statsCols: Seq[String],
+      manifestRows: Either[DataFrame, (StructType, Seq[Row])],
+      schema: StructType, statsCols: Seq[String],
       features: Set[String], manifestSchema: StructType,
       removedData: Seq[String], markerRetentionMs: Long,
       opStartMs: Long, verbatimMarkers: Set[String] = Set.empty,
@@ -453,7 +448,6 @@ private[sources] trait StorageCommit { this: DataSkipping.type =>
       resetDeclarations: Boolean = false,
       partitionColsNew: Option[Seq[String]] = None,
       extraSidecars: Map[String, String] = Map.empty,
-      manifestRowsLocal: Option[(StructType, Seq[Row])] = None,
       changeDataFrom: Option[Path] = None,
       dvLocal: Option[(StructType, Seq[Row])] = None): Long = {
     val statsDir = new Path(s"$path/$StatsDir")
@@ -478,16 +472,16 @@ private[sources] trait StorageCommit { this: DataSkipping.type =>
         f.getModificationTime >= markerCutoff)
       .map(_.getPath.getName).toSeq
     val build = new Path(statsDir, s".genbuild-${java.util.UUID.randomUUID}")
-    // rows already known on the driver (cache-served carry) write as
-    // ONE part directly — no Spark job, no commit protocol; everything
-    // else keeps the distributed write
-    manifestRowsLocal match {
-      case Some((ms, rows)) =>
+    // rows already on the driver (write-task stats, cache-served
+    // carry) write as ONE part directly — no Spark job, no commit
+    // protocol; a distributed frame keeps the distributed write
+    manifestRows match {
+      case Right((ms, rows)) =>
         fs.mkdirs(build)
         writeLocalParquetFile(spark, ms, rows,
           new Path(build, s"part-${java.util.UUID.randomUUID}.parquet"))
-      case None =>
-        manifestRows.write.parquet(build.toString)
+      case Left(frame) =>
+        frame.write.parquet(build.toString)
     }
     writeSidecars(spark, build.toString, schema, statsCols, features,
       manifestSchema = Some(manifestSchema))
@@ -583,8 +577,7 @@ private[sources] trait StorageCommit { this: DataSkipping.type =>
     if (folded.nonEmpty) {
       // zero-row re-creations are schema-only — written driver-side
       // (no Spark job per generation just to mint an empty template)
-      val templateSchema =
-        manifestRowsLocal.map(_._1).getOrElse(manifestRows.schema)
+      val templateSchema = manifestRows.fold(_.schema, _._1)
       folded.foreach { n =>
         writeLocalParquetFile(spark, templateSchema, Nil, new Path(build, n))
       }

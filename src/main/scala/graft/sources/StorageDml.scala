@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Equal
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.TrackedParquetWrite.readTypeOf
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** ROW-LEVEL DML: copy-on-write DELETE/UPDATE/MERGE, merge-on-read deletion-vector variants + PURGE, keyed REPLACE, the full conditional MERGE INTO, CHECK constraints, and the shared prune-touch-rewrite kernel.
@@ -83,8 +84,7 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
   }
 
   /** [[partAwareStatusScan]] with the partition columns given
-    * EXPLICITLY — for call sites where the sidecar is not written
-    * yet (the v0 stats pass of a partitioned [[writeWithStats]]).
+    * EXPLICITLY, not read from a generation's sidecar.
     */
   private[sources] def partAwareStatusScanCols(spark: SparkSession, path: String,
       partCols: Seq[String], schema: StructType,
@@ -105,11 +105,11 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
       partCols: Seq[String], schema0: StructType,
       statuses: Seq[FileStatusWithMetadata]): HadoopFsRelation = {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    // the scan schema is NULLABLE: a native partitioned write's
-    // sidecar can carry the frame's nullable=false (flat sidecars
-    // come from read-backs, always nullable), and a REQUIRED column
-    // missing from an evolution-era file fails the vectorized reader
-    // instead of reading null
+    // the scan schema is NULLABLE: a partitioned table's sidecar may
+    // carry a frame's top-level nullable=false (partitioned writes
+    // kept it before sidecars became nullable at every level), and a
+    // REQUIRED column missing from an evolution-era file fails the
+    // vectorized reader instead of reading null
     val schema = StructType(schema0.fields.map(_.copy(nullable = true)))
     if (partCols.isEmpty) HadoopFsRelation(
       new ManifestFileIndex(new Path(path), statuses),
@@ -368,14 +368,18 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
     // them back (or, for an UPDATE that changes a partition value,
     // forward to the row's new directory).
     val partCols = partitionColsIn(fs, dir)
-    // stats shape resolved BEFORE the write: the staged replacement
-    // gathers its per-file manifest stats IN the write tasks (guide
-    // §6 — a write must not re-scan its own output), so the statsFor
-    // action below usually never runs
+    // the staged replacement gathers its per-file manifest stats IN
+    // the write tasks (guide §6 — a write must not re-scan its own
+    // output). Shape sidecars are proven identical across a rebase
+    // (rebaseSafe), so stats gathered under the base dir's tracked
+    // set/features stay exact under the winner's.
     val baseFeats = manifestFeatures(fs, dir)
     val baseStatsCols = trackedCols(spark, dir).toSeq.sorted
     val bloomFeat = bloomFeature(baseFeats)
-    var writeStats: Option[Seq[org.apache.spark.sql.graft.FileWriteStats]] = None
+    val bloomCols = bloomFeat.map(_._1).getOrElse(Nil)
+    val addedSchema = manifestSchemaFor(schema, baseStatsCols, partCols,
+      bloomCols)
+    var writeStats = Seq.empty[org.apache.spark.sql.graft.FileWriteStats]
     val moved = replacement.fold(Seq.empty[String]) { r =>
       val staging = new Path(path, s".append-${java.util.UUID.randomUUID}")
       writeStats = stagedWriteTracked(r, staging, partCols, baseStatsCols,
@@ -390,28 +394,18 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
       if (partCols.isEmpty) moveIn(fs, staging, new Path(path))
       else moveInPartitioned(fs, staging, new Path(path))
     }
-    // Op-derived frames are MATERIALIZED once (localCheckpoint), so a
-    // rebase attempt re-reads computed blocks instead of re-scanning
-    // the op's data: the added-file stats would otherwise re-read
-    // every rewritten file's bytes per publish attempt and the change
-    // data would re-scan the touched files — turning the "O(manifest)
-    // rebase" into O(op) again. Shape sidecars are proven identical
-    // across a rebase (rebaseSafe), so stats computed under the base
-    // dir's tracked set/features stay exact under the winner's.
-    //
-    // Added-file stats land on the DRIVER when the op wrote a bounded
-    // number of files (every row-level DML does): the rows usually
-    // arrive straight from the WRITE TASKS (stagedWriteTracked above —
-    // zero extra actions), else the one statsFor action replaces the
-    // checkpoint; the whole generation carry below becomes driver
-    // work. Ops that wrote an unbounded file set keep the
-    // checkpointed-frame route (same rebase rationale).
-    // The gate is a BYTE budget, not a row count: one stats row can
-    // carry kilobytes of bloom bits plus HLL registers per tracked
-    // column, so 10k rows of narrow min/max is fine where 10k rows of
-    // multi-bloom stats would be hundreds of driver-heap MB (r18
-    // advice). Reuses the manifest local-serve budget — the carried
-    // generation these rows union into is gated by the same number.
+    val addedRows = statsRowsFromWrite(fs, path, moved, baseStatsCols,
+      partCols, bloomCols, writeStats, addedSchema)
+    // The whole generation carry below becomes driver work when the
+    // added rows fit a budget (every row-level DML does). The gate is
+    // a BYTE budget, not a row count: one stats row can carry
+    // kilobytes of bloom bits per tracked column, so 10k rows of
+    // narrow min/max is fine where 10k rows of multi-bloom stats would
+    // be hundreds of driver-heap MB (r18 advice). Reuses the manifest
+    // local-serve budget — the carried generation these rows union
+    // into is gated by the same number. Past the gate the added rows
+    // still come from the write tasks, as a local relation the
+    // distributed carry unions.
     val addedLocalMax = 10000
     val estStatRowBytes: Long = {
       val base = 64L + 48L * baseStatsCols.size
@@ -421,27 +415,14 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
     }
     val localGate: Boolean = moved.size <= addedLocalMax &&
       moved.size * estStatRowBytes <= maxLocalManifestBytes(spark)
-    val addedStatsFrame: Option[DataFrame] =
-      if (moved.isEmpty) None
-      else Some(statsFor(
-        partAwareStatusScan(spark, path, dir, schema, statusesFor(fs, moved)),
-        baseStatsCols,
-        bloom = bloomFeat))
     val addedLocal: Option[(StructType, Seq[Row])] =
-      addedStatsFrame.filter(_ => localGate).flatMap { f =>
-        writeStats
-          .flatMap(ws => statsRowsFromWrite(fs, path, moved, baseStatsCols,
-            partCols, bloomFeat.map(_._1).getOrElse(Nil), ws, f.schema))
-          .map(rows => (f.schema, rows))
-          // coverage gap / tracker off → the old one-action collect
-          .orElse(Some((f.schema, f.collect().toSeq)))
-      }
-    val addedStats: Option[DataFrame] = addedLocal match {
-      case Some((s, rs)) => Some(spark.createDataFrame(
-        new java.util.ArrayList[Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(rs).asJava), s))
-      case None => addedStatsFrame.map(_.localCheckpoint(true))
-    }
+      if (moved.nonEmpty && localGate) Some((addedSchema, addedRows))
+      else None
+    val addedStats: Option[DataFrame] =
+      if (moved.isEmpty) None
+      else Some(spark.createDataFrame(new java.util.ArrayList[Row](
+        scala.jdk.CollectionConverters.SeqHasAsJava(addedRows).asJava),
+        addedSchema))
     // change data materializes ONCE as a hidden parquet temp (one
     // write job); every publish attempt — happy path or rebase —
     // COPIES the parts into its build dir driver-side. Replaces the
@@ -496,7 +477,7 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
       val localPairs: Option[(StructType, Seq[(Row, String)])] =
         if (moved.nonEmpty && addedLocal.isEmpty) None
         else aPin.flatMap(p => localManifestRowsPinned(spark, aDir, p))
-      val localBuilt: Option[(DataFrame, Option[(StructType, Seq[Row])],
+      val localBuilt: Option[(Either[DataFrame, (StructType, Seq[Row])],
           Set[String])] = localPairs.flatMap { case (mSchema, pairs) =>
         val fileIdx = mSchema.fieldIndex("file")
         val dirtyNames: Set[String] =
@@ -519,12 +500,10 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
           case Some((aSchema, aRows)) =>
             unionRowsByName(mSchema, carriedRows, aSchema, aRows)
         }
-        merged.map { case (outSchema, outRows) =>
-          (spark.createDataFrame(new java.util.ArrayList[Row](), outSchema),
-            Some((outSchema, outRows)): Option[(StructType, Seq[Row])], verb)
-        }
+        merged.map(m =>
+          (Right(m): Either[DataFrame, (StructType, Seq[Row])], verb))
       }
-      val (rows, rowsLocal, verbatim) = localBuilt match {
+      val (rows, verbatim) = localBuilt match {
         case Some(t) => t
         case None =>
           // the touched list rides as a broadcast local relation, not
@@ -552,8 +531,8 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
                   .isin(verb.toSeq: _*))
             minusVerbatim.drop("__mfile")
           }
-          (addedStats.fold(carried)(
-            carried.unionByName(_, allowMissingColumns = true)), None, verb)
+          (Left(addedStats.fold(carried)(
+            carried.unionByName(_, allowMissingColumns = true))), verb)
       }
       // deletion-vector carry: entries for files this op rewrote or
       // removed are RESOLVED (the rewrite scanned DV-filtered rows, so
@@ -604,8 +583,7 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
         verbatimMarkers = verbatim,
         changeData = None, changeDataFrom = changeTmp,
         op = op, txn = txn, dv = dvNext, dvLocal = dvNextLocal,
-        clustered = clusteredOf(moved), observedParts = aPin,
-        manifestRowsLocal = rowsLocal)
+        clustered = clusteredOf(moved), observedParts = aPin)
     }
     var curDir = dir
     var curManifest = manifest
@@ -1171,8 +1149,8 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
     keyCols.foreach(k => require(schema.fieldNames.contains(k),
       s"key column $k is not in the table schema ${schema.simpleString}"))
     require(
-      source.schema.map(f => (f.name, f.dataType)).toSet ==
-        schema.map(f => (f.name, f.dataType)).toSet,
+      source.schema.map(f => (f.name, readTypeOf(f.dataType))).toSet ==
+        schema.map(f => (f.name, readTypeOf(f.dataType))).toSet,
       s"source schema ${source.schema.simpleString} must carry exactly the " +
         s"table's columns ${schema.simpleString} (any order)")
     val observed = listManifestNames(fs, dir)
@@ -1271,8 +1249,8 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
     val schema0 = tableSchemaIn(spark, path, dir)
     if (!mergeSchema) {
       require(
-        source.map(f => (f.name, f.dataType)).toSet ==
-          schema0.map(f => (f.name, f.dataType)).toSet,
+        source.map(f => (f.name, readTypeOf(f.dataType))).toSet ==
+          schema0.map(f => (f.name, readTypeOf(f.dataType))).toSet,
         s"source schema ${source.simpleString} must carry exactly the " +
           s"table's columns ${schema0.simpleString} (any order); pass " +
           "mergeSchema = true to add columns")
@@ -1280,7 +1258,8 @@ private[sources] trait StorageDml { this: DataSkipping.type =>
     }
     schema0.foreach { f =>
       source.find(_.name == f.name) match {
-        case Some(b) => require(b.dataType == f.dataType,
+        case Some(b) => require(
+          readTypeOf(b.dataType) == readTypeOf(f.dataType),
           s"column ${f.name}: source type ${b.dataType.simpleString} must " +
             s"match stored ${f.dataType.simpleString} — evolution adds " +
             "columns, never retypes")

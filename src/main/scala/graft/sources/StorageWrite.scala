@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Equal
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.graft.TrackedParquetWrite.readTypeOf
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 
 /** The WRITE surface: writeWithStats (fresh v0 + the generation-commit overwrite), CONVERT TO GRAFT, appendWithStats with schema evolution and named commit markers, per-file stats computation, sidecars, staging move-in and the manifest-file commit primitives.
   *
@@ -28,9 +29,9 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
     * extra filesystem listing), so a pruned read can build its file
     * index purely from the manifest. The table schema is persisted
     * alongside (`_table_schema.json`) so planning never touches a
-    * data-file footer. Stats are computed in ONE extra scan of the
-    * written files, grouped by file (partial-agg shuffle keyed on
-    * file path — one row per file crosses the wire).
+    * data-file footer. Stats are gathered by the write tasks
+    * themselves ([[stagedWriteTracked]]): the write never reads back
+    * its own output, neither for stats nor for its schema.
     */
   def writeWithStats(df: DataFrame, path: String, statsCols: Seq[String]): Unit =
     writeWithStats(df, path, statsCols, Nil)
@@ -203,11 +204,13 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
         .map(r => rootRelativeOrName(fs, path, r.getString(0))).toSeq
     val staging = new Path(path,
       s".overwrite-staging-${java.util.UUID.randomUUID}")
+    val tracked = statsCols ++ partitionBy
+    val schema = writtenTableSchema(df.schema, partitionBy)
+    val ms = manifestSchemaFor(schema, tracked, partitionBy,
+      bloom.map(_._1).getOrElse(Nil))
     // per-file manifest stats gathered in the write tasks (guide §6)
-    // — the statsFor read-back below then never executes
     val writeStats = try {
-      stagedWriteTracked(df, staging, partitionBy,
-        statsCols ++ partitionBy, bloom)
+      stagedWriteTracked(df, staging, partitionBy, tracked, bloom)
     } catch {
       case e: Throwable =>
         try fs.delete(staging, true)
@@ -220,37 +223,15 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
     require(moved.nonEmpty,
       s"overwrite of $path wrote no data files (empty input) — " +
         "an empty overwrite is refused, like the fresh-table write path")
-    val (schema, tracked, written) =
-      if (partitionBy.isEmpty) {
-        // read-back schema like the fresh flat write (nullable)
-        val w = spark.read.parquet(moved: _*)
-        (w.schema, statsCols, w)
-      } else {
-        // same schema construction + part-aware stats scan as the
-        // fresh partitioned write — but restricted to the MOVED
-        // files (the root still holds the old generation's files)
-        val sch = StructType(
-          (df.schema.filterNot(f => partitionBy.contains(f.name)) ++
-            partitionBy.map(c => df.schema(df.schema.fieldIndex(c))))
-            .map(_.copy(nullable = true)))
-        (sch, statsCols ++ partitionBy,
-          partAwareStatusScanCols(spark, path, partitionBy, sch,
-            statusesFor(fs, moved)))
-      }
-    val stats = statsFor(written, tracked, bloom)
-    val statsLocal: Option[(StructType, Seq[Row])] =
-      if (moved.size > 10000) None
-      else writeStats.flatMap(ws => statsRowsFromWrite(fs, path, moved,
-          tracked, partitionBy, bloom.map(_._1).getOrElse(Nil), ws,
-          stats.schema))
-        .map(rows => (stats.schema, rows))
+    val rows = statsRowsFromWrite(fs, path, moved, tracked, partitionBy,
+      bloom.map(_._1).getOrElse(Nil), writeStats, ms)
     val feats = Set("nulls") ++
       (if (partitionBy.nonEmpty) Set(PartitionedFeature)
        else Set.empty[String]) ++
       bloom.map(b => bloomFeatureLine(b)).toSet ++
       (if (changeFeed) Set(CdfFeature) else Set.empty[String])
-    publishGeneration(spark, fs, path, dir, stats, schema, tracked,
-      feats, stats.schema,
+    publishGeneration(spark, fs, path, dir, Right((ms, rows)), schema,
+      tracked, feats, ms,
       removedData = removed,
       markerRetentionMs = RetentionDefaultMs, opStartMs = opStart,
       verbatimMarkers = Set.empty,
@@ -258,8 +239,7 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
       clustered = None, observedParts = Some(observed),
       resetDeclarations = true,
       partitionColsNew = Some(partitionBy).filter(_.nonEmpty),
-      extraSidecars = extraSidecars,
-      manifestRowsLocal = statsLocal)
+      extraSidecars = extraSidecars)
     vacuumTable(spark, path, RetentionDefaultMs)
   }
 
@@ -300,107 +280,68 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
       // swap (see overwriteGeneration)
       overwriteGeneration(spark, tfs, path, df, statsCols, bloom,
         changeFeed, partitionBy, extraSidecars)
-    } else if (partitionBy.isEmpty) {
-      // per-file manifest stats gathered in the write tasks (guide §6)
-      // — the statsFor read-back below then never executes
-      var writeStats: Option[Seq[org.apache.spark.sql.graft.FileWriteStats]] =
-        None
-      stagedOverwrite(spark, path, s =>
-        writeStats = stagedWriteTracked(df, new Path(s), Nil, statsCols, bloom))
-      val written = spark.read.parquet(path)
-      val stats = statsFor(written, statsCols, bloom)
-      val moved = tfs.listStatus(new Path(path)).filter { f =>
-        val n = f.getPath.getName
-        f.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&
-          !n.startsWith(".")
-      }.map(_.getPath.toString).toSeq
-      val statsLocal: Option[Seq[Row]] =
-        if (moved.size > 10000) None
-        else writeStats.flatMap(ws => statsRowsFromWrite(tfs, path, moved,
-          statsCols, Nil, bloomCols, ws, stats.schema))
-      // v0, committed by its marker — the overwrite above cleared the
-      // table dir, so this is always the first generation
-      val gen = s"$path/$StatsDir/v0"
-      statsLocal match {
-        case Some(rows) =>
-          tfs.mkdirs(new Path(gen))
-          writeLocalParquetFile(spark, stats.schema, rows,
-            new Path(gen, s"part-${java.util.UUID.randomUUID}.parquet"))
-        case None => stats.write.mode("overwrite").parquet(gen)
-      }
-      writeSidecars(spark, gen, written.schema, statsCols,
-        Set("nulls") ++ bloom.map(b => bloomFeatureLine(b)).toSet ++
-          (if (changeFeed) Set(CdfFeature) else Set.empty),
-        manifestSchema = Some(stats.schema))
-      writeExtraSidecars(spark, gen, extraSidecars)
-      writeOpFile(tfs, new Path(gen), "WRITE", opStart)
-      commitGen(spark, new Path(gen))
     } else {
-      // Staged like the flat branch (write job first, destructive
-      // clear after) — and the explicit clear also keeps "this is
-      // always the first generation" under spark.sql.sources
-      // .partitionOverwriteMode=dynamic, where a direct partitioned
-      // overwrite replaces only the partitions the batch touches and
-      // stale UNCOMMITTED `_stats` debris would otherwise survive
-      // under the fresh v0 below. Staging into a fresh empty dir
-      // neutralizes dynamic mode for the write itself (every
-      // partition is "touched" in an empty target).
+      // Staged (write job first, destructive clear after) — and the
+      // explicit clear also keeps "this is always the first
+      // generation" under spark.sql.sources.partitionOverwriteMode
+      // =dynamic, where a direct partitioned overwrite replaces only
+      // the partitions the batch touches and stale UNCOMMITTED
+      // `_stats` debris would otherwise survive under the fresh v0
+      // below. Staging into a fresh empty dir neutralizes dynamic
+      // mode for the write itself (every partition is "touched" in
+      // an empty target).
+      val tracked = statsCols ++ partitionBy
+      val schema = writtenTableSchema(df.schema, partitionBy)
+      val ms = manifestSchemaFor(schema, tracked, partitionBy, bloomCols)
       // per-file manifest stats gathered in the write tasks (guide §6)
-      // — the part-aware statsFor read-back below then never executes
-      var writeStats: Option[Seq[org.apache.spark.sql.graft.FileWriteStats]] =
-        None
+      var writeStats = Seq.empty[org.apache.spark.sql.graft.FileWriteStats]
       stagedOverwrite(spark, path, s =>
         writeStats = stagedWriteTracked(df, new Path(s), partitionBy,
-          statsCols ++ partitionBy, bloom))
-      // NULLABLE sidecar, matching the flat path's read-back schemas:
-      // a later evolution batch may omit a column, and a REQUIRED
-      // column missing from a file fails the parquet reader
-      val schema = StructType(
-        (df.schema.filterNot(f => partitionBy.contains(f.name)) ++
-          partitionBy.map(c => df.schema(df.schema.fieldIndex(c))))
-          .map(_.copy(nullable = true)))
-      // v0 stats run through the SAME part-aware scan every append and
-      // read uses (partition values cast from the raw directory
-      // segments via castPartValue), NOT through spark.read.parquet
-      // discovery: for a STRING partition column holding a
-      // numeric-looking, non-canonical value ('01'), discovery narrows
-      // to int 1 and the cast back yields '1', while the read path
-      // serves the raw '01' — a `= '01'` predicate would then prune
-      // the file against its own manifest and silently drop rows.
-      val fs = new Path(path).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      val listed = listPartitionedDataFiles(fs, new Path(path))
-      val written = partAwareStatusScanCols(spark, path, partitionBy, schema,
-        listed)
-      val tracked = statsCols ++ partitionBy
-      val stats = statsFor(written, tracked, bloom)
-      val statsLocal: Option[Seq[Row]] =
-        if (listed.size > 10000) None
-        else writeStats.flatMap(ws => statsRowsFromWrite(fs, path,
-          listed.map(_.getPath.toString), tracked, partitionBy, bloomCols,
-          ws, stats.schema))
-      val gen = s"$path/$StatsDir/v0"
-      statsLocal match {
-        case Some(rows) =>
-          fs.mkdirs(new Path(gen))
-          writeLocalParquetFile(spark, stats.schema, rows,
-            new Path(gen, s"part-${java.util.UUID.randomUUID}.parquet"))
-        case None => stats.write.mode("overwrite").parquet(gen)
-      }
-      writeSidecars(spark, gen, schema, tracked,
-        Set("nulls", PartitionedFeature) ++
+          tracked, bloom))
+      val written = listPartitionedDataFiles(tfs, new Path(path))
+        .map(_.getPath.toString)
+      val rows = statsRowsFromWrite(tfs, path, written, tracked,
+        partitionBy, bloomCols, writeStats, ms)
+      // v0, committed by its marker — the overwrite above cleared the
+      // table dir, so this is always the first generation
+      val gen = new Path(s"$path/$StatsDir/v0")
+      tfs.mkdirs(gen)
+      writeLocalParquetFile(spark, ms, rows,
+        new Path(gen, s"part-${java.util.UUID.randomUUID}.parquet"))
+      writeSidecars(spark, gen.toString, schema, tracked,
+        Set("nulls") ++
+          (if (partitionBy.nonEmpty) Set(PartitionedFeature)
+           else Set.empty[String]) ++
           bloom.map(b => bloomFeatureLine(b)).toSet ++
-          (if (changeFeed) Set(CdfFeature) else Set.empty),
-        manifestSchema = Some(stats.schema))
-      val out = fs.create(new Path(gen, PartitionColsFile), true)
-      try out.write(partitionBy.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      writeExtraSidecars(spark, gen, extraSidecars)
-      writeOpFile(fs, new Path(gen), "WRITE", opStart)
-      commitGen(spark, new Path(gen))
+          (if (changeFeed) Set(CdfFeature) else Set.empty[String]),
+        manifestSchema = Some(ms))
+      if (partitionBy.nonEmpty) {
+        val out = tfs.create(new Path(gen, PartitionColsFile), true)
+        try out.write(partitionBy.mkString("\n")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        finally out.close()
+      }
+      writeExtraSidecars(spark, gen.toString, extraSidecars)
+      writeOpFile(tfs, gen, "WRITE", opStart)
+      commitGen(spark, gen)
     }
   }
+
+  /** The table schema a write of `frame` records: its data columns,
+    * then the partition columns, nullable at every level — what a
+    * file-source read of the written files serves (a later evolution
+    * batch may omit a column, and a REQUIRED column missing from a
+    * file fails the parquet reader). Partition column TYPES stay the
+    * frame's own: the sidecar is authoritative and directory strings
+    * cast back to it at read time. Appends compare batch and stored
+    * types under the same relaxation ([[readTypeOf]]).
+    */
+  private[sources] def writtenTableSchema(frame: StructType,
+      partCols: Seq[String]): StructType =
+    readTypeOf(StructType(
+      frame.filterNot(f => partCols.contains(f.name)) ++
+        partCols.map(c => frame(frame.fieldIndex(c)))))
+      .asInstanceOf[StructType]
 
   /** Caller-supplied generation sidecars for the FRESH-table write
     * branches (the overwrite branch routes through
@@ -684,7 +625,7 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
     else org.apache.spark.sql.catalyst.expressions.Cast(
       Literal(org.apache.spark.unsafe.types.UTF8String.fromString(
         ExternalCatalogUtils.unescapePathName(raw)),
-        org.apache.spark.sql.types.StringType), dt, Some("UTC"))
+        StringType), dt, Some("UTC"))
       .eval(InternalRow.empty)
 
   /** Turn on the change data feed for an EXISTING stats table (the
@@ -762,18 +703,6 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
   private[sources] def bloomFeatureLine(b: (Seq[String], Int, Int)): String =
     s"bloom:${b._2}:${b._3}:${b._1.mkString(",")}"
 
-  private[sources] def ndvFeatureLine(n: (Seq[String], Int)): String =
-    s"ndv:${n._2}:${n._1.mkString(",")}"
-
-  /** Parse the `ndv:<p>:<cols>` feature line — per-file HLL register
-    * sets at precision p for those columns.
-    */
-  private[sources] def ndvFeature(features: Set[String]): Option[(Seq[String], Int)] =
-    features.collectFirst { case f if f.startsWith("ndv:") =>
-      val parts = f.split(":", 3)
-      (parts(2).split(",").toSeq, parts(1).toInt)
-    }
-
   /** Parse the `bloom:<bits>:<hashes>:<cols>` feature line. */
   private[sources] def bloomFeature(features: Set[String]): Option[(Seq[String], Int, Int)] =
     features.collectFirst { case f if f.startsWith("bloom:") =>
@@ -797,11 +726,12 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
   /** Per-file stats rows (one output row per input file) for a scan
     * that carries `_metadata`: min/max per stats column, row count,
     * file size and mtime. Partial-agg shuffle keyed on file path —
-    * one row per file crosses the wire.
+    * one row per file crosses the wire. Only [[convertToStats]] runs
+    * it: the one op that indexes files graft did not write (every
+    * write gathers the same rows in its write tasks).
     */
   private[sources] def statsFor(scan: DataFrame, statsCols: Seq[String],
-      bloom: Option[(Seq[String], Int, Int)] = None,
-      ndv: Option[(Seq[String], Int)] = None): DataFrame = {
+      bloom: Option[(Seq[String], Int, Int)] = None): DataFrame = {
     if (bloom.isDefined) graft.plans.GraftFunctions.register(scan.sparkSession)
     val aggs = statsCols.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"),
@@ -816,33 +746,48 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
       count(lit(1)).as("n_rows"),
       max(col("_metadata.file_size")).as("file_size"),
       max(unix_millis(col("_metadata.file_modification_time"))).as("mod_time"))
-    val base = scan.select(col("*"), col("_metadata"))
+    scan.select(col("*"), col("_metadata"))
       .groupBy(col("_metadata.file_path").as("file"))
       .agg(aggs.head, aggs.tail: _*)
-    // per-file HLL register sets (`ndv_<col>`: sorted sparse
-    // (bucket, rho) structs, ≤ 2^p entries) — the column behind
-    // [[approxDistinctMeta]]. Registers use EXACTLY the
-    // [[graft.operators.Sketches.registerColumns]] hash chain, so a
-    // fold over file registers is bit-identical to sketching the
-    // rows. Needs its own per-(file, bucket) aggregate, hence the
-    // extra write-time pass per column — opt in for columns you ask
-    // distinct-count questions about. An all-null file (or a file
-    // predating the column) joins to a NULL register set = the empty
-    // sketch, exact because COUNT(DISTINCT) ignores nulls too.
-    val withNdv = ndv.fold(base) { case (cols, p) =>
-      cols.foldLeft(base) { (acc, c) =>
-        val (bucket, rho) = graft.operators.Sketches.registerColumns(col(c), p)
-        val regs = scan.select(col("_metadata.file_path").as("file"), col(c))
-          .filter(col(c).isNotNull)
-          .groupBy(col("file"), bucket.cast("int").as("b"))
-          .agg(max(rho).cast("int").as("r"))
-          .groupBy(col("file"))
-          .agg(sort_array(collect_list(struct(col("b"), col("r"))))
-            .as(s"ndv_$c"))
-        acc.join(regs, Seq("file"), "left")
+      .coalesce(1)
+  }
+
+  /** The schema of the manifest rows for `tracked` (plus the Bloom
+    * columns) over a table of `tableSchema` — the schema [[statsFor]]
+    * would produce, by schema arithmetic alone (no plan analysed):
+    * `file`, then min/max/null count per tracked column (a nested
+    * path takes its leaf type), the Bloom word arrays, row count,
+    * size and mtime. Every partition column must be tracked: its rows
+    * carry min = max = the directory value. A column the table does
+    * not hold is refused by name.
+    */
+  private[sources] def manifestSchemaFor(tableSchema: StructType,
+      tracked: Seq[String], partCols: Seq[String],
+      bloomCols: Seq[String]): StructType = {
+    partCols.foreach(c => require(tracked.contains(c),
+      s"partition column $c must be tracked (min = max = directory value)"))
+    def typeOf(c: String): DataType =
+      c.split('.').foldLeft(tableSchema: DataType) {
+        case (s: StructType, n) =>
+          s.find(_.name == n).orElse(s.find(_.name.equalsIgnoreCase(n)))
+            .getOrElse(throw new IllegalArgumentException(
+              s"stats column $c is not in the table schema ${tableSchema.simpleString}"))
+            .dataType
+        case (t, _) => throw new IllegalArgumentException(
+          s"stats column $c descends into non-struct type ${t.simpleString}")
       }
-    }
-    withNdv.coalesce(1)
+    StructType(
+      StructField("file", StringType, nullable = false) +:
+      (tracked.flatMap { c =>
+        val t = typeOf(c)
+        Seq(StructField(s"min_$c", t), StructField(s"max_$c", t),
+          StructField(s"nulls_$c", LongType))
+      } ++ bloomCols.map { c =>
+        typeOf(c)
+        StructField(s"bloom_$c", ArrayType(LongType, containsNull = false),
+          nullable = false)
+      } ++ Seq(StructField("n_rows", LongType, nullable = false),
+        StructField("file_size", LongType), StructField("mod_time", LongType))))
   }
 
   /** O(1) read of a small text/JSON sidecar in a manifest dir. */
@@ -1147,7 +1092,7 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
     val tracked = trackedCols(spark, dir)
     val stored = tableSchemaIn(spark, path, dir)
     val storedByName = stored.map(f => f.name -> f.dataType).toMap
-    val batchTypes = df.schema.map(f => (f.name, f.dataType))
+    val batchTypes = df.schema.map(f => (f.name, readTypeOf(f.dataType)))
     val newFields = df.schema.filterNot(f => storedByName.contains(f.name))
 
     val schema: StructType =
@@ -1156,7 +1101,7 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
           s"statsCols [${statsCols.sorted.mkString(",")}] must equal the table's " +
             s"tracked columns [${tracked.toSeq.sorted.mkString(",")}] — a mixed-schema " +
             "manifest silently drops files from pruned reads")
-        require(batchTypes == stored.map(f => (f.name, f.dataType)),
+        require(batchTypes == stored.map(f => (f.name, readTypeOf(f.dataType))),
           s"append schema ${df.schema.simpleString} must match stored " +
             s"${stored.simpleString}; pass mergeSchema = true to add columns")
         stored
@@ -1166,7 +1111,7 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
         // files, nulls at read time), it never retypes
         stored.foreach { f =>
           df.schema.find(_.name == f.name).foreach(b =>
-            require(b.dataType == f.dataType,
+            require(readTypeOf(b.dataType) == readTypeOf(f.dataType),
               s"column ${f.name}: batch type ${b.dataType.simpleString} must match " +
                 s"stored ${f.dataType.simpleString} — evolution adds columns, never retypes"))
         }
@@ -1210,6 +1155,8 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
     // stats ride the write tasks (guide §6 — no re-scan of
     // just-written output).
     val bloomCfg = bloomFeature(feats)
+    val ms = manifestSchemaFor(schema, statsCols, Nil,
+      bloomCfg.map(_._1).getOrElse(Nil))
     val writeStats = stagedWriteTracked(df, staging, Nil, statsCols, bloomCfg)
     // validated under the TABLE schema (already widened if this batch
     // evolves it): a batch omitting a constrained column reads as
@@ -1217,33 +1164,15 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
     enforceConstraintsOnStaged(spark, fs, dir, staging, schema, "append")
     if (poisonTzOnCommit) poisonGeneratedTzOnDrift(spark, fs, dir)
     val moved = moveIn(fs, staging, new Path(path))
-    val batchStats =
-      if (moved.nonEmpty)
-        statsFor(statusScan(spark, path, schema, statusesFor(fs, moved)),
-          statsCols, bloom = bloomCfg)
-      else readManifestIn(spark, dir).limit(0) // zero-row marker
-    // write-task stats registered driver-side (bounded batches): the
-    // statsFor frame above then never executes — its schema is the
-    // parity anchor for the assembled rows
-    val batchLocal: Option[(StructType, Seq[Row])] =
-      if (moved.isEmpty) Some((batchStats.schema, Nil))
-      else if (moved.size > 10000) None
-      else writeStats.flatMap(ws => statsRowsFromWrite(fs, path, moved,
-          statsCols, Nil, bloomCfg.map(_._1).getOrElse(Nil), ws,
-          batchStats.schema))
-        .map(rows => (batchStats.schema, rows))
+    val batchRows = statsRowsFromWrite(fs, path, moved, statsCols, Nil,
+      bloomCfg.map(_._1).getOrElse(Nil), writeStats, ms)
+    // an empty batch still commits its marker, as a zero-row file
     marker match {
       case None if moved.isEmpty => ()
-      case None => batchLocal match {
-        case Some((s, rows)) => writeLocalParquetFile(spark, s, rows,
-          new Path(dir, s"part-${java.util.UUID.randomUUID}.parquet"))
-        case None => batchStats.write.mode("append").parquet(dir)
-      }
-      case Some(dest) => batchLocal match {
-        case Some((s, rows)) => writeManifestFileLocal(spark, fs, path,
-          s, rows, dest)
-        case None => writeManifestFile(spark, fs, path, batchStats, dest)
-      }
+      case None => writeLocalParquetFile(spark, ms, batchRows,
+        new Path(dir, s"part-${java.util.UUID.randomUUID}.parquet"))
+      case Some(dest) => writeManifestFile(spark, fs, path, ms,
+        batchRows, dest)
     }
     // OPTIMISTIC RE-REGISTRATION: a maintenance op may have committed
     // a new generation while this append was in flight; its publisher
@@ -1299,18 +1228,11 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
           case Some(n) =>
             // the publisher's reconcile may land the same marker name
             // concurrently — its exclusive rename makes one winner
-            try batchLocal match {
-              case Some((s, rows)) => writeManifestFileLocal(spark, fs,
-                path, s, rows, new Path(cur, s"$n.parquet"))
-              case None => writeManifestFile(spark, fs, path, batchStats,
-                new Path(cur, s"$n.parquet"))
-            }
+            try writeManifestFile(spark, fs, path, ms, batchRows,
+              new Path(cur, s"$n.parquet"))
             catch { case _: IllegalArgumentException => () }
-          case None => batchLocal match {
-            case Some((s, rows)) => writeLocalParquetFile(spark, s, rows,
-              new Path(cur, s"part-${java.util.UUID.randomUUID}.parquet"))
-            case None => batchStats.write.mode("append").parquet(cur)
-          }
+          case None => writeLocalParquetFile(spark, ms, batchRows,
+            new Path(cur, s"part-${java.util.UUID.randomUUID}.parquet"))
         }
         registeredIn = cur
         cur = manifestDirOf(fs, path)
@@ -1333,26 +1255,13 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
       statsCols: Seq[String], newFields: Seq[StructField]): StructType = {
     val existing = manifestSchemaIn(
       new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
-    val typesByName = newFields.map(f => f.name -> f.dataType).toMap
     // a stats key may be a NESTED path rooted at a new struct column
-    // (`meta.b`) — resolve its leaf type through the struct
-    def typeOfPath(c: String): Option[DataType] = {
-      def walk(dt: DataType, rest: List[String]): Option[DataType] = rest match {
-        case Nil => Some(dt)
-        case head :: tail => dt match {
-          case st: StructType =>
-            st.fields.find(_.name == head).flatMap(f => walk(f.dataType, tail))
-          case _ => None
-        }
-      }
-      val parts = c.split("\\.").toList
-      typesByName.get(parts.head).flatMap(walk(_, parts.tail))
-    }
+    // (`meta.b`); keys over existing columns already have their stats
+    val newNames = newFields.map(_.name).toSet
     val have = existing.fieldNames.toSet
-    val added = statsCols.flatMap(c => typeOfPath(c).toSeq.flatMap { dt =>
-      Seq(StructField(s"min_$c", dt), StructField(s"max_$c", dt),
-        StructField(s"nulls_$c", org.apache.spark.sql.types.LongType))
-    }).filterNot(f => have(f.name))
+    val added = manifestSchemaFor(StructType(newFields),
+        statsCols.filter(c => newNames(c.takeWhile(_ != '.'))), Nil, Nil)
+      .filterNot(f => have(f.name))
     StructType(existing.fields ++ added)
   }
 
@@ -1408,8 +1317,8 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
     val statsData = statsCols0.filterNot(partCols.contains)
     val schema: StructType =
       if (!mergeSchema) {
-        require(df0.schema.map(f => (f.name, f.dataType)).toSet ==
-            stored.map(f => (f.name, f.dataType)).toSet,
+        require(df0.schema.map(f => (f.name, readTypeOf(f.dataType))).toSet ==
+            stored.map(f => (f.name, readTypeOf(f.dataType))).toSet,
           s"append schema ${df0.schema.simpleString} must carry exactly the " +
             s"stored columns ${stored.simpleString} — partition columns " +
             "included (their values route each row to its directory); pass " +
@@ -1427,7 +1336,7 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
         // batch's files (nulls at read time)
         stored.foreach { f =>
           df0.schema.find(_.name == f.name).foreach(b =>
-            require(b.dataType == f.dataType,
+            require(readTypeOf(b.dataType) == readTypeOf(f.dataType),
               s"column ${f.name}: batch type ${b.dataType.simpleString} must " +
                 s"match stored ${f.dataType.simpleString} — evolution adds " +
                 "columns, never retypes"))
@@ -1468,41 +1377,25 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
     val df = df0.select(
       schema.fieldNames.filter(df0.columns.contains).map(col).toSeq: _*)
     val staging = new Path(path, s".append-${java.util.UUID.randomUUID}")
-    // stats shape resolved BEFORE the write: per-file manifest stats
-    // (partition values included — min=max=directory value) ride the
-    // write tasks, so the part-aware statsFor below usually never
-    // executes (guide §6 — no re-scan of just-written output)
+    // per-file manifest stats (partition values included — min=max
+    // =directory value) ride the write tasks (guide §6)
     val bloomCfg = bloomFeature(feats)
+    val batchTracked = statsData ++ partCols
+    val ms = manifestSchemaFor(schema, batchTracked, partCols,
+      bloomCfg.map(_._1).getOrElse(Nil))
     val writeStats = stagedWriteTracked(df, staging, partCols,
-      statsData ++ partCols, bloomCfg)
+      batchTracked, bloomCfg)
     enforceConstraintsOnStaged(spark, fs, dir, staging, schema, "append")
     if (poisonTzOnCommit) poisonGeneratedTzOnDrift(spark, fs, dir)
     val moved = moveInPartitioned(fs, staging, new Path(path))
-    val batchStats =
-      if (moved.nonEmpty)
-        statsFor(partAwareStatusScanCols(spark, path, partCols, schema,
-            statusesFor(fs, moved)),
-          statsData ++ partCols, bloom = bloomCfg)
-      else readManifestIn(spark, dir).limit(0) // zero-row marker
-    val batchLocal: Option[(StructType, Seq[Row])] =
-      if (moved.isEmpty) Some((batchStats.schema, Nil))
-      else if (moved.size > 10000) None
-      else writeStats.flatMap(ws => statsRowsFromWrite(fs, path, moved,
-          statsData ++ partCols, partCols,
-          bloomCfg.map(_._1).getOrElse(Nil), ws, batchStats.schema))
-        .map(rows => (batchStats.schema, rows))
+    val batchRows = statsRowsFromWrite(fs, path, moved, batchTracked,
+      partCols, bloomCfg.map(_._1).getOrElse(Nil), writeStats, ms)
     commitName.map(n => new Path(dir, s"$n.parquet")) match {
       case None if moved.isEmpty => ()
-      case None => batchLocal match {
-        case Some((s, rows)) => writeLocalParquetFile(spark, s, rows,
-          new Path(dir, s"part-${java.util.UUID.randomUUID}.parquet"))
-        case None => batchStats.write.mode("append").parquet(dir)
-      }
-      case Some(dest) => batchLocal match {
-        case Some((s, rows)) => writeManifestFileLocal(spark, fs, path,
-          s, rows, dest)
-        case None => writeManifestFile(spark, fs, path, batchStats, dest)
-      }
+      case None => writeLocalParquetFile(spark, ms, batchRows,
+        new Path(dir, s"part-${java.util.UUID.randomUUID}.parquet"))
+      case Some(dest) => writeManifestFile(spark, fs, path, ms,
+        batchRows, dest)
     }
     // OPTIMISTIC RE-REGISTRATION, same as the flat path: a racing
     // compaction/DML/restore may have committed a new generation
@@ -1547,18 +1440,11 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
         }
         if (!claimed) commitName match {
           case Some(n) =>
-            try batchLocal match {
-              case Some((s, rows)) => writeManifestFileLocal(spark, fs,
-                path, s, rows, new Path(cur, s"$n.parquet"))
-              case None => writeManifestFile(spark, fs, path, batchStats,
-                new Path(cur, s"$n.parquet"))
-            }
+            try writeManifestFile(spark, fs, path, ms, batchRows,
+              new Path(cur, s"$n.parquet"))
             catch { case _: IllegalArgumentException => () }
-          case None => batchLocal match {
-            case Some((s, rows)) => writeLocalParquetFile(spark, s, rows,
-              new Path(cur, s"part-${java.util.UUID.randomUUID}.parquet"))
-            case None => batchStats.write.mode("append").parquet(cur)
-          }
+          case None => writeLocalParquetFile(spark, ms, batchRows,
+            new Path(cur, s"part-${java.util.UUID.randomUUID}.parquet"))
         }
         registeredIn = cur
         cur = manifestDirOf(fs, path)
@@ -1614,23 +1500,6 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
     moved
   }
 
-  /** Write `rows` as ONE parquet file at exactly `dest` (staged,
-    * then renamed into place) — the single-file manifest commit
-    * primitive behind named appends and preserved markers.
-    */
-  private[sources] def writeManifestFile(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, table: String,
-      rows: DataFrame, dest: Path): Unit = {
-    val tmp = new Path(table, s".stats-${java.util.UUID.randomUUID}")
-    rows.coalesce(1).write.parquet(tmp.toString)
-    val part = fs.listStatus(tmp)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    require(part.length == 1, s"expected one stats part, got ${part.length}")
-    require(fs.rename(part.head.getPath, dest),
-      s"stats commit rename to $dest failed")
-    fs.delete(tmp, true)
-  }
-
   /** Write `rows` as ONE parquet file at exactly `dest`, entirely on
     * the DRIVER — the manifest commit primitive for rows that are
     * already local (cache-served carries, zero-row markers): no Spark
@@ -1683,12 +1552,13 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
     finally writer.close()
   }
 
-  /** [[writeManifestFile]] for rows already LOCAL on the driver:
-    * writes the single part driver-side ([[writeLocalParquetFile]])
-    * and renames it into place — zero Spark jobs. Same exclusive-
-    * rename collision contract (require → IllegalArgumentException).
+  /** Write `rows` as ONE manifest file at exactly `dest` — the
+    * single-file commit primitive behind named appends: the part is
+    * written driver-side ([[writeLocalParquetFile]]) and renamed into
+    * place, zero Spark jobs. A lost exclusive rename surfaces as
+    * IllegalArgumentException (require).
     */
-  private[sources] def writeManifestFileLocal(spark: SparkSession,
+  private[sources] def writeManifestFile(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, table: String,
       schema: StructType, rows: Seq[Row], dest: Path): Unit = {
     val tmp = new Path(table, s".stats-${java.util.UUID.randomUUID}.parquet")
@@ -1699,70 +1569,63 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
   /** Stage `df` into `staging` gathering per-file manifest stats IN
     * the write tasks (guide §6: a write must not re-scan its own
     * output; the Delta statistics-tracker shape via
-    * [[org.apache.spark.sql.graft.TrackedParquetWrite]]). Falls back
-    * to the plain staged writer — identical machinery, no tracker —
-    * when the stats shape is unsupported, returning None; the caller
-    * then keeps its read-back `statsFor` route.
+    * [[org.apache.spark.sql.graft.TrackedParquetWrite]], which refuses
+    * a stats shape it cannot serve before writing anything).
     */
   private[sources] def stagedWriteTracked(df: DataFrame, staging: Path,
       partCols: Seq[String], statsCols: Seq[String],
       bloom: Option[(Seq[String], Int, Int)])
-      : Option[Seq[org.apache.spark.sql.graft.FileWriteStats]] = {
-    val statsData = statsCols.filterNot(partCols.contains)
-    val tracked = org.apache.spark.sql.graft.TrackedParquetWrite.write(
-      df, staging.toString, partCols, statsData,
+      : Seq[org.apache.spark.sql.graft.FileWriteStats] =
+    org.apache.spark.sql.graft.TrackedParquetWrite.write(
+      df, staging.toString, partCols, statsCols.filterNot(partCols.contains),
       bloom.map(_._1).getOrElse(Nil),
       bloom.map(_._2).getOrElse(64), bloom.map(_._3).getOrElse(1))
-    if (tracked.isEmpty) {
-      if (partCols.isEmpty) df.write.parquet(staging.toString)
-      else df.write.partitionBy(partCols: _*).parquet(staging.toString)
-    }
-    tracked
-  }
 
   /** Manifest rows for the `moved` files assembled from write-task
-    * stats — the LOCAL replacement for a `statsFor` re-scan of
-    * just-written bytes. `statsSchema` is the schema the `statsFor`
-    * frame WOULD have produced (built lazily by the caller — analysis
-    * only, no action), so type/order/nullability parity is by
-    * construction. Returns None when any moved file lacks a tracker
-    * entry, two entries share one relative path, or the schema
-    * carries a column the tracker cannot fill (ndv registers) — the
-    * caller then runs the distributed scan.
-    * Zero-row files are dropped exactly like the grouped aggregate
-    * drops them (no input rows → no group).
+    * stats — the only way a write learns its files' stats.
+    * `statsSchema` is [[manifestSchemaFor]]'s schema for the write, so
+    * type/order/nullability match the manifest by construction. A
+    * moved file without a tracker entry, two entries sharing one
+    * relative path, or a schema column the tracker does not fill is a
+    * fault of the write, thrown as [[IllegalStateException]] naming
+    * the file or column. Zero-row files are dropped exactly like the
+    * grouped [[statsFor]] aggregate drops them (no input rows → no
+    * group).
     */
   private[sources] def statsRowsFromWrite(
       fs: org.apache.hadoop.fs.FileSystem, path: String,
       moved: Seq[String], tracked: Seq[String], partCols: Seq[String],
       bloomCols: Seq[String],
       files: Seq[org.apache.spark.sql.graft.FileWriteStats],
-      statsSchema: StructType): Option[Seq[Row]] = {
+      statsSchema: StructType): Seq[Row] = {
     // `moved` strings arrive raw (moveIn: table-root relative Path
     // concatenation) or fs-qualified (status listings) — match both
     // against the tracker's raw task-path segments, no URI decoding
     // (the on-disk names ARE the escaped forms)
     val roots = Seq(new Path(path).toString + "/",
       fs.makeQualified(new Path(path)).toString + "/").distinct
-    val byRel = files.map(f => f.relPath -> f).toMap
-    if (byRel.size != files.size) return None // colliding keys — re-scan
+    val byRel = files.groupBy(_.relPath).map {
+      case (rel, Seq(f)) => rel -> f
+      case (rel, _) => throw new IllegalStateException(
+        s"write stats: several tracker entries share the relative path $rel")
+    }
     val statsData = tracked.filterNot(partCols.contains)
     val dataIdx = statsData.zipWithIndex.toMap
     val partIdx = partCols.zipWithIndex.toMap
     val bloomIdx = bloomCols.zipWithIndex.toMap
-    val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
-    for (m <- moved) {
-      val rel = roots.collectFirst {
+    def index(m: Map[String, Int], c: String): Int = m.getOrElse(c,
+      throw new IllegalStateException(
+        s"write stats: manifest column for $c is not tracked by the write"))
+    moved.flatMap { m =>
+      val entry = roots.collectFirst {
         case r if m.startsWith(r) => m.stripPrefix(r)
-      }
-      val entry = rel.flatMap(byRel.get) match {
-        case None => return None // coverage gap — re-scan instead
-        case Some(e) => e
-      }
-      if (entry.nRows > 0L) {
+      }.flatMap(byRel.get).getOrElse(throw new IllegalStateException(
+        s"write stats: the written file $m has no write-task stats"))
+      if (entry.nRows == 0L) None
+      else {
         val st = fs.getFileStatus(new Path(m))
         def partVal(c: String): Any = entry.partValues(partIdx(c))
-        val vals = statsSchema.fields.map { f =>
+        Some(Row.fromSeq(statsSchema.fields.toSeq.map { f =>
           val n = f.name
           // the `_metadata.file_path` form a scan over these statuses
           // serves (WriteStatsParitySpec pins it): single-slash scheme
@@ -1780,37 +1643,23 @@ private[sources] trait StorageWrite { this: DataSkipping.type =>
           else if (n.startsWith("min_")) {
             val c = n.stripPrefix("min_")
             if (partIdx.contains(c)) partVal(c)
-            else dataIdx.get(c) match {
-              case Some(i) => entry.mins(i)
-              case None => return None
-            }
+            else entry.mins(index(dataIdx, c))
           } else if (n.startsWith("max_")) {
             val c = n.stripPrefix("max_")
             if (partIdx.contains(c)) partVal(c)
-            else dataIdx.get(c) match {
-              case Some(i) => entry.maxs(i)
-              case None => return None
-            }
+            else entry.maxs(index(dataIdx, c))
           } else if (n.startsWith("nulls_")) {
             val c = n.stripPrefix("nulls_")
             if (partIdx.contains(c)) {
               if (partVal(c) == null) entry.nRows else 0L
-            } else dataIdx.get(c) match {
-              case Some(i) => entry.nulls(i)
-              case None => return None
-            }
-          } else if (n.startsWith("bloom_")) {
-            val c = n.stripPrefix("bloom_")
-            bloomIdx.get(c) match {
-              case Some(i) => entry.blooms(i).toSeq
-              case None => return None
-            }
-          } else return None // a column the tracker cannot fill (ndv)
-        }
-        rows += Row.fromSeq(vals.toSeq)
+            } else entry.nulls(index(dataIdx, c))
+          } else if (n.startsWith("bloom_"))
+            entry.blooms(index(bloomIdx, n.stripPrefix("bloom_"))).toSeq
+          else throw new IllegalStateException(
+            s"write stats: no write-task value for manifest column $n")
+        }))
       }
     }
-    Some(rows.toSeq)
   }
 
 }

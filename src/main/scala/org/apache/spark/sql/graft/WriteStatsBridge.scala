@@ -72,9 +72,10 @@ private class GraftTaskStatsTracker(
     partTypes: Array[DataType]) extends WriteTaskStatsTracker {
 
   private val nStats = statsChains.length
+  // absent (all-null) columns never compare or convert a value
   private val orderings: Array[Ordering[Any]] =
-    statsChains.map(c =>
-      TypeUtils.getInterpretedOrdering(c.leafType).asInstanceOf[Ordering[Any]])
+    statsChains.map(c => if (c.ords.isEmpty) null
+      else TypeUtils.getInterpretedOrdering(c.leafType).asInstanceOf[Ordering[Any]])
   private val statsConv: Array[Any => Any] =
     statsChains.map(c => CatalystTypeConverters.createToScalaConverter(c.leafType))
   private val partConv: Array[Any => Any] =
@@ -150,6 +151,7 @@ private class GraftTaskStatsTracker(
   private def extract(row: InternalRow, chain: ColChain): Any = {
     var r: InternalRow = row
     val ords = chain.ords
+    if (ords.isEmpty) return null
     var i = 0
     while (i < ords.length - 1) {
       if (r.isNullAt(ords(i))) return null
@@ -261,8 +263,8 @@ object TrackedParquetWrite {
   }
 
   /** No maps/variants anywhere in the extracted value — the
-    * interpreted ordering and the external converters cover
-    * everything else the engine tracks.
+    * interpreted ordering, the interpreted xxhash64 and the external
+    * converters cover everything else the engine tracks.
     */
   private def plainType(dt: DataType): Boolean = dt match {
     case _: MapType => false
@@ -272,42 +274,67 @@ object TrackedParquetWrite {
     case _ => true
   }
 
+  /** A tracked column whose TOP-LEVEL name the frame does not carry —
+    * a schema-evolution batch omitting a stored column: its files hold
+    * no values for it, so it is recorded all-null, exactly as a scan
+    * under the table schema reads it.
+    */
+  private val absentChain = ColChain(Array.empty, Array.empty, NullType)
+
+  /** The type a file-source read serves for bytes written as `dt`:
+    * nullable at every level (struct fields, array elements, map
+    * values) — what `spark.read.parquet` reports for the same bytes,
+    * without the footer job that asks it.
+    */
+  def readTypeOf(dt: DataType): DataType = dt.asNullable
+
   /** Write `df` as parquet under `outPath` through the SAME v1
     * machinery `df.write.parquet` / `.partitionBy(...)` uses, with a
-    * per-file stats tracker riding the write tasks. Returns None —
-    * WITHOUT writing anything — when the stats shape is unsupported
-    * (caller falls back to the plain writer + read-back scan);
-    * Some(per-file stats) after a successful tracked write.
+    * per-file stats tracker riding the write tasks; returns every
+    * written file's stats. A stats shape the tracker cannot serve (a
+    * map or variant stats/bloom column, an unknown partition column, a
+    * nested path that does not resolve, an invalid Bloom geometry) is
+    * refused by name BEFORE any byte is written.
     */
   def write(df: DataFrame, outPath: String, partCols: Seq[String],
       statsDataCols: Seq[String], bloomCols: Seq[String],
-      bloomBits: Int, bloomHashes: Int): Option[Seq[FileWriteStats]] = {
+      bloomBits: Int, bloomHashes: Int): Seq[FileWriteStats] = {
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
     val spark = ds.sparkSession
     val resolver = spark.sessionState.conf.resolver
     val output = ds.queryExecution.analyzed.output
-    val partAttrs: Seq[Attribute] =
-      partCols.flatMap(n => output.find(a => resolver(a.name, n)))
-    if (partAttrs.length != partCols.length) return None
+    val partAttrs: Seq[Attribute] = partCols.map(n =>
+      output.find(a => resolver(a.name, n)).getOrElse(throw
+        new IllegalArgumentException(s"partition column $n is not in " +
+          s"the written frame ${df.schema.simpleString}")))
     // newRow hands the data-only projected row for dynamic-partition
     // writes (the full row when partCols is empty) — ordinals resolve
     // against the output minus the partition columns, order preserved
     val partSet = partAttrs.map(_.exprId).toSet
     val dataSchema = StructType(output.filterNot(a => partSet.contains(a.exprId))
       .map(a => StructField(a.name, a.dataType, a.nullable)))
-    val statsChains = statsDataCols.map(c => chainOf(dataSchema, c, resolver))
-    val bloomChains = bloomCols.map(c => chainOf(dataSchema, c, resolver))
-    val ok = statsChains.forall(_.exists(c =>
-        RowOrdering.isOrderable(c.leafType) && plainType(c.leafType))) &&
-      bloomChains.forall(_.exists(c => plainType(c.leafType) &&
-        !c.leafType.isInstanceOf[StructType] &&
-        !c.leafType.isInstanceOf[ArrayType])) &&
-      partAttrs.forall(a => plainType(a.dataType)) &&
-      (bloomCols.isEmpty || (bloomBits >= 64 && bloomBits % 64 == 0 &&
-        bloomHashes >= 1 && bloomHashes <= 32))
-    if (!ok) return None
+    def resolve(c: String, what: String, ok: DataType => Boolean): ColChain =
+      chainOf(dataSchema, c, resolver) match {
+        case Some(ch) =>
+          require(ok(ch.leafType), s"$what column $c has type " +
+            s"${ch.leafType.simpleString}, which per-file write stats " +
+            "cannot serve (maps and variants have no order or hash)")
+          ch
+        case None =>
+          require(!dataSchema.exists(f => resolver(f.name, c.split('.').head)),
+            s"$what column $c does not resolve to a struct path in " +
+              dataSchema.simpleString)
+          absentChain
+      }
+    val statsChains = statsDataCols.map(c => resolve(c, "stats",
+      t => RowOrdering.isOrderable(t) && plainType(t)))
+    val bloomChains = bloomCols.map(c => resolve(c, "bloom", plainType))
+    require(bloomCols.isEmpty || (bloomBits >= 64 && bloomBits % 64 == 0 &&
+        bloomHashes >= 1 && bloomHashes <= 32),
+      s"bloom geometry $bloomBits bits / $bloomHashes hashes: bits must be " +
+        "a positive multiple of 64 and hashes within [1, 32]")
     val tracker = new GraftWriteStatsTracker(
-      statsChains.map(_.get).toArray, bloomChains.map(_.get).toArray,
+      statsChains.toArray, bloomChains.toArray,
       bloomBits, bloomHashes, partAttrs.map(_.dataType).toArray)
     val hadoopConf = spark.sessionState.newHadoopConf()
     val committer = FileCommitProtocol.instantiate(
@@ -328,6 +355,6 @@ object TrackedParquetWrite {
         statsTrackers = Seq(tracker),
         options = Map.empty)
     }
-    Some(tracker.results)
+    tracker.results
   }
 }

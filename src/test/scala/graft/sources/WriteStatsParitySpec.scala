@@ -66,38 +66,58 @@ class WriteStatsParitySpec extends SparkSpec {
       .repartition(2, col("i"))
   }
 
-  test("flat tracked write: stats rows byte-match the statsFor re-scan") {
-    val path = tmpDir("wsp-flat")
+  /** Stage `data` through the tracked write, move it in, and check its
+    * assembled rows — and [[DataSkipping.manifestSchemaFor]] — against
+    * the `statsFor` aggregate over a scan of the same files.
+    */
+  private def assertTrackedParity(path: String, data: DataFrame,
+      partCols: Seq[String], statsCols: Seq[String],
+      bloom: Option[(Seq[String], Int, Int)],
+      tableSchema: Option[StructType] = None)
+      : (Seq[String], Seq[org.apache.spark.sql.graft.FileWriteStats]) = {
     val fs = fsOf(path)
-    val data = df(spark)
-    val statsCols = Seq("i", "l", "d", "s", "dt", "ts", "dec", "meta.b")
-    val bloom = Some((Seq("s", "i"), 256, 5))
     val staging = new Path(path, ".append-test")
-    val tracked = DataSkipping.stagedWriteTracked(data, staging, Nil,
+    val tracked = DataSkipping.stagedWriteTracked(data, staging, partCols,
       statsCols, bloom)
-    assert(tracked.isDefined, "tracked write should engage on plain types")
-    val moved = DataSkipping.moveIn(fs, staging, new Path(path))
+    val moved =
+      if (partCols.isEmpty) DataSkipping.moveIn(fs, staging, new Path(path))
+      else DataSkipping.moveInPartitioned(fs, staging, new Path(path))
     assert(moved.nonEmpty)
+    val schema = tableSchema.getOrElse(
+      DataSkipping.writtenTableSchema(data.schema, partCols))
     val frame = DataSkipping.statsFor(
-      DataSkipping.statusScan(spark, path,
-        StructType(data.schema.map(_.copy(nullable = true))),
+      DataSkipping.partAwareStatusScanCols(spark, path, partCols, schema,
         DataSkipping.statusesFor(fs, moved)),
       statsCols, bloom = bloom)
+    val ms = DataSkipping.manifestSchemaFor(schema, statsCols, partCols,
+      bloom.map(_._1).getOrElse(Nil))
+    assert(ms == frame.schema)
     val local = DataSkipping.statsRowsFromWrite(fs, path, moved, statsCols,
-      Nil, bloom.get._1, tracked.get, frame.schema)
-    assert(local.isDefined, "assembly must cover every moved file")
-    assertRowsMatch(frame.collect().toSeq, local.get, frame.schema)
-    // two tracker entries under one relative path: ambiguous, so the
-    // assembly declines and the caller re-scans
-    val collided = tracked.get :+ tracked.get.head
-    assert(DataSkipping.statsRowsFromWrite(fs, path, moved, statsCols, Nil,
-      bloom.get._1, collided, frame.schema).isEmpty)
+      partCols, bloom.map(_._1).getOrElse(Nil), tracked, ms)
+    assertRowsMatch(frame.collect().toSeq, local, frame.schema)
+    (moved, tracked)
+  }
+
+  test("flat tracked write: stats rows byte-match the statsFor re-scan") {
+    val path = tmpDir("wsp-flat")
+    val statsCols = Seq("i", "l", "d", "s", "dt", "ts", "dec", "meta.b")
+    val bloom = Some((Seq("s", "i"), 256, 5))
+    val (moved, tracked) =
+      assertTrackedParity(path, df(spark), Nil, statsCols, bloom)
+    // two tracker entries under one relative path are a fault of the
+    // write: the assembly throws instead of guessing
+    val collided = tracked :+ tracked.head
+    val e = intercept[IllegalStateException](DataSkipping.statsRowsFromWrite(
+      fsOf(path), path, moved, statsCols, Nil, bloom.get._1, collided,
+      DataSkipping.manifestSchemaFor(
+        DataSkipping.writtenTableSchema(df(spark).schema, Nil), statsCols,
+        Nil, bloom.get._1)))
+    assert(e.getMessage.contains(tracked.head.relPath))
   }
 
   test("partitioned tracked write: partition values, empty-string null " +
       "routing and per-dir stats match the part-aware re-scan") {
     val path = tmpDir("wsp-part")
-    val fs = fsOf(path)
     import spark.implicits._
     val data = Seq(
       ("us east", 1, 10L, "a"),
@@ -107,38 +127,96 @@ class WriteStatsParitySpec extends SparkSpec {
       ("eu", 1, 0L, "d")
     ).toDF("region", "bucket", "v", "tag")
     val partCols = Seq("region", "bucket")
-    val statsCols = Seq("v", "tag") ++ partCols
-    val bloom = Some((Seq("tag"), 128, 3))
-    val staging = new Path(path, ".append-test")
-    val tracked = DataSkipping.stagedWriteTracked(data, staging, partCols,
-      statsCols, bloom)
-    assert(tracked.isDefined)
-    val moved = DataSkipping.moveInPartitioned(fs, staging, new Path(path))
-    assert(moved.nonEmpty)
-    val schema = StructType(
-      (data.schema.filterNot(f => partCols.contains(f.name)) ++
-        partCols.map(c => data.schema(data.schema.fieldIndex(c))))
-        .map(_.copy(nullable = true)))
-    val frame = DataSkipping.statsFor(
-      DataSkipping.partAwareStatusScanCols(spark, path, partCols, schema,
-        DataSkipping.statusesFor(fs, moved)),
-      statsCols, bloom = bloom)
-    val local = DataSkipping.statsRowsFromWrite(fs, path, moved, statsCols,
-      partCols, bloom.get._1, tracked.get, frame.schema)
-    assert(local.isDefined)
-    assertRowsMatch(frame.collect().toSeq, local.get, frame.schema)
+    assertTrackedParity(path, data, partCols, Seq("v", "tag") ++ partCols,
+      Some((Seq("tag"), 128, 3)))
   }
 
-  test("unsupported stats shape falls back to the plain writer") {
-    val path = tmpDir("wsp-fallback")
+  test("bloom over struct and array columns: tracker words match " +
+      "graft_bloom_agg over xxhash64") {
+    import spark.implicits._
+    val data = Seq(
+      (1, Some((1, "a")), Seq(1L, 2L)),
+      (2, Some((2, null.asInstanceOf[String])), Seq.empty[Long]),
+      (3, None, null.asInstanceOf[Seq[Long]]),
+      (4, Some((4, "dd")), Seq(4L, -4L, 0L))
+    ).toDF("i", "st", "arr").repartition(2, col("i"))
+    assertTrackedParity(tmpDir("wsp-bloom-struct"), data, Nil, Seq("i"),
+      Some((Seq("st"), 256, 4)))
+    assertTrackedParity(tmpDir("wsp-bloom-array"), data, Nil, Seq("i"),
+      Some((Seq("arr"), 256, 4)))
+  }
+
+  test("a tracked column the batch omits is recorded all-null, as the " +
+      "table-schema scan reads it") {
+    import spark.implicits._
+    val data = Seq((1, "a"), (2, null.asInstanceOf[String]), (3, "c"))
+      .toDF("i", "s").repartition(2, col("i"))
+    val table = DataSkipping.writtenTableSchema(
+      StructType(data.schema.fields :+ StructField("gone", LongType)), Nil)
+    assertTrackedParity(tmpDir("wsp-absent"), data, Nil, Seq("i", "gone"),
+      Some((Seq("gone", "s"), 128, 3)), Some(table))
+  }
+
+  test("manifestSchemaFor equals the statsFor aggregate's schema") {
+    val data = df(spark)
+    val path = tmpDir("wsp-schema")
+    data.write.mode("overwrite").parquet(path)
+    val fs = fsOf(path)
+    val files = fs.listStatus(new Path(path)).map(_.getPath.toString)
+      .filter(_.endsWith(".parquet")).toSeq
+    def check(partCols: Seq[String], tracked: Seq[String],
+        bloom: Option[(Seq[String], Int, Int)]): Unit = {
+      val schema = DataSkipping.writtenTableSchema(data.schema, partCols)
+      val scan = DataSkipping.statusScan(spark, path, schema,
+        DataSkipping.statusesFor(fs, files))
+      assert(DataSkipping.manifestSchemaFor(schema, tracked, partCols,
+          bloom.map(_._1).getOrElse(Nil)) ==
+        DataSkipping.statsFor(scan, tracked, bloom).schema,
+        s"tracked=$tracked partCols=$partCols bloom=$bloom")
+    }
+    check(Nil, Seq("i", "l", "d", "s", "dt", "ts", "dec"), None)
+    check(Seq("dt"), Seq("i", "s", "dt"), None)
+    check(Nil, Seq("meta.b", "meta", "dec"), None)
+    check(Nil, Seq("i"), Some((Seq("s", "meta", "i"), 128, 3)))
+  }
+
+  test("unsupported stats shape is refused before any byte is written") {
+    val path = tmpDir("wsp-refused")
     import spark.implicits._
     val data = Seq((1, Map("k" -> 1))).toDF("i", "m")
     val staging = new Path(path, ".append-test")
-    val tracked = DataSkipping.stagedWriteTracked(data, staging, Nil,
-      Seq("i", "m"), None)
-    assert(tracked.isEmpty, "map-typed stats col must fall back")
-    val fs = fsOf(path)
-    val moved = DataSkipping.moveIn(fs, staging, new Path(path))
-    assert(moved.nonEmpty, "fallback still writes the data")
+    val e = intercept[IllegalArgumentException](
+      DataSkipping.stagedWriteTracked(data, staging, Nil, Seq("i", "m"), None))
+    assert(e.getMessage.contains("column m"), e.getMessage)
+    assert(fsOf(path).listStatus(new Path(path)).isEmpty,
+      "the refusal must come before the write job")
+  }
+
+  test("the table-schema sidecar is what a parquet read of the table " +
+      "serves, on flat and partitioned layouts, and the frame appends") {
+    import spark.implicits._
+    val data = Seq((1, "a", BigDecimal("1.25"), "2024-01-02",
+        "2024-01-02 03:04:05"))
+      .toDF("id", "p", "dec", "dts", "tss")
+      .select(col("id"), col("p"),
+        struct(lit(1).as("x"), lit("y").as("y")).as("nested"),
+        col("dec").cast("decimal(9,2)").as("dec"),
+        to_date(col("dts")).as("dt"), to_timestamp(col("tss")).as("ts"),
+        to_timestamp_ntz(col("tss")).as("ntz"))
+    assert(data.schema("nested").dataType.asInstanceOf[StructType]
+      .forall(!_.nullable), "the fixture needs a non-null nested field")
+    for (partitionBy <- Seq(Nil, Seq("p"))) {
+      val path = tmpDir("wsp-sidecar")
+      DataSkipping.writeWithStats(data, path, Seq("id"), Nil,
+        partitionBy = partitionBy)
+      val sidecar = DataSkipping.tableSchema(spark, path)
+      val read = spark.read.parquet(path).schema
+      val dataCols = data.columns.filterNot(partitionBy.contains)
+      assert(dataCols.map(sidecar(_)).toSeq == dataCols.map(read(_)).toSeq,
+        s"partitionBy=$partitionBy")
+      // the frame's stricter nested nullability still appends
+      assert(DataSkipping.appendWithStats(data, path, Seq("id")))
+      assert(DataSkipping.readSkipping(spark, path, lit(true)).count() == 2)
+    }
   }
 }
